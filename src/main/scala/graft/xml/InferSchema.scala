@@ -18,17 +18,28 @@ import org.apache.spark.sql.types._
  * (reference: src/main/scala/com/databricks/spark/xml/util/InferSchema.scala:67-332):
  * leaves infer as Boolean/Long/Double/Timestamp/Date/String, repeated sibling
  * elements widen to arrays, structs merge field-wise, `NullType` canonicalizes
- * to String, inferred struct fields are name-sorted. The merge runs as a
- * `treeAggregate` rather than a driver-side fold so that 100k+-partition
- * inputs do not serialize every partial schema to one node.
+ * to String, inferred struct fields are name-sorted.
+ *
+ * The merge is one `SparkContext.runJob`, as in Spark's own `XmlInferSchema`
+ * and `JsonInferSchema`: each task folds its partition to one type and the
+ * driver merges each task's type as it arrives. A `treeAggregate` adds a
+ * shuffle stage once there are more than a few partitions, and this job has
+ * none; the driver holds one merged schema, not one per partition. The
+ * lattice merge is commutative and the result canonicalized, so task
+ * completion order does not change the result (InferSchemaSuite checks 1,
+ * 8 and 64 partitions and a shuffled order). One edge is not associative:
+ * an element that holds children in some records, a bare scalar in others
+ * and an attributed scalar in others. Its type already depended on the
+ * partitioning under `treeAggregate`.
  *
  * Performance contract: leaf type probes are EXCEPTION-FREE for
- * non-matching values ([[TypeCast.isLong]]/`isDouble`/`isTimestamp`/
- * `isDate` reject by scanning) — a string-heavy corpus must never pay an
- * exception per probe (measured 6.2 → 1.07 s on a 600k-record corpus when
- * the storm was removed; `schema_of_xml` and `samplingRatio` inference
- * inherit the same path). Pinned by TypeCastSuite's budget spec, which
- * fails if exception-driven rejection creeps back into the predicates.
+ * non-matching values ([[TypeCast.isLong]]/`isDouble` reject by scanning,
+ * `isTimestamp`/`isDate` by a `yyyy-` head gate and then non-throwing
+ * unresolved parses) — a corpus must never pay an exception per probe
+ * (measured 6.2 → 1.07 s on a 600k-record string corpus when the storm was
+ * removed; `schema_of_xml` and `samplingRatio` inference inherit the same
+ * path). Pinned by TypeCastSuite's budget specs, which fail if
+ * exception-driven rejection creeps back into the predicates.
  */
 private[graft] object InferSchema {
 
@@ -44,52 +55,59 @@ private[graft] object InferSchema {
     val target = sampled.sparkContext.defaultParallelism
     val spread =
       if (sampled.getNumPartitions < target) sampled.repartition(target) else sampled
-    val zero: DataType = NullType
-    val merged = spread
-      .mapPartitions { iter =>
-        val validator = options.rowValidationXSDPath.map(ValidatorUtil.forPath)
-        // Shape dedup: `compatibleType` is idempotent (merge(a, a) == a), so
-        // each DISTINCT record shape needs to reach the lattice merge only
-        // once per partition. Real corpora have a handful of shapes across
-        // millions of records; the merge allocates (LinkedHashMap + new
-        // StructType per step) while the set probe just hashes (StructType
-        // caches its hashCode). Keeps per-record merge cost O(1) regardless
-        // of schema width — the flat-corpus time is dominated by the leaf
-        // probes (see TypeCast's exception-free predicates), but a
-        // 1000-field schema merged per record would dominate without this.
-        // The set is CAPPED: k optional fields can produce up to 2^k
-        // distinct record shapes, so an unbounded set could hold
-        // combinatorially more than the merged schema. Past the cap, known
-        // shapes still dedup and novel ones flow straight to the merge —
-        // memory stays O(cap × shape), correctness is unaffected either way.
-        val maxTrackedShapes = 4096
-        val seen = mutable.HashSet.empty[DataType]
-        iter.flatMap { record =>
-          try {
-            validator.foreach(ValidatorUtil.validate(_, record))
-            Some(inferRecord(record, options))
-          } catch {
-            case NonFatal(_) =>
-              options.parseMode match {
-                case ParseMode.FailFast =>
-                  throw new IllegalArgumentException(s"Malformed record during inference: $record")
-                case _ => None
-              }
-          }
-        }.filter { dt =>
-          if (seen.contains(dt)) false
-          else {
-            if (seen.size < maxTrackedShapes) seen.add(dt)
-            true
-          }
-        }
-      }
-      .treeAggregate(zero)(compatibleType(options), compatibleType(options))
+    val merge = compatibleType(options) _
+    var merged: DataType = NullType
+    // The result handler runs on the driver, one task result at a time.
+    spread.sparkContext.runJob(spread,
+      (records: Iterator[String]) => inferPartition(records, options),
+      (_: Int, partial: DataType) => merged = merge(merged, partial))
 
     canonicalize(merged, options) match {
       case st: StructType => st
       case _ => StructType(Nil)
     }
+  }
+
+  /** One partition's records merged to one type. */
+  private def inferPartition(records: Iterator[String], options: XmlOptions): DataType = {
+    val validator = options.rowValidationXSDPath.map(ValidatorUtil.forPath)
+    // Shape dedup: `compatibleType` is idempotent (merge(a, a) == a), so
+    // each DISTINCT record shape needs to reach the lattice merge only
+    // once per partition. Real corpora have a handful of shapes across
+    // millions of records; the merge allocates (LinkedHashMap + new
+    // StructType per step) while the set probe just hashes (StructType
+    // caches its hashCode). Keeps per-record merge cost O(1) regardless
+    // of schema width — the flat-corpus time is dominated by the leaf
+    // probes (see TypeCast's exception-free predicates), but a
+    // 1000-field schema merged per record would dominate without this.
+    // The set is CAPPED: k optional fields can produce up to 2^k
+    // distinct record shapes, so an unbounded set could hold
+    // combinatorially more than the merged schema. Past the cap, known
+    // shapes still dedup and novel ones flow straight to the merge —
+    // memory stays O(cap × shape), correctness is unaffected either way.
+    val maxTrackedShapes = 4096
+    val seen = mutable.HashSet.empty[DataType]
+    val merge = compatibleType(options) _
+    var merged: DataType = NullType
+    records.foreach { record =>
+      val shape =
+        try {
+          validator.foreach(ValidatorUtil.validate(_, record))
+          inferRecord(record, options)
+        } catch {
+          case NonFatal(_) =>
+            options.parseMode match {
+              case ParseMode.FailFast =>
+                throw new IllegalArgumentException(s"Malformed record during inference: $record")
+              case _ => null
+            }
+        }
+      if (shape != null && !seen.contains(shape)) {
+        if (seen.size < maxTrackedShapes) seen.add(shape)
+        merged = merge(merged, shape)
+      }
+    }
+    merged
   }
 
   def inferRecord(record: String, options: XmlOptions): DataType = {

@@ -97,7 +97,7 @@ private[graft] object TypeCast {
     case other => throw new IllegalArgumentException(s"For input string: '$other'")
   }
 
-  // ISO-ish timestamp formats accepted out of the box, tried in order.
+  // ISO-ish timestamp formats accepted out of the box.
   private val builtInTimestampFormats: Seq[DateTimeFormatter] = Seq(
     DateTimeFormatter.ISO_INSTANT,
     DateTimeFormatter.ISO_OFFSET_DATE_TIME,
@@ -113,50 +113,63 @@ private[graft] object TypeCast {
       .toFormatter
   )
 
-  /** Index of the last built-in format that parsed successfully. A corpus
-   *  uses one timestamp shape in practice; starting each parse at the format
-   *  that worked last turns "N-1 thrown-and-caught exceptions per value"
-   *  into zero after the first row. Safe to share racily across tasks (any
-   *  stale value only costs extra attempts), and safe for correctness: the
-   *  built-in formats are mutually exclusive except ISO_INSTANT/ISO_OFFSET
-   *  on `...Z` values, where both yield the same instant. */
+  /** Index of the last built-in format that matched. A corpus uses one
+   *  timestamp shape in practice; starting at the format that worked last
+   *  saves the other formats' attempts after the first row (a thrown
+   *  exception each in a cast, an unresolved parse each in a probe). Safe to share racily across tasks (any stale value only
+   *  costs extra attempts), and safe for correctness: the built-in formats
+   *  are mutually exclusive except ISO_INSTANT/ISO_OFFSET on `...Z` values,
+   *  where both yield the same instant. */
   private val lastHitTimestampFormat = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private[xml] def parseXmlTimestamp(value: String, options: XmlOptions): Timestamp = {
-    def fromInstant(i: Instant): Timestamp = Timestamp.from(i)
-    val zone = options.timezone.map(ZoneId.of).getOrElse(ZoneOffset.UTC)
+  /** Whether `fmt` matches all of `value`. `parseUnresolved` reports a
+   *  mismatch through the position instead of throwing, and `parse` fails
+   *  whenever this does, so gating `parse` on it changes no decision; it
+   *  only stops non-matching values from paying a thrown exception. */
+  private def fitsWhole(fmt: DateTimeFormatter, value: String): Boolean = {
+    val pos = new ParsePosition(0)
+    fmt.parseUnresolved(value, pos) != null && pos.getErrorIndex < 0 &&
+      pos.getIndex == value.length
+  }
 
+  /** `value` under `fmt` as a timestamp, or null. With `gate`, a value that
+   *  does not fit `fmt` is turned away by [[fitsWhole]] instead of by a
+   *  thrown exception: for probes, which mostly miss. Casts mostly hit and
+   *  skip it, since a match then costs a second parse. A full match can
+   *  still fail to resolve (30 February), which the caught `parse` rejects. */
+  private def timestampOrNull(
+      fmt: DateTimeFormatter, value: String, zone: ZoneId, gate: Boolean): Timestamp =
+    allCatch.opt {
+      if (gate && !fitsWhole(fmt, value)) null
+      else {
+        val parsed = fmt.parse(value)
+        if (parsed.isSupported(ChronoField.OFFSET_SECONDS)) Timestamp.from(Instant.from(parsed))
+        else Timestamp.from(LocalDateTime.from(parsed).atZone(zone).toInstant)
+      }
+    }.orNull
+
+  /** The built-in formats, then the user `timestampFormat`; null if none
+   *  matches. Throws only for an invalid `timezone` or `timestampFormat`. */
+  private def xmlTimestampOrNull(value: String, options: XmlOptions, gate: Boolean): Timestamp = {
+    val zone = options.timezone.map(ZoneId.of).getOrElse(ZoneOffset.UTC)
     val n = builtInTimestampFormats.length
     val start = lastHitTimestampFormat.get()
-    var builtIn: Option[Timestamp] = None
+    var ts: Timestamp = null
     var i = 0
-    while (i < n && builtIn.isEmpty) {
+    while (i < n && ts == null) {
       val idx = (start + i) % n
-      builtIn = allCatch.opt {
-        val parsed = builtInTimestampFormats(idx).parse(value)
-        if (parsed.isSupported(ChronoField.OFFSET_SECONDS)) {
-          fromInstant(Instant.from(parsed))
-        } else {
-          fromInstant(LocalDateTime.from(parsed).atZone(zone).toInstant)
-        }
-      }
-      if (builtIn.isDefined && idx != start) lastHitTimestampFormat.lazySet(idx)
+      ts = timestampOrNull(builtInTimestampFormats(idx), value, zone, gate)
+      if (ts != null && idx != start) lastHitTimestampFormat.lazySet(idx)
       i += 1
     }
+    if (ts != null) ts
+    else options.timestampFormatter.map(timestampOrNull(_, value, zone, gate)).orNull
+  }
 
-    builtIn.orElse {
-      options.timestampFormat.flatMap { pattern =>
-        val fmt = DateTimeFormatter.ofPattern(pattern, Locale.US)
-        allCatch.opt {
-          val parsed = fmt.parse(value)
-          if (parsed.isSupported(ChronoField.OFFSET_SECONDS)) {
-            fromInstant(Instant.from(parsed))
-          } else {
-            fromInstant(LocalDateTime.from(parsed).atZone(zone).toInstant)
-          }
-        }
-      }
-    }.getOrElse(throw new IllegalArgumentException(s"cannot parse timestamp: '$value'"))
+  private[xml] def parseXmlTimestamp(value: String, options: XmlOptions): Timestamp = {
+    val ts = xmlTimestampOrNull(value, options, gate = false)
+    if (ts == null) throw new IllegalArgumentException(s"cannot parse timestamp: '$value'")
+    ts
   }
 
   /** Zone-less timestamps (TIMESTAMP_NTZ): ISO local date-time or `yyyy-MM-dd HH:mm:ss[.S]`. */
@@ -170,14 +183,24 @@ private[graft] object TypeCast {
       .getOrElse(throw new IllegalArgumentException(s"cannot parse local timestamp: '$value'"))
   }
 
+  /** As [[timestampOrNull]], for dates. */
+  private def localDateOrNull(fmt: DateTimeFormatter, value: String, gate: Boolean): LocalDate =
+    allCatch.opt {
+      if (gate && !fitsWhole(fmt, value)) null else LocalDate.parse(value, fmt)
+    }.orNull
+
+  /** ISO, then the user `dateFormat`; null if neither matches (an invalid
+   *  `dateFormat` matches nothing). */
+  private def xmlDateOrNull(value: String, options: XmlOptions, gate: Boolean): LocalDate = {
+    val iso = localDateOrNull(DateTimeFormatter.ISO_DATE, value, gate)
+    if (iso != null) iso
+    else allCatch.opt(options.dateFormatter).flatten.map(localDateOrNull(_, value, gate)).orNull
+  }
+
   private[xml] def parseXmlDate(value: String, options: XmlOptions): Date = {
-    val iso = allCatch.opt(LocalDate.parse(value, DateTimeFormatter.ISO_DATE))
-    iso.orElse {
-      options.dateFormat.flatMap { pattern =>
-        allCatch.opt(LocalDate.parse(value, DateTimeFormatter.ofPattern(pattern, Locale.US)))
-      }
-    }.map(Date.valueOf)
-      .getOrElse(throw new IllegalArgumentException(s"cannot parse date: '$value'"))
+    val d = xmlDateOrNull(value, options, gate = false)
+    if (d == null) throw new IllegalArgumentException(s"cannot parse date: '$value'")
+    Date.valueOf(d)
   }
 
   // ---- inference predicates (used by InferSchema) ----
@@ -207,13 +230,43 @@ private[graft] object TypeCast {
     }
   }
 
-  def isDouble(value: String): Boolean = {
-    val v = if (value.startsWith("+")) value.substring(1) else value
-    // Reject Java-isms the XML data model shouldn't infer as numbers, and
-    // digit-less fragments ("-", ".", "/"), before attempting a parse.
-    v.nonEmpty && !v.exists(c => c.isLetter && c != 'E' && c != 'e') &&
-      v.exists(_.isDigit) && allCatch.opt(v.toDouble).isDefined
+  /** `Double.parseDouble`'s decimal grammar minus its letters (`NaN`,
+   *  `Infinity`, hex, `f`/`d` suffixes), which the XML data model does not
+   *  infer as numbers: `[ws][+-]?(d+[.d*]|.d+)([eE][+-]?d+)?[ws]`, where
+   *  `ws` is any char <= U+0020 (what `parseDouble` trims). Scans; never
+   *  throws. */
+  private def looksDecimal(v: String): Boolean = {
+    val len = v.length
+    var i = 0
+    while (i < len && v.charAt(i) <= ' ') i += 1
+    if (i < len && (v.charAt(i) == '+' || v.charAt(i) == '-')) i += 1
+    val intStart = i
+    while (i < len && isAsciiDigit(v.charAt(i))) i += 1
+    var digits = i - intStart
+    if (i < len && v.charAt(i) == '.') {
+      i += 1
+      val fracStart = i
+      while (i < len && isAsciiDigit(v.charAt(i))) i += 1
+      digits += i - fracStart
+    }
+    if (digits == 0) return false
+    if (i < len && (v.charAt(i) == 'e' || v.charAt(i) == 'E')) {
+      i += 1
+      if (i < len && (v.charAt(i) == '+' || v.charAt(i) == '-')) i += 1
+      val expStart = i
+      while (i < len && isAsciiDigit(v.charAt(i))) i += 1
+      if (i == expStart) return false
+    }
+    while (i < len && v.charAt(i) <= ' ') i += 1
+    i == len
   }
+
+  private def isAsciiDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  // The scan is a necessary condition only; `toDouble` (which accepts one
+  // leading sign itself) has the last word, as in `castTo`.
+  def isDouble(value: String): Boolean =
+    looksDecimal(value) && allCatch.opt(value.toDouble).isDefined
 
   /** The ISO-family built-in formats (instant/offset/local, `yyyy-MM-dd
    *  [HH:mm:ss]`) all start with a year — optionally `+`/`-`-signed, 4 or
@@ -245,9 +298,9 @@ private[graft] object TypeCast {
   def isTimestamp(value: String, options: XmlOptions): Boolean =
     (maybeIsoTemporal(value) || maybeRfc1123(value) ||
       options.timestampFormat.isDefined) &&
-      allCatch.opt(parseXmlTimestamp(value, options)).isDefined
+      allCatch.opt(xmlTimestampOrNull(value, options, gate = true)).exists(_ != null)
 
   def isDate(value: String, options: XmlOptions): Boolean =
     (maybeIsoTemporal(value) || options.dateFormat.isDefined) &&
-      allCatch.opt(parseXmlDate(value, options)).isDefined
+      xmlDateOrNull(value, options, gate = true) != null
 }

@@ -1,6 +1,8 @@
 package graft.xml
 
 import java.nio.charset.StandardCharsets
+import java.time.format.DateTimeFormatter
+import java.util.Locale
 
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 
@@ -49,6 +51,14 @@ class XmlOptions(@transient private val raw: Map[String, String]) extends Serial
   val timestampFormat: Option[String] = get("timestampFormat")
   val dateFormat: Option[String] = get("dateFormat")
   val timezone: Option[String] = get("timezone")
+  // The two patterns compiled once per instance, which deserializes once
+  // per task: `DateTimeFormatter` is immutable and thread-safe but not
+  // `Serializable`. An invalid pattern throws on each use, as it did when
+  // compiled per value.
+  @transient lazy val timestampFormatter: Option[DateTimeFormatter] =
+    timestampFormat.map(DateTimeFormatter.ofPattern(_, Locale.US))
+  @transient lazy val dateFormatter: Option[DateTimeFormatter] =
+    dateFormat.map(DateTimeFormatter.ofPattern(_, Locale.US))
   /**
    * Raw-record substring pre-filtering for pushed-down string predicates
    * (skip the whole StAX parse when a record cannot match). Sound for any

@@ -1,8 +1,17 @@
 package graft.xml
 
 import java.sql.{Date, Timestamp}
+import java.time.{Instant, LocalDate, LocalDateTime, ZoneId, ZoneOffset}
+import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder}
+import java.time.temporal.ChronoField
+import java.util.Locale
+
+import scala.util.control.Exception.allCatch
 
 import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 class TypeCastSuite extends AnyFunSuite {
@@ -81,6 +90,13 @@ class TypeCastSuite extends AnyFunSuite {
     // digit-less fragments reject without a parse attempt
     assert(!TypeCast.isDouble("-") && !TypeCast.isDouble(".") && !TypeCast.isDouble("e"))
     assert(TypeCast.isDouble("-.5") && TypeCast.isDouble("1e5"))
+    // one sign only, as castTo(DoubleType) accepts; padding as toDouble trims
+    for (v <- Seq("++1", "+-5", "-+5", "+ 1", "--1")) {
+      assert(!TypeCast.isDouble(v), v)
+      intercept[NumberFormatException] { TypeCast.castTo(v, DoubleType, opts) }
+    }
+    assert(TypeCast.isDouble("+1.5") && TypeCast.isDouble(" -2e3 ") && TypeCast.isDouble("5."))
+    assert(!TypeCast.isDouble("1e") && !TypeCast.isDouble("1,234") && !TypeCast.isDouble("NaN"))
     // the structural yyyy- gate does not lose signed years or space format
     assert(TypeCast.isTimestamp("2020-01-01 10:15:30", opts))
     assert(!TypeCast.isTimestamp("N", opts) && !TypeCast.isTimestamp("10:15:30", opts))
@@ -109,7 +125,6 @@ class TypeCastSuite extends AnyFunSuite {
     // host speed and JIT state cancel out. If exception-driven rejection
     // sneaks back into the predicates, the two sides converge and the 4x
     // margin fails. (Both sides warm up first; min-of-3 discards pauses.)
-    import scala.util.control.Exception.allCatch
     val corpus: Array[String] = Array.tabulate(20000) { i =>
       (i % 5) match {
         case 0 => s"word soup value number $i"
@@ -119,6 +134,34 @@ class TypeCastSuite extends AnyFunSuite {
         case _ => "NULL"
       }
     }
+    assertProbesBeat(corpus) { v =>
+      allCatch.opt(TypeCast.parseXmlTimestamp(v, opts))
+      allCatch.opt(TypeCast.parseXmlDate(v, opts))
+    }
+  }
+
+  test("probe cost stays far below parse-attempt cost on dates and numbers (budget)") {
+    // The temporal probes must reject by an unresolved parse, which reports
+    // a mismatch by position, and isDouble by a scan: ISO dates pass the
+    // yyyy- gate and used to throw once per built-in timestamp format.
+    // Same relative gate as above, against the old blind parse attempts
+    // (the test-local `OldProbes`).
+    val corpus: Array[String] = Array.tabulate(20000) { i =>
+      val d = 1 + i % 28
+      (i % 5) match {
+        case 0 => f"1997-08-$d%02d"
+        case 1 => f"1997-08-$d%02d and then some"
+        case 2 => f"$d%02d-989-741-${i % 10000}%04d"
+        case 3 => f"${i % 10},${i % 1000}%03d"
+        case _ => f"1997/08/$d%02d"
+      }
+    }
+    assertProbesBeat(corpus) { v => OldProbes.timestamp(v, opts); OldProbes.date(v, opts) }
+  }
+
+  /** The budget gate: all five probes over `corpus` must cost under a
+   *  quarter of `stormReference` over it, timed in this JVM. */
+  private def assertProbesBeat(corpus: Array[String])(stormReference: String => Unit): Unit = {
     def timeNs(f: => Unit): Long = {
       val t0 = System.nanoTime(); f; System.nanoTime() - t0
     }
@@ -126,16 +169,147 @@ class TypeCastSuite extends AnyFunSuite {
       TypeCast.isBoolean(v); TypeCast.isLong(v); TypeCast.isDouble(v)
       TypeCast.isTimestamp(v, opts); TypeCast.isDate(v, opts)
     }
-    def stormReference(): Unit = corpus.foreach { v =>
-      allCatch.opt(TypeCast.parseXmlTimestamp(v, opts))
-      allCatch.opt(TypeCast.parseXmlDate(v, opts))
-    }
-    probes(); stormReference() // JIT warmup for both sides
+    def reference(): Unit = corpus.foreach(stormReference)
+    probes(); reference() // JIT warmup for both sides
     val probeNs = (1 to 3).map(_ => timeNs(probes())).min
-    val stormNs = (1 to 3).map(_ => timeNs(stormReference())).min
+    val stormNs = (1 to 3).map(_ => timeNs(reference())).min
     assert(probeNs * 4 < stormNs,
       f"probe pass ${probeNs / 1e6}%.1f ms is not well under the " +
         f"exception-storm reference ${stormNs / 1e6}%.1f ms — " +
         "exception-driven rejection has crept back into the predicates")
+  }
+
+  test("gated probes decide exactly as the old parse-attempt control flow (property)") {
+    def d2(lo: Int, hi: Int): Gen[String] = Gen.choose(lo, hi).map(i => f"$i%02d")
+    val year = Gen.oneOf(Gen.choose(1000, 9999).map(_.toString),
+      Gen.choose(0, 999).map(y => f"$y%04d"), Gen.oneOf("-0044", "+10000", "10000", "99"))
+    val date = for (y <- year; m <- d2(0, 13); d <- d2(0, 32)) yield s"$y-$m-$d"
+    val time = for (h <- d2(0, 25); mi <- d2(0, 60); sec <- d2(0, 61)) yield s"$h:$mi:$sec"
+    val frac = Gen.oneOf("", ".1", ".123", ".123456789", ".1234567890", ".")
+    val iso = for {
+      dt <- date; sep <- Gen.oneOf("T", " ", "t"); t <- time; f <- frac
+      zone <- Gen.oneOf("", "Z", "+02:00", "-05:30", "+2", "[UTC]", "+02:00[Europe/Paris]")
+    } yield s"$dt$sep$t$f$zone"
+    val dateWithZone = for (dt <- date; z <- Gen.oneOf("", "Z", "+01:00")) yield dt + z
+    val rfc1123 = for {
+      dow <- Gen.oneOf("Mon, ", "Tue, ", "", "Xyz, ", "mon, ")
+      d <- Gen.choose(0, 32); mon <- Gen.oneOf("Jan", "Jun", "Dec", "Foo", "jun")
+      y <- Gen.oneOf("2008", "1999", "08"); t <- time
+      zone <- Gen.oneOf("GMT", "+0200", "-0000", "UT", "")
+    } yield s"$dow$d $mon $y $t $zone"
+    val number = for {
+      pad <- Gen.oneOf("", " ", "\t", "\n ", "\u0000")
+      sign <- Gen.oneOf("", "+", "-", "++", "+-", "- ")
+      int <- Gen.oneOf("", "0", "12", "007", "123456789012345678901")
+      dot <- Gen.oneOf("", ".")
+      fr <- Gen.oneOf("", "5", "25")
+      exp <- Gen.oneOf("", "e5", "E-3", "e+07", "e+", "e", "e1.5")
+      suffix <- Gen.oneOf("", "", "", "d", "f", ",234", "x", "\u0663")
+      pad2 <- Gen.oneOf("", " ", "\r")
+    } yield s"$pad$sign$int$dot$fr$exp$suffix$pad2"
+    val fixed = Gen.oneOf("NaN", "Infinity", "-Infinity", "0x1p3", "1,234", "25-989-741-2988",
+      "1997/08/13", "\u0661\u0662\u0663", "", " ", "true", "2020-02-29", "2021-02-29")
+    val userShaped = for {
+      d <- d2(0, 32); m <- d2(0, 13); y <- year; h <- d2(0, 25); mi <- d2(0, 60)
+      s <- Gen.oneOf(s"$d/$m/$y $h:$mi", s"$d.$m.$y", s"$d/$m/$y")
+    } yield s
+    val base = Gen.frequency(3 -> iso, 2 -> date, 1 -> dateWithZone, 2 -> rfc1123,
+      3 -> number, 1 -> fixed, 2 -> userShaped)
+    // Near misses: a valid-looking value cut short, extended or with one
+    // character replaced.
+    val value = for {
+      v <- base
+      edit <- Gen.choose(0, 5)
+      at <- Gen.choose(0, math.max(0, v.length - 1))
+      c <- Gen.oneOf("0-:T Z.+x/,".toSeq)
+    } yield edit match {
+      case 0 if v.nonEmpty => v.dropRight(1)
+      case 1 => v + Seq(" ", "x", "Z", "0", ".5")(at % 5)
+      case 2 if v.nonEmpty => v.updated(at, c)
+      case _ => v
+    }
+    val userFmt = XmlOptions(Map(
+      "timestampFormat" -> "dd/MM/yyyy HH:mm", "dateFormat" -> "dd.MM.yyyy"))
+    for (o <- Seq(opts, userFmt)) {
+      val prop = Prop.forAll(value) { v =>
+        val ts = allCatch.opt(TypeCast.parseXmlTimestamp(v, o))
+        val date = allCatch.opt(TypeCast.parseXmlDate(v, o))
+        Prop.all(
+          (TypeCast.isDouble(v) == OldProbes.isDouble(v)) :| s"isDouble('$v')",
+          (TypeCast.isTimestamp(v, o) == OldProbes.isTimestamp(v, o)) :| s"isTimestamp('$v')",
+          (TypeCast.isDate(v, o) == OldProbes.isDate(v, o)) :| s"isDate('$v')",
+          (ts == OldProbes.timestamp(v, o)) :| s"parseXmlTimestamp('$v') = $ts",
+          (date == OldProbes.date(v, o)) :| s"parseXmlDate('$v') = $date")
+      }
+      val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(20000), prop)
+      assert(result.passed, Pretty.pretty(result))
+    }
+  }
+
+  /** The probes as they were before the unresolved-parse gate: each format
+   *  attempted by a resolving parse under `allCatch`, so every non-matching
+   *  format costs a thrown exception. isDouble is the old one with the sign
+   *  fix (`toDouble` on the raw value). */
+  private object OldProbes {
+    private val timestampFormats = Seq(
+      DateTimeFormatter.ISO_INSTANT,
+      DateTimeFormatter.ISO_OFFSET_DATE_TIME,
+      DateTimeFormatter.RFC_1123_DATE_TIME,
+      new DateTimeFormatterBuilder()
+        .appendPattern("yyyy-MM-dd'T'HH:mm:ss")
+        .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
+        .toFormatter,
+      new DateTimeFormatterBuilder()
+        .appendPattern("yyyy-MM-dd HH:mm:ss")
+        .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
+        .toFormatter)
+
+    def timestamp(value: String, options: XmlOptions): Option[Timestamp] = allCatch.opt {
+      val zone = options.timezone.map(ZoneId.of).getOrElse(ZoneOffset.UTC)
+      def attempt(fmt: DateTimeFormatter): Option[Timestamp] = allCatch.opt {
+        val parsed = fmt.parse(value)
+        if (parsed.isSupported(ChronoField.OFFSET_SECONDS)) Timestamp.from(Instant.from(parsed))
+        else Timestamp.from(LocalDateTime.from(parsed).atZone(zone).toInstant)
+      }
+      timestampFormats.iterator.map(attempt).collectFirst { case Some(t) => t }.orElse {
+        options.timestampFormat.flatMap(p => attempt(DateTimeFormatter.ofPattern(p, Locale.US)))
+      }
+    }.flatten
+
+    def date(value: String, options: XmlOptions): Option[Date] =
+      allCatch.opt(LocalDate.parse(value, DateTimeFormatter.ISO_DATE)).orElse {
+        options.dateFormat.flatMap { p =>
+          allCatch.opt(LocalDate.parse(value, DateTimeFormatter.ofPattern(p, Locale.US)))
+        }
+      }.map(Date.valueOf)
+
+    def isDouble(v: String): Boolean =
+      v.nonEmpty && !v.exists(c => c.isLetter && c != 'E' && c != 'e') &&
+        v.exists(_.isDigit) && allCatch.opt(v.toDouble).isDefined
+
+    private def maybeIsoTemporal(v: String): Boolean = {
+      val len = v.length
+      if (len < 8) return false
+      val c0 = v.charAt(0)
+      val s = if (c0 == '-' || c0 == '+') 1 else 0
+      var i = s
+      while (i < len && v.charAt(i).isDigit) i += 1
+      i - s >= 4 && i < len && v.charAt(i) == '-'
+    }
+
+    private def maybeRfc1123(v: String): Boolean =
+      v.length >= 14 && {
+        val c0 = v.charAt(0)
+        (c0.isLetter && v.charAt(3) == ',') ||
+          (c0.isDigit && (v.charAt(1) == ' ' ||
+            (v.charAt(1).isDigit && v.charAt(2) == ' ')))
+      }
+
+    def isTimestamp(v: String, options: XmlOptions): Boolean =
+      (maybeIsoTemporal(v) || maybeRfc1123(v) || options.timestampFormat.isDefined) &&
+        timestamp(v, options).isDefined
+
+    def isDate(v: String, options: XmlOptions): Boolean =
+      (maybeIsoTemporal(v) || options.dateFormat.isDefined) && date(v, options).isDefined
   }
 }
