@@ -72,15 +72,14 @@ object SparkEntry {
     * 100-TB stream keeps its parallelism — the cap means this can only
     * LOWER the count when the input is provably small. Partition count
     * never changes the drained row SET (state ops are per-key; results are
-    * exact integer/decimal), only where keys live. */
-  private def stateShufflePartitions(s: SparkSession, inputDirs: Seq[String]): Int = {
+    * exact integer/decimal), only where keys live. Sizes resolve through
+    * the Hadoop `FileSystem`, so `file:`/`hdfs:`/object-store paths size
+    * like plain ones; if listing fails, the session's setting stands. */
+  private[graft] def stateShufflePartitions(s: SparkSession, inputDirs: Seq[String]): Int = {
     val cap = s.sessionState.conf.numShufflePartitions
-    var bytes = 0L
-    def walk(f: java.io.File): Unit =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(walk)
-      else bytes += f.length
-    inputDirs.foreach(p => walk(new java.io.File(p)))
-    math.max(1, math.min(cap.toLong, bytes / (64L << 20) + 1)).toInt
+    graft.xml.XmlFile.totalInputBytes(s.sparkContext.hadoopConfiguration,
+        inputDirs.mkString(","))
+      .fold(cap)(bytes => math.max(1, math.min(cap.toLong, bytes / (64L << 20) + 1)).toInt)
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to `n`

@@ -547,17 +547,6 @@ object Dedup extends org.apache.spark.internal.Logging {
   }
 
   /**
-   * MinHash signature (length `numHashes`) over the distinct-token set.
-   * The i-th hash function is XXH64 re-keyed by the seed index — an
-   * independent-enough family with no arithmetic that can overflow under
-   * ANSI mode. Single map pass, no shuffle; token hashing uses the native
-   * one-byte-pass expression (min is order- and duplicate-insensitive, so
-   * the signature is a pure function of the token set).
-   */
-  def minHashSignature(text: Column, numHashes: Int): Column =
-    SketchFunctions.minhash_signature(hashedNgramSet(text, 1), numHashes)
-
-  /**
    * Per-group EXACT-duplication pressure: how much of each source is
    * verbatim copies — the first number a dedup run reports (it sets the
    * expectation for what near-dup will find, and a source whose dup rate
@@ -1124,17 +1113,9 @@ object Dedup extends org.apache.spark.internal.Logging {
   def simHash(text: Column): Column =
     SketchFunctions.simhash64(hashedNgramSet(text, 1))
 
-  // shiftright/shiftleft with Column shift amounts exist only in SQL; wrap them.
+  // shiftrightunsigned with a Column shift amount exists only in SQL; wrap it.
   private def shiftrightunsigned_col(v: Column, amount: Column): Column =
     call_function("shiftrightunsigned", v, amount)
-  private def shiftleft_col(v: Column, amount: Column): Column =
-    call_function("shiftleft", v, amount)
-
-  /** The 4×16-bit chunks of a 64-bit sketch, for pigeonhole candidate joins. */
-  def simHashChunks(sim: Column): Column =
-    transform(sequence(lit(0), lit(3)), i =>
-      struct(i.as("chunk"),
-        (shiftrightunsigned_col(sim, i * 16) bitwiseAND lit(0xffffL)).as("val")))
 
   /** The 16-bit chunks of a multi-word sketch: chunk c comes from word c/4,
    *  bits (c%4)*16 .. +15. `words` is a Seq so 64-bit sketches keep their

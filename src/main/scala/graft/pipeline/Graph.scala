@@ -23,11 +23,12 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape per iteration: contributions = ranks ⋈ edges on src (hash
  * join on the edge key), one aggregate on dst, one left join back to the
- * node table for sinks — compact (node, long) rows only. Plan depth is
- * O(iterations); `checkpointInterval` truncates the lineage with a
- * `localCheckpoint` every k rounds (the [[Dedup.connectedComponents]]
- * discipline), so a 50-iteration run doesn't hand Catalyst a 50-deep
- * plan to re-analyze per action.
+ * node table for sinks — compact (node, long) rows only. All four
+ * PageRank variants run one kernel ([[rankKernel]]); plan depth is
+ * O(iterations), and lineage truncates with a `localCheckpoint` per
+ * round when the recurrence reads the previous ranks twice or runs deep
+ * (the [[Dedup.connectedComponents]] discipline), so a 50-iteration run
+ * doesn't hand Catalyst a 50-deep plan to re-analyze per action.
  */
 object Graph {
 
@@ -38,50 +39,6 @@ object Graph {
     edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .where(col("__src").isNotNull && col("__dst").isNotNull)
       .distinct()
-
-  /** [[cleanEdges]] with its lineage truncated ONCE for the fixed-point
-    * loops: every PageRank iteration re-embeds the edge subtree (and the
-    * node/outdegree aggregates over it) in the rank frame's plan — with a
-    * derived edge list (q199's co-occurrence graph: tokenize → explode →
-    * two vocabulary joins) the closing plan carried ~700 Exchange nodes
-    * for 5 iterations, and Catalyst re-analyzed all of it per action.
-    * Runtime was already deduplicated by ReusedExchange; the checkpoint
-    * buys back the PLANNING time (measured: q199 4.4 s → planning was
-    * ~half) at the cost of materializing the compact (src, dst) pairs
-    * once — the same per-loop discipline [[hopDistances]]/[[kCore]]/
-    * [[hyperBall]] already apply. Results are identical: only lineage
-    * depth changes. */
-  private def cleanEdgesCheckpointed(
-      edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    cleanEdges(edges, srcCol, dstCol).localCheckpoint(eager = false)
-
-  private def checkpointEvery(
-      ranks: DataFrame, iter: Int, interval: Int): DataFrame =
-    if (interval > 0 && iter % interval == 0) ranks.localCheckpoint(eager = false)
-    else ranks
-
-  /**
-   * The ONE lineage-truncation convention across all PageRank variants:
-   * `checkpointInterval = -1` (the default everywhere) resolves to
-   * per-round truncation exactly when the plan would otherwise grow
-   * super-linearly in iterations — a variant that reads the previous
-   * rank frame TWICE per round (the redistributing dangling sum: plan
-   * DOUBLES per round, measured 2.8× at 5 iterations) — or when the
-   * run is deep (> 10 rounds, where Catalyst re-analyzing an
-   * ever-deeper linear chain starts to dominate). Shallow single-read
-   * runs skip it: per-round materialization costs ~1.8× on a
-   * 5-iteration run (measured r12) for no benefit at depth 5. Results
-   * are identical at ANY interval — only plan depth changes; pass an
-   * explicit interval (0 = never) to override.
-   */
-  private def resolveInterval(
-      interval: Int, iterations: Int, doubleRead: Boolean): Int = {
-    require(interval >= -1,
-      s"checkpointInterval must be >= 0, or -1 for auto, got $interval")
-    if (interval >= 0) interval
-    else if (doubleRead || iterations > 10) 1
-    else 0
-  }
 
   /**
    * Fixed-iteration damped PageRank over a directed edge list. Returns
@@ -95,58 +52,192 @@ object Graph {
    * [[pageRankRedistributing]].
    *
    * rank_0(v) = Total div N
-   * rank_{k+1}(v) = (dampingPermille' * (Total div N)) div 1000
-   *               + (dampingPermille * Σ_{u→v} (rank_k(u) div outdeg(u))) div 1000
-   * with dampingPermille' = 1000 - dampingPermille.
-   *
-   * `checkpointInterval` = k > 0 localCheckpoints the rank frame every k
-   * iterations (0 = off, -1 = the [[resolveInterval]] auto rule —
-   * the default); results are identical at any interval — only the
-   * lineage depth changes.
+   * rank_{k+1}(v) = ((1000−d) · (Total div N)) div 1000
+   *               + (d · Σ_{u→v} (rank_k(u) div outdeg(u))) div 1000
    */
   def pageRank(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      dampingPermille: Int = 850,
-      checkpointInterval: Int = -1): DataFrame = {
+      dampingPermille: Int = 850): DataFrame =
+    rankKernel(unitEdges(edges, srcCol, dstCol), None,
+      redistribute = false, iterations, dampingPermille)
+
+  /**
+   * Weighted damped PageRank: mass leaves a node proportionally to edge
+   * WEIGHT instead of equally per edge — the formulation TextRank
+   * actually specifies (co-occurrence counts as weights) and the link-
+   * graph variant when edges carry traffic/trust. Parallel edges SUM
+   * their weights first (the weighted analogue of [[pageRank]]'s edge
+   * dedup); weights must be positive integers — zero/negative/null
+   * weights drop with the edge (no mass can flow over them).
+   *
+   * rank_{k+1}(v) = ((1000−d) · (Total div N)) div 1000
+   *   + (d · Σ_{u→v} ((rank_k(u) div W_u) · w_uv)) div 1000
+   * with W_u = Σ of u's out-weights. The per-unit quotient truncates
+   * once per source node (the same remainder-drop as the unweighted
+   * div by outdeg), then scales by the exact integer weight — every
+   * term stays inside int64 because Σ w_uv·(rank div W_u) ≤ rank.
+   */
+  def pageRankWeighted(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      weightCol: String,
+      iterations: Int,
+      dampingPermille: Int = 850): DataFrame =
+    rankKernel(
+      edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
+          col(weightCol).cast("long").as("__w"))
+        .where(col("__src").isNotNull && col("__dst").isNotNull &&
+          col("__w") > 0L)
+        .groupBy(col("__src"), col("__dst"))
+        .agg(sum(col("__w")).as("__w")),
+      None, redistribute = false, iterations, dampingPermille)
+
+  /**
+   * Personalized PageRank: teleport mass returns to a SEED SET instead
+   * of every node — the link-structure "expand from a curated set"
+   * primitive (seed-and-expand corpus curation, TrustRank-style host
+   * scoring). Same integer seams as [[pageRank]]; only the teleport
+   * terms change, to nonzero for seeds only:
+   *
+   * rank_0(v) = [v ∈ S] · (Total div |S|)
+   * rank_{k+1}(v) = [v ∈ S] · ((1000−d) · (Total div |S|)) div 1000
+   *              + (d · Σ_{u→v} (rank_k(u) div outdeg(u))) div 1000
+   *
+   * Seeds are intersected with the graph's node set first (|S| counts
+   * the survivors; seeds naming absent nodes are ignored, and a seed
+   * list with no survivor is refused); dangling mass drops, as in
+   * [[pageRank]]. Seeds ride a DataFrame, not a driver list — a seed
+   * set can be millions of curated hosts.
+   */
+  def pageRankPersonalized(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      seeds: DataFrame,
+      seedCol: String,
+      iterations: Int,
+      dampingPermille: Int = 850): DataFrame =
+    rankKernel(unitEdges(edges, srcCol, dstCol),
+      Some(seeds.select(col(seedCol).as("node"))
+        .where(col("node").isNotNull).distinct()),
+      redistribute = false, iterations, dampingPermille)
+
+  /**
+   * The standard PageRank formulation: dangling (sink) mass is
+   * REDISTRIBUTED equally to every node each iteration instead of
+   * dropped, so total mass is conserved up to truncation remainders.
+   * The dangling sum is an exact int64 aggregate (a broadcast 1-row
+   * frame) and every node's share is one truncating `div`:
+   *
+   * rank_{k+1}(v) = ((1000−d) · (Total div N)) div 1000
+   *   + (d · (Σ_{u→v} (rank_k(u) div outdeg(u)) + dangling_k div N)) div 1000
+   * with dangling_k = Σ_{sinks u} rank_k(u).
+   */
+  def pageRankRedistributing(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iterations: Int,
+      dampingPermille: Int = 850): DataFrame =
+    rankKernel(unitEdges(edges, srcCol, dstCol), None,
+      redistribute = true, iterations, dampingPermille)
+
+  /** [[cleanEdges]] with unit weights: unweighted PageRank is weighted
+    * PageRank with every w = 1, and `(rank div outdeg) · 1` is the same
+    * integer, so both run the one [[rankKernel]]. */
+  private def unitEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    cleanEdges(edges, srcCol, dstCol).withColumn("__w", lit(1L))
+
+  /**
+   * The one PageRank recurrence behind all four variants, over weighted
+   * edges (__src, __dst, __w) with w > 0 and one row per pair:
+   *
+   * rank_0(v) = [v ∈ S] · (Total div |S|)
+   * rank_{k+1}(v) = [v ∈ S] · ((1000−d) · (Total div |S|)) div 1000
+   *   + (d · (Σ_{u→v} (rank_k(u) div W_u) · w_uv
+   *           [+ dangling_k div N])) div 1000
+   * with S = `seeds` ∩ nodes, or every node when `seeds` is None, and
+   * the bracketed dangling term only when `redistribute`.
+   *
+   * Shape. The edges and the invariant frame are each materialized once
+   * (lazy `localCheckpoint`): every round re-embeds them in the rank
+   * frame's plan, so a derived edge list (q199's co-occurrence graph)
+   * would otherwise hand Catalyst hundreds of Exchange nodes to re-analyze
+   * per action, and a per-round checkpoint would re-run the node distinct
+   * and out-weight aggregate in every round's segment. The frame holds
+   * (node, __wout, __tele) — __wout is the out-weight sum, null for
+   * sinks — and its teleport terms fold to literals from ONE driver-side
+   * count (|S|; N when S is every node). Ranks carry __wout, so a round
+   * is: ranks with __wout ⋈ edges on src, one `sum(__u · __w)` on dst,
+   * the frame left-joined to it (cross-joined to the sink sum when
+   * redistributing) — compact (node, __wout, rank) rows only. An empty graph
+   * returns an empty (node, rank_ppt) frame.
+   *
+   * Lineage rule. The rank frame localCheckpoints every round exactly
+   * when the plan would otherwise grow super-linearly in iterations —
+   * redistribution reads the previous ranks TWICE per round (contributions
+   * and the dangling sum), so its plan doubles per round (measured 2.8× at
+   * 5 iterations) — or when the run is deep (> 10 rounds, where
+   * re-analyzing an ever-deeper linear chain starts to dominate).
+   * Shallow single-read runs skip it: per-round materialization cost
+   * ~1.8× on a 5-iteration run (measured r12). Values are identical
+   * either way; only plan depth changes.
+   */
+  private def rankKernel(
+      weightedEdges: DataFrame,
+      seeds: Option[DataFrame],
+      redistribute: Boolean,
+      iterations: Int,
+      dampingPermille: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampingPermille >= 0 && dampingPermille <= 1000,
       s"dampingPermille must be in [0, 1000], got $dampingPermille")
-    val ckpt = resolveInterval(checkpointInterval, iterations, doubleRead = false)
-    val e = cleanEdgesCheckpointed(edges, srcCol, dstCol)
+    val e = weightedEdges.localCheckpoint(eager = false)
     val nodes = e.select(col("__src").as("node"))
       .unionByName(e.select(col("__dst").as("node")))
       .distinct()
-    val outdeg = e.groupBy(col("__src").as("node"))
-      .agg(count(lit(1)).as("__outdeg"))
-    // The per-node base is (1000 - d) permille of the INITIAL equal share
-    // — a 1-row subquery both engines fold to a constant.
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    val base = broadcast(nRow.select(
-      expr(s"(${1000 - dampingPermille} * (${Total}L div __n)) div 1000")
-        .as("__base"),
-      expr(s"${Total}L div __n").as("__r0")))
+    val flagged = seeds.fold(nodes.withColumn("__tele", lit(true)))(s =>
+      nodes.join(s.withColumn("__tele", lit(true)), Seq("node"), "left"))
+    val frame = flagged
+      .join(e.groupBy(col("__src").as("node")).agg(sum(col("__w")).as("__wout")),
+        Seq("node"), "left")
+      .select(col("node"), col("__wout"),
+        coalesce(col("__tele"), lit(false)).as("__tele"))
+      .localCheckpoint(eager = false)
+    lazy val n = frame.count()
+    val sn = if (seeds.isEmpty) n else frame.where(col("__tele")).count()
+    if (sn == 0) {
+      require(seeds.isEmpty, "no seed survives the intersection with the graph's nodes")
+      return frame.select(col("node"), lit(0L).as("rank_ppt"))
+    }
+    val share = Total / sn // Total, sn > 0: Scala / == SQL div here
+    def teleport(v: Long) = when(col("__tele"), lit(v)).otherwise(lit(0L))
+    val base = frame.select(col("node"), col("__wout"),
+      teleport((1000L - dampingPermille) * share / 1000L).as("__base"))
+    val perRound = redistribute || iterations > 10
 
-    var ranks = nodes.crossJoin(base)
-      .select(col("node"), col("__r0").as("rank_ppt"))
-    for (i <- 1 to iterations) {
-      val contribs = ranks
-        .join(outdeg, "node")
-        .select(col("node"), expr("rank_ppt div __outdeg").as("__c"))
+    var ranks = frame.select(col("node"), col("__wout"), teleport(share).as("rank_ppt"))
+    for (_ <- 1 to iterations) {
+      val contribs = ranks.where(col("__wout").isNotNull)
+        .select(col("node"), expr("rank_ppt div __wout").as("__u"))
         .join(e, col("node") === col("__src"))
         .groupBy(col("__dst").as("node"))
-        .agg(sum(col("__c")).as("__in"))
-      ranks = checkpointEvery(
-        nodes.crossJoin(base)
-          .join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            expr(s"__base + ($dampingPermille * coalesce(__in, 0L)) div 1000")
-              .as("rank_ppt")),
-        i, ckpt)
+        .agg(sum(col("__u") * col("__w")).as("__in"))
+      val (next, inflow) =
+        if (!redistribute) (base, "coalesce(__in, 0L)")
+        else (base.crossJoin(broadcast(ranks.where(col("__wout").isNull)
+            .agg(coalesce(sum(col("rank_ppt")), lit(0L)).as("__dang")))),
+          s"coalesce(__in, 0L) + __dang div ${n}L")
+      ranks = next.join(contribs, Seq("node"), "left")
+        .select(col("node"), col("__wout"),
+          expr(s"__base + ($dampingPermille * ($inflow)) div 1000").as("rank_ppt"))
+      if (perRound) ranks = ranks.localCheckpoint(eager = false)
     }
-    ranks
+    ranks.select(col("node"), col("rank_ppt"))
   }
 
   /**
@@ -163,7 +254,7 @@ object Graph {
    * (node) longs; the frontier shrinks to empty on converged graphs and
    * later rounds cost scheduling only. The known set is read twice per
    * round (anti-join + union), so lineage truncates every round (the
-   * [[resolveInterval]] doubleRead rule).
+   * [[rankKernel]] double-read rule).
    */
   def hopDistances(
       edges: DataFrame,
@@ -250,169 +341,6 @@ object Graph {
   }
 
   /**
-   * Weighted damped PageRank: mass leaves a node proportionally to edge
-   * WEIGHT instead of equally per edge — the formulation TextRank
-   * actually specifies (co-occurrence counts as weights) and the link-
-   * graph variant when edges carry traffic/trust. Parallel edges SUM
-   * their weights first (the weighted analogue of [[pageRank]]'s edge
-   * dedup); weights must be positive integers — zero/negative/null
-   * weights drop with the edge (no mass can flow over them).
-   *
-   * rank_{k+1}(v) = ((1000−d) · (Total div N)) div 1000
-   *   + (d · Σ_{u→v} ((rank_k(u) div W_u) · w_uv)) div 1000
-   * with W_u = Σ of u's out-weights. The per-unit quotient truncates
-   * once per source node (the same remainder-drop as the unweighted
-   * div by outdeg), then scales by the exact integer weight — every
-   * term stays inside int64 because Σ w_uv·(rank div W_u) ≤ rank.
-   */
-  def pageRankWeighted(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      weightCol: String,
-      iterations: Int,
-      dampingPermille: Int = 850,
-      checkpointInterval: Int = -1): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      s"dampingPermille must be in [0, 1000], got $dampingPermille")
-    val ckpt = resolveInterval(checkpointInterval, iterations, doubleRead = false)
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-        col(weightCol).cast("long").as("__w"))
-      .where(col("__src").isNotNull && col("__dst").isNotNull &&
-        col("__w") > 0L)
-      .groupBy(col("__src"), col("__dst"))
-      .agg(sum(col("__w")).as("__w"))
-      // same lineage-truncation rationale as cleanEdgesCheckpointed
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("__src").as("node"))
-      .unionByName(e.select(col("__dst").as("node")))
-      .distinct()
-    val outW = e.groupBy(col("__src").as("node"))
-      .agg(sum(col("__w")).as("__wout"))
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    val base = broadcast(nRow.select(
-      expr(s"(${1000 - dampingPermille} * (${Total}L div __n)) div 1000")
-        .as("__base"),
-      expr(s"${Total}L div __n").as("__r0")))
-    var ranks = nodes.crossJoin(base)
-      .select(col("node"), col("__r0").as("rank_ppt"))
-    for (i <- 1 to iterations) {
-      val contribs = ranks
-        .join(outW, "node")
-        .select(col("node"), expr("rank_ppt div __wout").as("__u"))
-        .join(e, col("node") === col("__src"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(col("__u") * col("__w")).as("__in"))
-      ranks = checkpointEvery(
-        nodes.crossJoin(base)
-          .join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            expr(s"__base + ($dampingPermille * coalesce(__in, 0L)) div 1000")
-              .as("rank_ppt")),
-        i, ckpt)
-    }
-    ranks
-  }
-
-  /**
-   * The standard PageRank formulation: dangling (sink) mass is
-   * REDISTRIBUTED equally to every node each iteration instead of
-   * dropped, so total mass is conserved up to truncation remainders.
-   * Same integer seam discipline — the dangling sum is an exact int64
-   * aggregate and every node's share is one truncating `div` — so an
-   * engine replaying the recurrence agrees bit-for-bit.
-   *
-   * rank_{k+1}(v) = (dampingPermille' * (Total div N)) div 1000
-   *   + (dampingPermille *
-   *      (Σ_{u→v} (rank_k(u) div outdeg(u)) + dangling_k div N)) div 1000
-   * with dangling_k = Σ_{sinks u} rank_k(u).
-   *
-   * Cost vs [[pageRank]]: one extra tiny aggregate per iteration (the
-   * sink-mass sum — a broadcast 1-row frame), nothing else changes
-   * shape. Because each round reads the previous ranks TWICE (the
-   * contribution join and the dangling sum), the [[resolveInterval]]
-   * auto default truncates lineage EVERY round here at any depth:
-   * without it the logical plan DOUBLES per iteration (each branch
-   * re-embeds the whole history) and five iterations already cost ~4×
-   * the dropped-mass variant. Results are identical at any interval —
-   * only plan depth changes.
-   */
-  /**
-   * Personalized PageRank: teleport mass returns to a SEED SET instead
-   * of every node — the link-structure "expand from a curated set"
-   * primitive (seed-and-expand corpus curation, TrustRank-style host
-   * scoring). Same integer parts-per-1e12 seams as [[pageRank]]; the
-   * only change is the base term, which is nonzero for seeds only:
-   *
-   * rank_0(v) = [v ∈ S] · (Total div |S|)
-   * rank_{k+1}(v) = [v ∈ S] · ((1000−d) · (Total div |S|)) div 1000
-   *              + (d · Σ_{u→v} (rank_k(u) div outdeg(u))) div 1000
-   *
-   * Seeds are intersected with the graph's node set first (|S| counts
-   * the survivors; seeds naming absent nodes are ignored); dangling
-   * mass drops, as in [[pageRank]]. Seeds ride a DataFrame, not a
-   * driver list — a seed set can be millions of curated hosts. The
-   * seed flag joins once onto the node table and is reused every
-   * round; everything else keeps the one-join-one-aggregate-per-round
-   * shape.
-   */
-  def pageRankPersonalized(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      seeds: DataFrame,
-      seedCol: String,
-      iterations: Int,
-      dampingPermille: Int = 850,
-      checkpointInterval: Int = -1): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      s"dampingPermille must be in [0, 1000], got $dampingPermille")
-    val ckpt = resolveInterval(checkpointInterval, iterations, doubleRead = false)
-    val e = cleanEdgesCheckpointed(edges, srcCol, dstCol)
-    val nodes = e.select(col("__src").as("node"))
-      .unionByName(e.select(col("__dst").as("node")))
-      .distinct()
-    val seedSet = seeds.select(col(seedCol).as("node"))
-      .where(col("node").isNotNull).distinct()
-      .join(nodes, "node")
-      .withColumn("__seed", lit(1))
-    val flagged = nodes.join(seedSet, Seq("node"), "left")
-      .select(col("node"), coalesce(col("__seed"), lit(0)).as("__seed"))
-    val outdeg = e.groupBy(col("__src").as("node"))
-      .agg(count(lit(1)).as("__outdeg"))
-    val sCount = broadcast(seedSet.agg(count(lit(1)).as("__sn")))
-    // require a non-empty seed survivor set — an all-absent seed list
-    // would divide by zero and (worse) silently rank everything 0
-    require(sCount.head().getLong(0) > 0,
-      "no seed survives the intersection with the graph's nodes")
-
-    var ranks = flagged.crossJoin(sCount)
-      .select(col("node"), col("__seed"),
-        expr(s"CASE WHEN __seed = 1 THEN ${Total}L div __sn ELSE 0L END")
-          .as("rank_ppt"))
-    for (i <- 1 to iterations) {
-      val contribs = ranks
-        .join(outdeg, "node")
-        .select(col("node"), expr("rank_ppt div __outdeg").as("__c"))
-        .join(e, col("node") === col("__src"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(col("__c")).as("__in"))
-      ranks = checkpointEvery(
-        flagged.crossJoin(sCount)
-          .join(contribs, Seq("node"), "left")
-          .select(col("node"), col("__seed"),
-            expr(s"CASE WHEN __seed = 1 THEN " +
-              s"(${1000 - dampingPermille} * (${Total}L div __sn)) div 1000 " +
-              s"ELSE 0L END + ($dampingPermille * coalesce(__in, 0L)) div 1000")
-              .as("rank_ppt")),
-        i, ckpt)
-    }
-    ranks.select(col("node"), col("rank_ppt"))
-  }
-
-  /**
    * The HLL small-range/raw estimator over a node's register profile, in
    * integer micro-units — ONE SQL string shared verbatim between the
    * Spark plan and the DuckDB oracle (the BM25 convention), so the two
@@ -495,33 +423,6 @@ object Graph {
   }
 
   /**
-   * Per-node triangle counts and local clustering coefficient over an
-   * undirected simple graph (directed input is canonicalized: self-loops
-   * dropped, parallel/reverse edges collapse to one {a,b} pair). The
-   * local clustering coefficient — triangles(v) / C(deg(v), 2) — is the
-   * classic cohesion signal (Watts–Strogatz 1998): spam-farm link rings
-   * and template-generated cross-link blocks score near 1, organic hub
-   * pages near 0, so corpus curation uses it alongside PageRank to
-   * discount artificially dense neighborhoods.
-   *
-   * Scale shape — the degree-ordered orientation (Chiba–Nishizeki /
-   * Suri–Vassilvitskii "MR-Cool" discipline): every undirected edge is
-   * directed from its (degree, node)-smaller endpoint to the larger, and
-   * wedges are enumerated only at an edge's LOWER endpoint. A hub of
-   * degree d roots none of its C(d, 2) wedges — they root at the spokes
-   * — which bounds per-node wedge fan-out by O(√m) on any graph and
-   * makes the enumeration O(m^{3/2}) total instead of Σ deg² (quadratic
-   * at hubs). Three hash equi-joins, no driver state, no node ever
-   * materializes its neighbor list in one row.
-   *
-   * Determinism: counts are exact integers; the coefficient is reported
-   * in integer micro-units — `(2'000'000 · tri) div (deg · (deg−1))` —
-   * the ln-seam rule applied to a ratio, so any engine replays it
-   * bit-for-bit. Output: (node, degree, triangles, cc_micro); isolated
-   * nodes don't appear (no edges → no row), degree-1 nodes report
-   * cc_micro = 0.
-   */
-  /**
    * k-core peeling over the undirected simple graph: `rounds` iterations
    * of "drop every node whose CURRENT degree < k", each recomputing
    * degrees on the surviving subgraph. The k-core is the classic
@@ -576,6 +477,33 @@ object Graph {
       .select(col("__x").as("node"), col("degree"))
   }
 
+  /**
+   * Per-node triangle counts and local clustering coefficient over an
+   * undirected simple graph (directed input is canonicalized: self-loops
+   * dropped, parallel/reverse edges collapse to one {a,b} pair). The
+   * local clustering coefficient — triangles(v) / C(deg(v), 2) — is the
+   * classic cohesion signal (Watts–Strogatz 1998): spam-farm link rings
+   * and template-generated cross-link blocks score near 1, organic hub
+   * pages near 0, so corpus curation uses it alongside PageRank to
+   * discount artificially dense neighborhoods.
+   *
+   * Scale shape — the degree-ordered orientation (Chiba–Nishizeki /
+   * Suri–Vassilvitskii "MR-Cool" discipline): every undirected edge is
+   * directed from its (degree, node)-smaller endpoint to the larger, and
+   * wedges are enumerated only at an edge's LOWER endpoint. A hub of
+   * degree d roots none of its C(d, 2) wedges — they root at the spokes
+   * — which bounds per-node wedge fan-out by O(√m) on any graph and
+   * makes the enumeration O(m^{3/2}) total instead of Σ deg² (quadratic
+   * at hubs). Three hash equi-joins, no driver state, no node ever
+   * materializes its neighbor list in one row.
+   *
+   * Determinism: counts are exact integers; the coefficient is reported
+   * in integer micro-units — `(2'000'000 · tri) div (deg · (deg−1))` —
+   * the ln-seam rule applied to a ratio, so any engine replays it
+   * bit-for-bit. Output: (node, degree, triangles, cc_micro); isolated
+   * nodes don't appear (no edges → no row), degree-1 nodes report
+   * cc_micro = 0.
+   */
   def triangleCounts(
       edges: DataFrame,
       srcCol: String,
@@ -625,72 +553,5 @@ object Graph {
         coalesce(col("__tri"), lit(0L)).as("triangles"),
         expr("CASE WHEN __deg >= 2 THEN (2000000 * coalesce(__tri, 0L)) " +
           "div (__deg * (__deg - 1)) ELSE 0L END").as("cc_micro"))
-  }
-
-  def pageRankRedistributing(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iterations: Int,
-      dampingPermille: Int = 850,
-      checkpointInterval: Int = -1): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      s"dampingPermille must be in [0, 1000], got $dampingPermille")
-    val ckpt = resolveInterval(checkpointInterval, iterations, doubleRead = true)
-    val e = cleanEdgesCheckpointed(edges, srcCol, dstCol)
-    // This variant checkpoints ranks per round (doubleRead), so each
-    // round is its OWN execution segment and exchange reuse never dedups
-    // loop-invariant subtrees across rounds: the old shape re-ran the
-    // node distinct + outdegree aggregate (twice — contribution and
-    // dangling branches) and the 1-row base broadcast in EVERY round's
-    // segment, ~13 one-task query-stage materializations per round on a
-    // compact graph. Three structural removals, values identical:
-    //  - nodes/outdeg materialize once (lazy localCheckpoint);
-    //  - the rank frame CARRIES each node's outdegree, so no round ever
-    //    re-joins it (the node universe is loop-invariant, so ranks
-    //    itself replaces the per-round nodes.crossJoin rebuild);
-    //  - the base constants fold to literals via one bounded 1-row
-    //    collect (the node count), instead of a broadcast join per round.
-    val nodes = e.select(col("__src").as("node"))
-      .unionByName(e.select(col("__dst").as("node")))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val outdeg = e.groupBy(col("__src").as("node"))
-      .agg(count(lit(1)).as("__outdeg"))
-      .localCheckpoint(eager = false)
-    val n = nodes.count()
-    if (n == 0) {
-      // Empty graph: the old 1-row-broadcast form produced an empty rank
-      // frame (its base subquery divided by a NULL-guarded zero); keep
-      // that contract without risking a literal division by zero.
-      return nodes.select(col("node"), lit(0L).as("rank_ppt"))
-    }
-    val r0 = Total / n // Total, n > 0: Scala / == SQL div here
-    val baseConst = ((1000L - dampingPermille) * r0) / 1000L
-
-    var ranks = nodes.join(outdeg, Seq("node"), "left")
-      .select(col("node"), col("__outdeg"), lit(r0).as("rank_ppt"))
-      .localCheckpoint(eager = false)
-    for (i <- 1 to iterations) {
-      val contribs = ranks.where(col("__outdeg").isNotNull)
-        .select(col("node"), expr("rank_ppt div __outdeg").as("__c"))
-        .join(e, col("node") === col("__src"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(col("__c")).as("__in"))
-      // Sink mass: one exact int64 sum over the rank frame — a 1-row
-      // broadcast.
-      val dangling = broadcast(ranks.where(col("__outdeg").isNull)
-        .agg(coalesce(sum(col("rank_ppt")), lit(0L)).as("__dang")))
-      ranks = checkpointEvery(
-        ranks.select(col("node"), col("__outdeg")).crossJoin(dangling)
-          .join(contribs, Seq("node"), "left")
-          .select(col("node"), col("__outdeg"),
-            expr(s"${baseConst}L + ($dampingPermille * " +
-              s"(coalesce(__in, 0L) + __dang div ${n}L)) div 1000")
-              .as("rank_ppt")),
-        i, ckpt)
-    }
-    ranks.select(col("node"), col("rank_ppt"))
   }
 }

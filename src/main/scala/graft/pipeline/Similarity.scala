@@ -1078,12 +1078,18 @@ object Similarity {
   /** Fine-table refresh from merged [[twoLevelSuffStats]] tables: one
     * truncating div per (shard, fcl, dim); fine clusters absent from
     * the stats (no rows this period) keep their stored centroid —
-    * the same empty-cluster rule as training. Returns the refreshed
+    * the same empty-cluster rule as training. Caller-supplied stats
+    * never reshape the model: a group with sum(n) = 0 counts as absent
+    * (no division by zero), and a (shard, fcl) the stored table does not
+    * hold is ignored (no new centroid row). Returns the refreshed
     * (shard, fcl, cv) table, ready to persist as the next model. */
   def kmeansTwoLevelRefresh(fine: DataFrame, stats: DataFrame): DataFrame =
     overlayFine(fine,
       stats.groupBy(col("shard"), col("fcl"), col("dim"))
-        .agg(expr("sum(s) div sum(n)").as("cnew")))
+        .agg(sum(col("s")).as("__s"), sum(col("n")).as("__n"))
+        .where(col("__n") > 0)
+        .join(fine.select(col("shard"), col("fcl")), Seq("shard", "fcl"), "left_semi")
+        .select(col("shard"), col("fcl"), col("dim"), expr("__s div __n").as("cnew")))
 
   /** Overlay a SPARSE per-(shard, fcl, dim) update table (`cnew`) onto a
     * DENSE (shard, fcl, cv) centroid table and reassemble the cv arrays:

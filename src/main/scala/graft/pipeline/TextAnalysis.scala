@@ -23,15 +23,6 @@ object TextAnalysis {
   /** Number of whitespace-delimited tokens. */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /**
-   * A BPE-ish subword count estimate: words are split into runs of letters,
-   * digits, and individual punctuation (the usual pre-tokenizer regex shape).
-   */
-  def subwordCount(text: Column): Column =
-    size(filter(
-      split(text, "(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-      t => length(trim(t)) > 0))
-
   /** Ratio of punctuation characters to all characters. */
   def punctRatio(text: Column): Column =
     when(length(text) === 0, lit(0.0)).otherwise(

@@ -85,8 +85,8 @@ private[graft] object XmlFile {
   }
 
   /** Total byte size of the files `path` names (comma-separated, globs ok);
-   *  None if listing fails — sizing then falls back to Hadoop defaults. */
-  private def totalInputBytes(
+   *  None if listing fails — callers then fall back to their defaults. */
+  private[graft] def totalInputBytes(
       conf: org.apache.hadoop.conf.Configuration,
       path: String): Option[Long] = {
     try {

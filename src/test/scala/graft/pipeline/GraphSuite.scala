@@ -120,8 +120,6 @@ class GraphSuite extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Graph.pageRank(e, "src", "dst", 1, dampingPermille = 1001))
     intercept[IllegalArgumentException](
-      Graph.pageRank(e, "src", "dst", 1, checkpointInterval = -2))
-    intercept[IllegalArgumentException](
       Graph.pageRankRedistributing(e, "src", "dst", 0))
   }
 
@@ -146,10 +144,8 @@ class GraphSuite extends AnyFunSuite {
     ranks
   }
 
-  private def runRedist(edges: Seq[(String, String)], iterations: Int,
-      checkpointInterval: Int = 0): Map[String, Long] =
-    Graph.pageRankRedistributing(edges.toDF("src", "dst"), "src", "dst",
-        iterations, checkpointInterval = checkpointInterval)
+  private def runRedist(edges: Seq[(String, String)], iterations: Int): Map[String, Long] =
+    Graph.pageRankRedistributing(edges.toDF("src", "dst"), "src", "dst", iterations)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("redistributing variant matches its recurrence replay, sinks included") {
@@ -174,7 +170,19 @@ class GraphSuite extends AnyFunSuite {
 
   test("without sinks, both variants agree exactly") {
     val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "b")
-    assert(run(edges, 4) === runRedist(edges, 4))
+    val plain = run(edges, 4)
+    assert(plain === runRedist(edges, 4))
+    // unit weights on a graph without parallel edges: (rank div outdeg) · 1
+    val unit = Graph.pageRankWeighted(
+        edges.map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w"),
+        "src", "dst", "w", iterations = 4)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(unit === plain)
+    // every node seeded: the teleport set is the whole node set
+    val everyNode = Graph.pageRankPersonalized(edges.toDF("src", "dst"), "src",
+        "dst", Seq("a", "b", "c").toDF("source"), "source", iterations = 4)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(everyNode === plain)
   }
 
   /** Scala replay of the personalized recurrence (seed-only teleport). */
@@ -259,16 +267,14 @@ class GraphSuite extends AnyFunSuite {
       Graph.hyperBall(edges.toDF("src", "dst"), "src", "dst", 0))
   }
 
-  test("20 iterations with checkpointInterval runs and matches the replay") {
+  test("20 iterations under the per-round lineage rule run and match the replay") {
     val edges = Seq(
       "a" -> "b", "b" -> "c", "c" -> "a", "d" -> "a", "a" -> "d", "e" -> "sink")
-    val got = runRedist(edges, 20, checkpointInterval = 5)
+    val got = runRedist(edges, 20)
     assert(got === replayRedist(edges, 20))
-    // plain variant too: checkpointing must not change values
-    val plain = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", 20,
-        checkpointInterval = 5)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(plain === replay(edges, 20))
+    // plain variant too: past 10 rounds it checkpoints every round, which
+    // must not change values
+    assert(run(edges, 20) === replay(edges, 20))
     // personalized variant deep-iterates under the default (per-round)
     // checkpoint convention too, and values match the replay exactly
     val pers = Graph.pageRankPersonalized(edges.toDF("src", "dst"), "src",
@@ -339,6 +345,40 @@ class GraphSuite extends AnyFunSuite {
     val wide = Graph.commonNeighborScores(edges, "src", "dst",
       k = 100, maxDegree = 5)
     assert(wide.count() === 10L)
+  }
+
+  /** Scala replay of the weighted recurrence: parallel edges sum, edges
+    * with a non-positive weight drop. */
+  private def replayWeighted(
+      edges: Seq[(String, String, Long)], iterations: Int,
+      damping: Int = 850): Map[String, Long] = {
+    val w = edges.filter(_._3 > 0).groupBy(e => (e._1, e._2))
+      .map { case (k, es) => k -> es.map(_._3).sum }.toSeq
+    val nodes = (w.map(_._1._1) ++ w.map(_._1._2)).distinct
+    val wout = w.groupBy(_._1._1).map { case (k, es) => k -> es.map(_._2).sum }
+    val r0 = Total / nodes.size
+    val base = ((1000 - damping) * r0) / 1000
+    var ranks = nodes.map(_ -> r0).toMap
+    for (_ <- 1 to iterations) {
+      val in = w.groupBy(_._1._2).map { case (dst, es) =>
+        dst -> es.map { case ((src, _), wt) => ranks(src) / wout(src) * wt }.sum
+      }
+      ranks = nodes.map(v => v -> (base + (damping * in.getOrElse(v, 0L)) / 1000)).toMap
+    }
+    ranks
+  }
+
+  test("pageRankWeighted matches its recurrence replay: sinks, summed parallel edges") {
+    val edges = Seq(
+      ("a", "b", 2L), ("a", "b", 3L), // parallel: one edge of weight 5
+      ("a", "c", 1L), ("b", "c", 4L), ("b", "sink", 3L), ("c", "a", 2L),
+      ("c", "sink", 7L), ("d", "a", 1L), ("d", "c", 0L), ("c", "d", -2L))
+    val df = edges.toDF("src", "dst", "w")
+    for (iters <- Seq(1, 3, 5)) {
+      val got = Graph.pageRankWeighted(df, "src", "dst", "w", iters)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got === replayWeighted(edges, iters), s"iters=$iters")
+    }
   }
 
   test("pageRankWeighted: hand-replayed integer seams on a 3-node graph") {

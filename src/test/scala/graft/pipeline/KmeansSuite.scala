@@ -411,6 +411,41 @@ class KmeansSuite extends AnyFunSuite {
     assert(merged.length >= 4)
   }
 
+  test("kmeansTwoLevelRefresh: stats for absent clusters or with zero counts change nothing") {
+    // Caller-supplied stats may name a (shard, fcl) the stored table does
+    // not hold, or carry a group whose counts sum to 0; the refresh must
+    // neither add a centroid row nor divide by zero — such rows are
+    // treated as absent, so the stored centroid stays.
+    val vecs = Seq(
+      (0L, Seq(0.0, 0.0)), (1L, Seq(0.02, 0.0)), (2L, Seq(0.0, 0.02)),
+      (10L, Seq(0.0, 5.0)), (11L, Seq(0.02, 5.0)),
+      (20L, Seq(9.0, 0.0)), (21L, Seq(9.02, 0.0)),
+      (30L, Seq(9.0, 5.0)), (31L, Seq(9.02, 5.0)), (32L, Seq(9.0, 5.02))
+    ).toDF("id", "v")
+    val (coarse, fine) = Similarity.kmeansTwoLevelModel(vecs, "id", "v",
+      kCoarse = 2, kFine = 2, itersCoarse = 2, itersFine = 2)
+    // a slice that leaves some stored clusters without rows this period
+    val stats = Similarity.twoLevelSuffStats(
+      vecs.where(col("id") < 3), "id", "v", coarse, fine, kFine = 2)
+    val fineKeys = fine.select("shard", "fcl").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSet
+    val statKeys = stats.select("shard", "fcl").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSet
+    val idle = fineKeys -- statKeys
+    assert(idle.nonEmpty)
+    val degenerate = (idle.toSeq.map { case (sh, f) => (sh, f, 0, 5L, 0L) } :+
+        ((0, 99, 0, 5L, 1L))) // a fine cluster the model does not have
+      .toDF("shard", "fcl", "dim", "s", "n")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
+        .sortBy(t => (t._1, t._2)).toSeq
+    val clean = rows(Similarity.kmeansTwoLevelRefresh(fine, stats))
+    val noisy = rows(Similarity.kmeansTwoLevelRefresh(fine,
+      stats.unionByName(degenerate)))
+    assert(noisy === clean)
+    assert(clean.map(t => (t._1, t._2)).toSet === fineKeys)
+  }
+
   test("semDeDupWithinClusters past flatKMax routes through the hierarchy") {
     // flatKMax=1 forces the two-level trainer at any derived k; the
     // planted dup pairs must still collapse to their min id and the

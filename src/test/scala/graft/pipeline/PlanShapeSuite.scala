@@ -354,12 +354,20 @@ class PlanShapeSuite extends AnyFunSuite {
   test("pageRank iteration moves compact rows: no product joins, no Expand") {
     val edges = spark.range(0, 32).select(
       (col("id") % 7).cast("string").as("src"),
-      ((col("id") + 3) % 7).cast("string").as("dst"))
-    val plan = physical(Graph.pageRank(edges, "src", "dst", 2))
-    assert(!plan.contains("CartesianProduct"),
-      s"rank-edge join fell back to a product:\n$plan")
-    // the only broadcasts are the 1-row base/n table
-    assert(!plan.contains("Expand"), s"unexpected expand:\n$plan")
+      ((col("id") + 3) % 7).cast("string").as("dst"),
+      (col("id") % 3 + 1).as("w"))
+    val seeds = spark.range(0, 3).select(col("id").cast("string").as("seed"))
+    val variants = Seq(
+      "pageRank" -> Graph.pageRank(edges, "src", "dst", 2),
+      "pageRankWeighted" -> Graph.pageRankWeighted(edges, "src", "dst", "w", 2),
+      "pageRankPersonalized" ->
+        Graph.pageRankPersonalized(edges, "src", "dst", seeds, "seed", 2))
+    for ((name, ranks) <- variants) {
+      val plan = physical(ranks)
+      assert(!plan.contains("CartesianProduct"),
+        s"$name: rank-edge join fell back to a product:\n$plan")
+      assert(!plan.contains("Expand"), s"$name: unexpected expand:\n$plan")
+    }
   }
 
   test("asof forward: inherits the single-exchange no-join shape") {
