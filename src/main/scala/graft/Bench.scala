@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
@@ -62,16 +64,7 @@ object Bench {
         case Some(sel) => SparkEntry.queries.filter { case (n, _) => sel(n) }.toSeq
         case None => SparkEntry.queries.toSeq
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Same session tz as Verify: the events() TIMESTAMP_NTZ->TIMESTAMP
-      // normalization must not depend on the host JVM default timezone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
     if (sys.env.get("SPARK_GRAFT_STAGE_LOG").exists(_ == "1")) {
       spark.sparkContext.addSparkListener(new StageLogListener)
     }
@@ -92,18 +85,22 @@ object Bench {
     // change still surfaces in the timed passes below as -1.
     benched.foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"warmup:$name")
-      try sink(fn(spark, sfDir)) catch { case _: Throwable => () }
+      try sink(fn(spark, sfDir)) catch { case NonFatal(_) => () }
       dropLeakedBlocks()
     }
     // Two timed passes (configurable), min per query: a single pass is
     // hostage to host contention on a shared machine (round-6 driver numbers
     // showed 2-3x one-off inflation on individual queries); the min of the
     // runs is the cleanest estimate of the plan's cost. A failed query
-    // reports -1.
+    // reports -1, and its exception goes to stderr.
     def timedPass(): Map[String, Double] = benched.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
-      val ok = try { sink(fn(spark, sfDir)); true } catch { case _: Throwable => false }
+      val ok = try { sink(fn(spark, sfDir)); true } catch {
+        case NonFatal(e) =>
+          System.err.println(s"bench: $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       dropLeakedBlocks()
       name -> (if (ok) dt else -1.0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -50,16 +50,9 @@ object GenScale {
     val copies = if (args.length > 2) args(2).toInt else 10
     require(copies >= 1, s"copies must be >= 1, got $copies")
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      // Same nanos convention as Bench/Verify: events.ts stays the raw
-      // long-nanos column byte-for-byte through the rewrite.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The nanos convention keeps events.ts the raw long-nanos column
+    // byte-for-byte through the rewrite.
+    val spark = LocalSession(32)
 
     def read(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

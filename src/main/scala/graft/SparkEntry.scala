@@ -432,15 +432,15 @@ object SparkEntry {
     }),
 
     "q47_xml_v2_scan" -> ((s, d) => {
-      // The DSv2 (`xmlng2`) read path: pruned + filter-pushed scan over XML
-      // written by the sink, joined to a second XML table WITHOUT a
-      // broadcast hint — the V2 scan reports its input size, so Catalyst
-      // auto-broadcasts the small side on its own.
+      // Read through the `xmlng2` name of the XML source: pruned +
+      // filter-pushed scan over XML written by the sink, joined to a second
+      // XML table WITHOUT a broadcast hint — the relation reports its input
+      // size, so Catalyst auto-broadcasts the small side on its own.
       val sfName = new java.io.File(d).getName
       val base = s"/tmp/graft_xml/$sfName"
       val sup = t(s, d, "supplier")
       val nat = t(s, d, "nation")
-      // input fixtures: setup, not the measured V2 scan (write-once)
+      // input fixtures: setup, not the measured scan (write-once)
       xmlInputOnce(sup, s"$base/v2sup", "s")
       xmlInputOnce(nat, s"$base/v2nat", "n")
       val supV2 = s.read.format("xmlng2").option("rowTag", "s").schema(sup.schema).load(s"$base/v2sup")

@@ -716,9 +716,9 @@ object Similarity {
     * table: the inline tier engages only when the table is non-empty,
     * covers shard ids EXACTLY {0..kCoarse−1} (count of distinct ids
     * alone is not enough — a malformed table with kCoarse ids outside
-    * the range, reachable through [[twoLevelSuffStats]] which does no
-    * bound validation of its own, must ride the join plan rather than
-    * throw at `byShard(sh)`), and holds at most
+    * the range, which a direct [[fineArgminServe]] caller can pass
+    * without the public entry points' shape validation, must ride the
+    * join plan rather than throw at `byShard(sh)`), and holds at most
     * [[FineInlineMaxElements]] stored elements. */
   private def fineInlineModel(cents: DataFrame, kCoarse: Int): FineInline = {
     val shape = cents
@@ -905,8 +905,24 @@ object Similarity {
       vecCol: String,
       coarse: Array[Array[Long]],
       fine: DataFrame,
-      kFine: Int): DataFrame = {
-    Dedup.requireIntegralId(df, idCol, "kmeansTwoLevelServe")
+      kFine: Int): DataFrame =
+    storedModelArgmin(df, idCol, vecCol, coarse, fine, kFine, "kmeansTwoLevelServe")
+      .select(col("id"),
+        (col("shard") * kFine + col("__m.fcl")).cast("int").as("cluster"),
+        col("__m.d2").as("d2"))
+
+  /** The serve path over a STORED model shared by [[kmeansTwoLevelServe]]
+    * and [[twoLevelSuffStats]]: shape validation, quantize, coarse argmin,
+    * fine argmin. Output (id, shard, __m struct(d2, fcl, qv)). */
+  private def storedModelArgmin(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      coarse: Array[Array[Long]],
+      fine: DataFrame,
+      kFine: Int,
+      caller: String): DataFrame = {
+    Dedup.requireIntegralId(df, idCol, caller)
     require(coarse.nonEmpty, "need at least one coarse centroid")
     require(kFine >= 1, s"kFine must be >= 1, got $kFine")
     val dim = coarse.head.length
@@ -914,7 +930,8 @@ object Similarity {
     // ONE driver row at any model size: stored-table bounds vs the
     // declared model shape — shard/fcl ranges, dim agreement, and full
     // shard coverage (every coarse shard must carry >= 1 fine centroid;
-    // the fit-side patch guarantees it, a hand-truncated table fails).
+    // the fit-side patch guarantees it, a hand-truncated table fails —
+    // without it, rows of a missing shard vanish in the fine join).
     // Memoized per stored-model DataFrame REFERENCE (the fineServeCache
     // convention): a micro-batch serve loop holds ONE frozen fine frame
     // across batches, and re-running this aggregate job per batch is pure
@@ -951,9 +968,6 @@ object Similarity {
         coarse)
       .select(col("id"), col("qv"), col("__best.cluster").as("shard"))
     fineArgminServe(sharded, fine, coarse.length)
-      .select(col("id"),
-        (col("shard") * kFine + col("__m.fcl")).cast("int").as("cluster"),
-        col("__m.d2").as("d2"))
   }
 
   /** Deterministic bounded FIT sample: the first `maxFitRows` corpus
@@ -1044,10 +1058,11 @@ object Similarity {
    * Sufficient statistics of a FROZEN two-level model over a corpus
    * slice — [[kmeansSuffStats]] generalized to the hierarchy: each row
    * assigns through the stored model ([[kmeansTwoLevelServe]]'s exact
-   * coarse-then-fine argmin), and the output is the (shard, fcl, dim,
-   * s, n) micro-sum table. Stats from disjoint slices ADD (plain sums),
-   * so the fine table refreshes from daily batches without re-touching
-   * history — union the stat tables, [[kmeansTwoLevelRefresh]], done;
+   * coarse-then-fine argmin, after the same shape validation, so a
+   * truncated model fails instead of dropping rows), and the output is
+   * the (shard, fcl, dim, s, n) micro-sum table. Stats from disjoint
+   * slices ADD (plain sums), so the fine table refreshes from daily
+   * batches without re-touching history — union the stat tables, [[kmeansTwoLevelRefresh]], done;
    * exactly equal to a one-step refresh over the full corpus (the q243
    * gate). Driver state: the coarse matrix only; stats and centroids
    * stay DataFrame-resident at any k.
@@ -1058,22 +1073,12 @@ object Similarity {
       vecCol: String,
       coarse: Array[Array[Long]],
       fine: DataFrame,
-      kFine: Int): DataFrame = {
-    Dedup.requireIntegralId(df, idCol, "twoLevelSuffStats")
-    require(coarse.nonEmpty, "need at least one coarse centroid")
-    require(kFine >= 1, s"kFine must be >= 1, got $kFine")
-    val sharded = bestAssign(
-        df.select(col(idCol).cast("long").as("id"),
-          transform(col(vecCol).cast("array<double>"),
-            x => round(x * lit(1000000.0)).cast("long")).as("qv")),
-        coarse)
-      .select(col("id"), col("qv"), col("__best.cluster").as("shard"))
-    fineArgminServe(sharded, fine, coarse.length)
+      kFine: Int): DataFrame =
+    storedModelArgmin(df, idCol, vecCol, coarse, fine, kFine, "twoLevelSuffStats")
       .select(col("shard"), col("__m.fcl").as("fcl"),
         posexplode(col("__m.qv")).as(Seq("dim", "q")))
       .groupBy(col("shard"), col("fcl"), col("dim"))
       .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-  }
 
   /** Fine-table refresh from merged [[twoLevelSuffStats]] tables: one
     * truncating div per (shard, fcl, dim); fine clusters absent from

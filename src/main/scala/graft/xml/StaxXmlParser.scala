@@ -56,39 +56,30 @@ private[graft] object StaxXmlParser {
   }
 
   /**
-   * Distributed entry point: one task parses its partition's records.
+   * Distributed entry point: one task parses its partition's records —
+   * XSD validation (when configured), the StAX parse, and parse-mode
+   * malformed handling, one record at a time.
    * Emits Catalyst [[InternalRow]]s directly (UTF8String / micros / epoch
    * days) so the relation can declare `needConversion = false` and skip the
    * per-row external→internal conversion layer entirely.
    */
-  def parse(xml: RDD[String], schema: StructType, options: XmlOptions): RDD[InternalRow] = {
-    xml.mapPartitions(parseIterator(_, schema, options))
-  }
-
-  /**
-   * Per-partition entry point shared by the RDD path above and the DSv2
-   * [[graft.xml.v2.XmlPartitionReader]]: XSD validation (when configured),
-   * the StAX parse, and parse-mode malformed handling, one record at a time.
-   */
-  def parseIterator(
-      iter: Iterator[String],
-      schema: StructType,
-      options: XmlOptions): Iterator[InternalRow] = {
-    val validator = options.rowValidationXSDPath.map(ValidatorUtil.forPath)
-    iter.flatMap { record =>
-      val valid =
-        try { validator.foreach(ValidatorUtil.validate(_, record)); true }
-        catch {
-          case NonFatal(e) => options.parseMode match {
-            case ParseMode.FailFast =>
-              throw new IllegalArgumentException(s"Record failed XSD validation: $record", e)
-            case _ => false
+  def parse(xml: RDD[String], schema: StructType, options: XmlOptions): RDD[InternalRow] =
+    xml.mapPartitions { iter =>
+      val validator = options.rowValidationXSDPath.map(ValidatorUtil.forPath)
+      iter.flatMap { record =>
+        val valid =
+          try { validator.foreach(ValidatorUtil.validate(_, record)); true }
+          catch {
+            case NonFatal(e) => options.parseMode match {
+              case ParseMode.FailFast =>
+                throw new IllegalArgumentException(s"Record failed XSD validation: $record", e)
+              case _ => false
+            }
           }
-        }
-      if (valid) parseRecord(record, schema, options)
-      else handleMalformed(record, schema, options, partial = None)
+        if (valid) parseRecord(record, schema, options)
+        else handleMalformed(record, schema, options, partial = None)
+      }
     }
-  }
 
   /** Single-string parse to internal form (backs `from_xml`). */
   def parseColumn(xml: String, schema: StructType, options: XmlOptions): InternalRow =

@@ -26,16 +26,16 @@ private[graft] object XmlFile {
    * input into at least defaultParallelism splits, bounded by [4 MB
    * open-cost, 128 MB]. FileInputFormat otherwise splits at the filesystem
    * block size (32 MB on local disks), which leaves most cores idle on
-   * inputs in the 100 MB range. Involves a driver-side listing — compute
-   * once per relation and pass the result to [[read]] (XmlRelation caches
-   * it across inference + every buildScan); None when the listing fails or
-   * an explicit user setting should win.
+   * inputs in the 100 MB range. `totalBytes` comes from a driver-side
+   * [[totalInputBytes]] listing (XmlRelation lists once and shares it with
+   * its size estimate); None when the listing failed or an explicit user
+   * setting should win.
    */
-  def splitMaxSizeFor(sc: SparkContext, path: String): Option[Long] = {
+  def splitMaxSizeFor(sc: SparkContext, totalBytes: => Option[Long]): Option[Long] = {
     if (sc.hadoopConfiguration.get("mapreduce.input.fileinputformat.split.maxsize") != null) {
       return None
     }
-    totalInputBytes(sc.hadoopConfiguration, path).map { total =>
+    totalBytes.map { total =>
       val target = math.max(1, sc.defaultParallelism)
       math.min(128L << 20, math.max(4L << 20, total / target))
     }
@@ -44,7 +44,8 @@ private[graft] object XmlFile {
   /** Raw record strings for `path`, split-parallel; computes split sizing
    *  here (explicit `splitMaxBytes` option, else the packing policy). */
   def read(sc: SparkContext, path: String, options: XmlOptions): RDD[String] =
-    read(sc, path, options, options.splitMaxBytes.orElse(splitMaxSizeFor(sc, path)))
+    read(sc, path, options, options.splitMaxBytes.orElse(
+      splitMaxSizeFor(sc, totalInputBytes(sc.hadoopConfiguration, path))))
 
   /** Raw record strings for `path`, split-parallel, with sizing precomputed
    *  by the caller (XmlRelation computes once and reuses across inference +
@@ -184,7 +185,8 @@ private[graft] object XmlFile {
     }
   }
 
-  /** Shared with the V2 write path (same option, same short names). */
+  /** `codec` option value (a short name or a codec class name) to its
+   *  class; shared with [[XmlPartitioned]]'s writer. */
   private[graft] def resolveCodec(name: String): Class[_ <: CompressionCodec] = {
     val shortNames = Map(
       "gzip" -> "org.apache.hadoop.io.compress.GzipCodec",

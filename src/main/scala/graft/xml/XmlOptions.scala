@@ -82,18 +82,9 @@ class XmlOptions(@transient private val raw: Map[String, String]) extends Serial
    * without mutating the shared SparkContext configuration.
    */
   val splitMaxBytes: Option[Long] = get("splitMaxBytes").map(_.toLong)
-  /**
-   * Roll V2 sink output to a new part file every N records (extra over the
-   * reference surface; the V2 counterpart of Spark's own
-   * `spark.sql.files.maxRecordsPerFile`, which only applies to FileFormat
-   * sinks). Bounds the size of any single object at 100-TB scale — each
-   * rolled file is still a complete, independently parseable XML document.
-   */
-  val maxRecordsPerFile: Option[Long] = get("maxRecordsPerFile").map(_.toLong)
 
   require(rowTag.nonEmpty, "'rowTag' option must not be empty")
   require(splitMaxBytes.forall(_ > 0), "'splitMaxBytes' must be positive")
-  require(maxRecordsPerFile.forall(_ > 0), "'maxRecordsPerFile' must be positive")
   require(rootTag.nonEmpty, "'rootTag' option must not be empty")
   require(!rowTag.startsWith("<") && !rowTag.endsWith(">"),
     "'rowTag' must not include angle brackets")

@@ -92,12 +92,14 @@ case class XmlRelation(
 
   private val options = XmlOptions(parameters)
 
-  // One driver-side listing per relation, shared by inference and every
-  // buildScan (each would otherwise re-list the input to size splits). An
-  // explicit splitMaxBytes option skips the listing entirely.
+  // One driver-side listing per relation, shared by the size estimate,
+  // inference and every buildScan (each would otherwise re-list the input).
+  @transient private lazy val inputBytes: Option[Long] =
+    XmlFile.totalInputBytes(sqlContext.sparkContext.hadoopConfiguration, location)
+
   @transient private lazy val splitMaxSize: Option[Long] =
     options.splitMaxBytes.orElse(
-      XmlFile.splitMaxSizeFor(sqlContext.sparkContext, location))
+      XmlFile.splitMaxSizeFor(sqlContext.sparkContext, inputBytes))
 
   private def baseRDD(): RDD[String] =
     XmlFile.read(sqlContext.sparkContext, location, options, splitMaxSize)
@@ -106,6 +108,16 @@ case class XmlRelation(
     val inferred = InferSchema.infer(baseRDD(), options)
     if (options.inferSchema) inferred
     else InferSchema.stringOnly(inferred).asInstanceOf[StructType]
+  }
+
+  // HadoopFsRelation's rule: input bytes scaled by the session's
+  // fileCompressionFactor. Raw XML overstates in-memory row width, so the
+  // estimate errs large; it lets Catalyst auto-broadcast a small XML table,
+  // which the BaseRelation default (spark.sql.defaultSizeInBytes) never does.
+  override def sizeInBytes: Long = inputBytes match {
+    case Some(bytes) =>
+      (bytes * sqlContext.sparkSession.sessionState.conf.fileCompressionFactor).toLong
+    case None => super.sizeInBytes
   }
 
   // The parser emits InternalRow directly; telling Spark so skips the
@@ -160,6 +172,8 @@ case class XmlRelation(
     val path = new Path(location)
     val fs = path.getFileSystem(sqlContext.sparkContext.hadoopConfiguration)
     if (overwrite) {
+      // A bad codec must fail before the old output is deleted.
+      options.codec.foreach(XmlFile.resolveCodec)
       if (fs.exists(path)) fs.delete(path, true)
       XmlFile.save(data, location, options)
     } else {
@@ -173,6 +187,7 @@ case class XmlRelation(
  * DSv1 registration: `spark.read.format("graft.xml").…` or the short name
  * `xmlng` (distinct from Spark 4's built-in `xml` source)
  * (reference: src/main/scala/com/databricks/spark/xml/DefaultSource.scala:29-111).
+ * `xmlng2` names the same source ([[XmlNg2Source]]).
  */
 class DefaultSource
   extends RelationProvider
@@ -291,6 +306,8 @@ class DefaultSource
     val exists = fs.exists(path)
     val doSave = mode match {
       case SaveMode.Overwrite =>
+        // A bad codec must fail before the old output is deleted.
+        options.codec.foreach(XmlFile.resolveCodec)
         if (exists) fs.delete(path, true)
         true
       case SaveMode.ErrorIfExists if exists =>
@@ -305,6 +322,9 @@ class DefaultSource
     createRelation(sqlContext, parameters, data.schema)
   }
 }
+
+/** The short name `xmlng2` for [[DefaultSource]]: same relation, same scan. */
+class XmlNg2Source extends DefaultSource { override def shortName(): String = "xmlng2" }
 
 object DefaultSource {
   /** Plan-time → start-time schema handoff: (path, sorted options) ->

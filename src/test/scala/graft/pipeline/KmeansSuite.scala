@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -366,13 +367,18 @@ class KmeansSuite extends AnyFunSuite {
     assert(served.count() === 6L)
     // Stored-model guards (the q233/q234 modulus-hazard convention): a
     // hand-truncated table (missing shard) and an out-of-range declared
-    // kFine both refuse loudly instead of silently mis-assigning.
-    val truncated = fine.where(col("shard") === 0)
-    val e1 = intercept[IllegalArgumentException] {
-      Similarity.kmeansTwoLevelServe(vecs, "id", "v", coarse, truncated,
-        kFine = 2)
+    // kFine both refuse loudly instead of silently mis-assigning. Serve
+    // and suff-stats each validate: without it, suff-stats rows of the
+    // missing shard vanish in the fine join and the stats come out smaller.
+    Seq[DataFrame => DataFrame](
+      Similarity.kmeansTwoLevelServe(vecs, "id", "v", coarse, _, kFine = 2),
+      Similarity.twoLevelSuffStats(vecs, "id", "v", coarse, _, kFine = 2)
+    ).foreach { serve =>
+      val e1 = intercept[IllegalArgumentException] {
+        serve(fine.where(col("shard") === 0))
+      }
+      assert(e1.getMessage.contains("truncated"))
     }
-    assert(e1.getMessage.contains("truncated"))
     val badFcl = fine.withColumn("fcl", col("fcl") + 5)
     val e2 = intercept[IllegalArgumentException] {
       Similarity.kmeansTwoLevelServe(vecs, "id", "v", coarse, badFcl,
@@ -504,11 +510,11 @@ class KmeansSuite extends AnyFunSuite {
 
   test("fineArgminServe: out-of-range shard ids ride the join plan, never throw") {
     // kCoarse DISTINCT shard ids that are NOT {0..kCoarse-1} — the shape
-    // a malformed stored table can reach through twoLevelSuffStats
-    // (which validates nothing). The count-only coverage check would
-    // admit it to the inline tier and die at byShard(3); the bound check
-    // must route it to the join plan, whose per-row join semantics
-    // simply find no candidates for absent shards.
+    // a malformed stored table has when fineArgminServe is called without
+    // the public entry points' shape validation. The count-only coverage
+    // check would admit it to the inline tier and die at byShard(3); the
+    // bound check must route it to the join plan, whose per-row join
+    // semantics simply find no candidates for absent shards.
     val sharded = Seq(
       (0L, Seq(0L, 0L), 1), (1L, Seq(1000000L, 0L), 2), (2L, Seq(0L, 500000L), 3)
     ).toDF("id", "qv", "shard")

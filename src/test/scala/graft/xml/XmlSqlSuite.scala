@@ -32,6 +32,17 @@ class XmlSqlSuite extends AnyFunSuite {
          |OPTIONS (path "$target", rowTag "r")""".stripMargin)
     val rows = spark.sql("SELECT k, v FROM xml_target2 ORDER BY k").collect()
     assert(rows.toSeq === Seq(Row(1L, "one"), Row(2L, "two")))
+
+    // A bad codec fails the overwrite before the old files are deleted.
+    spark.sql(
+      s"""CREATE OR REPLACE TEMPORARY VIEW xml_target_bad
+         |USING graft.xml
+         |OPTIONS (path "$target", rowTag "r", codec "no.such.Codec")""".stripMargin)
+    val e = intercept[Exception] {
+      spark.sql("INSERT OVERWRITE TABLE xml_target_bad SELECT * FROM src")
+    }
+    assert(e.toString.contains("no.such.Codec"), e.toString)
+    assert(spark.sql("SELECT k, v FROM xml_target2 ORDER BY k").collect().toSeq === rows.toSeq)
   }
 
   test("SaveMode.ErrorIfExists and Ignore") {

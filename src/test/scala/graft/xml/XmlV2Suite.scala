@@ -3,24 +3,33 @@ package graft.xml
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{RowDataSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.sources.EqualTo
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The DSv2 `xmlng2` read path: row identity with DSv1, pruning/pushdown
- *  through the connector API, reported statistics driving auto-broadcast. */
+/** The three names of the XML source — `graft.xml`, `xmlng` and `xmlng2` —
+ *  plan the same DSv1 [[XmlRelation]] scan: identical rows and schemas,
+ *  pruning and pushdown into that scan, and a reported input size that lets
+ *  a small XML table auto-broadcast. The `v2` in the spec names is the
+ *  `xmlng2` name, which once selected a separate DataSource V2 source. */
 class XmlV2Suite extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
+  private val formats = Seq("graft.xml", "xmlng", "xmlng2")
+
+  private def name(i: Int): String = if (i % 100 == 0) "alice" else s"user$i"
+
   private lazy val dataDir: String = {
     val xml = new StringBuilder("<rows>\n")
     (0 until 1000).foreach { i =>
-      val name = if (i % 100 == 0) "alice" else s"user$i"
       xml.append(
-        s"""<r id="$i"><name>$name</name><n>$i</n><note>note &amp; $i</note></r>\n""")
+        s"""<r id="$i"><name>${name(i)}</name><n>$i</n><note>note &amp; $i</note></r>\n""")
     }
     xml.append("</rows>\n")
     val dir = Files.createTempDirectory("graft_v2")
@@ -34,53 +43,76 @@ class XmlV2Suite extends AnyFunSuite {
     StructField("n", LongType),
     StructField("note", StringType)))
 
-  private def v1: DataFrame =
-    spark.read.format("xmlng").option("rowTag", "r").schema(schema).load(dataDir)
-  private def v2: DataFrame =
-    spark.read.format("xmlng2").option("rowTag", "r").schema(schema).load(dataDir)
+  private def read(format: String): DataFrame =
+    spark.read.format(format).option("rowTag", "r").schema(schema).load(dataDir)
 
-  private def batchScan(plan: SparkPlan): BatchScanExec =
-    plan.collectFirst { case b: BatchScanExec => b }
-      .getOrElse(fail(s"no BatchScanExec in:\n$plan"))
+  private def v1: DataFrame = read("xmlng")
+
+  private def sorted(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+
+  /** The plan's XML scan: always the DSv1 row scan over [[XmlRelation]]. */
+  private def xmlScan(plan: SparkPlan): RowDataSourceScanExec = {
+    assert(plan.collectFirst { case b: BatchScanExec => b }.isEmpty,
+      s"XML read planned a BatchScanExec:\n$plan")
+    plan.collectFirst {
+      case s: RowDataSourceScanExec if s.relation.isInstanceOf[XmlRelation] => s
+    }.getOrElse(fail(s"no XmlRelation scan in:\n$plan"))
+  }
 
   test("v2 rows are identical to v1") {
-    val a = v1.collect().map(_.toSeq).sortBy(_.toString)
-    val b = v2.collect().map(_.toSeq).sortBy(_.toString)
-    assert(b === a)
-    assert(v2.count() === 1000)
+    val expected = (0 until 1000).map(i =>
+      Seq[Any](i.toLong, name(i), i.toLong, s"note & $i")).sortBy(_.toString)
+    formats.foreach { f =>
+      xmlScan(read(f).queryExecution.executedPlan)
+      assert(sorted(read(f)) === expected, f)
+    }
   }
 
   test("v2 infers the same schema as v1") {
-    val s1 = spark.read.format("xmlng").option("rowTag", "r").load(dataDir).schema
-    val s2 = spark.read.format("xmlng2").option("rowTag", "r").load(dataDir).schema
-    assert(s2 === s1)
+    val inferred = formats.map(f =>
+      spark.read.format(f).option("rowTag", "r").load(dataDir).schema)
+    assert(inferred.distinct.size === 1, inferred)
+    assert(inferred.head.fieldNames.toSet === schema.fieldNames.toSet)
   }
 
   test("column pruning reaches the v2 scan") {
-    val q = v2.select("name", "n")
-    val scan = batchScan(q.queryExecution.executedPlan)
-    assert(scan.scan.readSchema().fieldNames.toSeq === Seq("name", "n"))
-    assert(q.agg(sum("n")).collect().head.getLong(0) === (0 until 1000).sum.toLong)
+    formats.foreach { f =>
+      val q = read(f).select("name", "n")
+      val scan = xmlScan(q.queryExecution.executedPlan)
+      assert(scan.requiredSchema.fieldNames.toSeq === Seq("name", "n"), f)
+      assert(q.agg(sum("n")).collect().head.getLong(0) === (0 until 1000).sum.toLong, f)
+    }
   }
 
   test("string filters surface as pushed filters and results stay exact") {
-    val q = v2.filter(col("name") === "alice").select("n")
-    val scan = batchScan(q.queryExecution.executedPlan)
-    assert(scan.scan.description().contains("alice"),
-      s"expected pushed filter in: ${scan.scan.description()}")
-    assert(q.collect().map(_.getLong(0)).sorted.toSeq ===
-      (0 until 1000 by 100).map(_.toLong))
-    // Escapable value: not compiled into the pre-test, still exact.
-    assert(v2.filter(col("note") === "note & 7").count() === 1)
+    formats.foreach { f =>
+      val q = read(f).filter(col("name") === "alice").select("n")
+      val scan = xmlScan(q.queryExecution.executedPlan)
+      assert(scan.filters.contains(EqualTo("name", "alice")),
+        s"$f: expected pushed filter in ${scan.filters}")
+      assert(q.collect().map(_.getLong(0)).sorted.toSeq ===
+        (0 until 1000 by 100).map(_.toLong), f)
+      // Escapable value: not compiled into the pre-test, still exact.
+      assert(read(f).filter(col("note") === "note & 7").count() === 1, f)
+    }
   }
 
   test("v2 scan reports input size so a small XML table auto-broadcasts") {
     val big = spark.range(0, 10000).selectExpr("id", "id % 1000 as n")
-    val joined = big.join(v2.select("n", "name"), "n")
-    val hasBroadcast = joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin") ||
-      joined.queryExecution.executedPlan.toString.contains("BroadcastExchange")
-    assert(hasBroadcast, s"expected auto-broadcast:\n${joined.queryExecution.executedPlan}")
-    assert(joined.count() === 10000)
+    formats.foreach { f =>
+      val joined = big.join(read(f).select("n", "name"), "n")
+      // The pre-exchange physical plan: the XML side must be the build
+      // (broadcast) side. Without a size the relation reads as
+      // spark.sql.defaultSizeInBytes and only the range side could be built.
+      val plan = joined.queryExecution.sparkPlan
+      val bhj = plan.collectFirst { case j: BroadcastHashJoinExec => j }
+        .getOrElse(fail(s"$f: expected a broadcast hash join:\n$plan"))
+      val build = if (bhj.buildSide == BuildRight) bhj.right else bhj.left
+      assert(build.exists(_.isInstanceOf[RowDataSourceScanExec]),
+        s"$f: XML side is not the broadcast side:\n$plan")
+      assert(joined.count() === 10000, f)
+    }
   }
 
   test("DROPMALFORMED drops the same rows through v2") {
@@ -92,149 +124,95 @@ class XmlV2Suite extends AnyFunSuite {
         |</rows>""".stripMargin
     val dir = Files.createTempDirectory("graft_v2_bad")
     Files.write(dir.resolve("bad.xml"), xml.getBytes("UTF-8"))
-    def read(fmt: String) = spark.read.format(fmt)
-      .option("rowTag", "r").option("mode", "DROPMALFORMED")
-      .schema(schema).load(dir.toString)
     // Projection away from the corrupt field must not change which rows
     // exist (full-schema parse + projection under DROPMALFORMED).
-    val got = read("xmlng2").select("name").collect().map(_.getString(0)).sorted
-    assert(got.toSeq === Seq("a", "c"))
-    assert(got.toSeq === read("xmlng").select("name").collect().map(_.getString(0)).sorted.toSeq)
+    formats.foreach { f =>
+      val got = spark.read.format(f)
+        .option("rowTag", "r").option("mode", "DROPMALFORMED")
+        .schema(schema).load(dir.toString)
+        .select("name").collect().map(_.getString(0)).sorted
+      assert(got.toSeq === Seq("a", "c"), f)
+    }
   }
 
   test("multi-split v2 read returns every record exactly once") {
-    val q = spark.read.format("xmlng2")
-      .option("rowTag", "r").option("splitMaxBytes", "2048")
-      .schema(schema).load(dataDir)
-    assert(q.rdd.getNumPartitions > 4, s"expected many splits, got ${q.rdd.getNumPartitions}")
-    val ids = q.select("_id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === (0L until 1000L))
+    formats.foreach { f =>
+      val q = spark.read.format(f)
+        .option("rowTag", "r").option("splitMaxBytes", "2048")
+        .schema(schema).load(dataDir)
+      assert(q.rdd.getNumPartitions > 4, s"$f: expected many splits, got ${q.rdd.getNumPartitions}")
+      val ids = q.select("_id").collect().map(_.getLong(0)).sorted
+      assert(ids.toSeq === (0L until 1000L), f)
+    }
   }
 
-  // ---- V2 write path ----
+  // ---- write path: `graft.xml` and its `xmlng2` name ----
+
+  private val writeFormats = Seq("graft.xml", "xmlng2")
 
   private def freshDir(): String =
     Files.createTempDirectory("graft_v2w").resolve("out").toString
 
-  private def writeV2(df: DataFrame, out: String, mode: String,
+  private def write(format: String, df: DataFrame, out: String,
       extra: (String, String)*): Unit = {
-    var w = df.write.format("xmlng2")
-      .option("rowTag", "r").option("rootTag", "rows").mode(mode)
+    var w = df.write.format(format)
+      .option("rowTag", "r").option("rootTag", "rows").mode("overwrite")
     extra.foreach { case (k, v) => w = w.option(k, v) }
     w.save(out)
   }
 
+  private def partFiles(out: String): Seq[String] =
+    new java.io.File(out).listFiles.map(_.getName).filter(_.startsWith("part-")).sorted.toSeq
+
   private def readBack(out: String): DataFrame =
     spark.read.format("xmlng").option("rowTag", "r").schema(schema).load(out)
 
-  test("v2 write: append round-trips through both readers, with _SUCCESS") {
-    val out = freshDir()
-    writeV2(v1, out, "append")
-    val files = new java.io.File(out).listFiles.map(_.getName).sorted
-    assert(files.contains("_SUCCESS"))
-    assert(!files.exists(_.contains("staging")), s"staging leaked: ${files.toSeq}")
-    val a = v1.collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(readBack(out).collect().map(_.toSeq).sortBy(_.toString).toSeq === a)
-    val viaV2 = spark.read.format("xmlng2").option("rowTag", "r")
-      .schema(schema).load(out)
-    assert(viaV2.collect().map(_.toSeq).sortBy(_.toString).toSeq === a)
-  }
-
-  test("v2 write: overwrite truncates at commit, append accumulates") {
-    val out = freshDir()
-    writeV2(v1.limit(10), out, "append")
-    writeV2(v1.limit(15), out, "append")
-    assert(readBack(out).count() === 25) // two appends accumulate
-    writeV2(v1.limit(7), out, "overwrite")
-    assert(readBack(out).count() === 7) // overwrite replaced everything
-  }
-
   test("v2 write: empty dataset still publishes a readable skeleton") {
-    val out = freshDir()
-    // several empty tasks: only partition 0 writes the document skeleton
-    writeV2(v1.limit(0).repartition(3), out, "append")
-    val parts = new java.io.File(out).listFiles
-      .map(_.getName).filter(_.startsWith("part-"))
-    assert(parts.length === 1, s"expected one skeleton file, got ${parts.toSeq}")
-    assert(readBack(out).count() === 0)
-  }
-
-  test("v2 write: task failure aborts cleanly, old data stays intact") {
-    val out = freshDir()
-    writeV2(v1.limit(10), out, "append")
-    val before = readBack(out).collect().map(_.toSeq).sortBy(_.toString).toSeq
-    val bomb = org.apache.spark.sql.functions.udf { (id: Long) =>
-      if (id == 500L) throw new RuntimeException("boom"); id
+    writeFormats.foreach { f =>
+      val out = freshDir()
+      write(f, v1.limit(0).repartition(3), out)
+      assert(readBack(out).count() === 0, f)
     }
-    val failing = v1.withColumn("_id", bomb(col("_id")))
-    intercept[Exception] { writeV2(failing, out, "overwrite") }
-    // overwrite truncates only at commit, which never ran: data unchanged
-    assert(readBack(out).collect().map(_.toSeq).sortBy(_.toString).toSeq === before)
-    val leftover = new java.io.File(out).listFiles.map(_.getName)
-    assert(!leftover.exists(_.contains("staging")),
-      s"staging dir survived abort: ${leftover.toSeq}")
   }
 
   test("v2 write: gzip codec compresses parts that read back identically") {
-    val out = freshDir()
-    writeV2(v1.limit(50), out, "append", "codec" -> "gzip")
-    val parts = new java.io.File(out).listFiles.map(_.getName)
-      .filter(_.startsWith("part-"))
-    assert(parts.nonEmpty && parts.forall(_.endsWith(".xml.gz")), s"${parts.toSeq}")
-    assert(readBack(out).count() === 50)
+    writeFormats.foreach { f =>
+      val out = freshDir()
+      write(f, v1.where(col("n") < 50), out, "codec" -> "gzip")
+      val parts = partFiles(out)
+      assert(parts.nonEmpty && parts.forall(_.endsWith(".gz")), s"$f: $parts")
+      assert(sorted(readBack(out)) === sorted(v1.where(col("n") < 50)), f)
+    }
   }
 
   test("v2 write: 64 partitions publish 64 parts, every row exactly once") {
-    val out = freshDir()
-    writeV2(v1.repartition(64), out, "append")
-    val parts = new java.io.File(out).listFiles.map(_.getName)
-      .filter(_.startsWith("part-")).sorted
-    assert(parts.length === 64, s"${parts.length} parts")
-    // names carry the zero-padded partition id: stable, collision-free
-    assert(parts.head.startsWith("part-00000-") && parts.last.startsWith("part-00063-"))
-    val ids = readBack(out).select("_id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === (0L until 1000L))
-  }
-
-  test("v2 write: maxRecordsPerFile rolls complete documents, no row lost") {
-    val out = freshDir()
-    // 1000 rows over 4 tasks, 100-record roll: 250 per task → 3 files each
-    writeV2(v1.repartition(4), out, "append", "maxRecordsPerFile" -> "100")
-    val parts = new java.io.File(out).listFiles.map(_.getName)
-      .filter(_.startsWith("part-")).sorted
-    assert(parts.length === 12, s"expected 12 rolled files, got ${parts.toSeq}")
-    // per-partition file seq is part of the name: part-PPPPP-cSSS-...
-    assert(parts.count(_.startsWith("part-00000-c")) === 3)
-    // every rolled file is a complete, independently parseable document
-    val one = spark.read.format("xmlng").option("rowTag", "r")
-      .schema(schema).load(new java.io.File(out, parts.head).toString)
-    assert(one.count() === 100)
-    val ids = readBack(out).select("_id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === (0L until 1000L))
-    // rolling composes with overwrite-at-commit
-    writeV2(v1.limit(10), out, "overwrite", "maxRecordsPerFile" -> "3")
-    assert(readBack(out).count() === 10)
-    val after = new java.io.File(out).listFiles.map(_.getName)
-      .filter(_.startsWith("part-"))
-    assert(after.length === 4, s"ceil(10/3) = 4 files, got ${after.toSeq}")
+    writeFormats.foreach { f =>
+      val out = freshDir()
+      write(f, v1.repartition(64), out)
+      val parts = partFiles(out)
+      assert(parts.length === 64, s"$f: ${parts.length} parts")
+      // names carry the zero-padded partition id: stable, collision-free
+      assert(parts.head === "part-00000" && parts.last === "part-00063", s"$f: $parts")
+      val ids = readBack(out).select("_id").collect().map(_.getLong(0)).sorted
+      assert(ids.toSeq === (0L until 1000L), f)
+    }
   }
 
   test("v2 write: bad charset/codec fail on the driver at plan time") {
-    val e1 = intercept[Exception] {
-      writeV2(v1.limit(1), freshDir(), "append", "charset" -> "no-such-charset")
+    writeFormats.foreach { f =>
+      // Overwrite targets that already hold data: a refused write must
+      // leave it in place.
+      val out = freshDir()
+      write(f, v1.where(col("n") < 5), out)
+      val e1 = intercept[Exception] {
+        write(f, v1.limit(1), out, "charset" -> "no-such-charset")
+      }
+      assert(e1.toString.toLowerCase.contains("charset"), e1.toString)
+      val e2 = intercept[Exception] {
+        write(f, v1.limit(1), out, "codec" -> "no.such.Codec")
+      }
+      assert(e2.toString.contains("no.such.Codec"), e2.toString)
+      assert(readBack(out).count() === 5, s"$f: a failed overwrite lost the old output")
     }
-    assert(e1.toString.toLowerCase.contains("charset"), e1.toString)
-    val e2 = intercept[Exception] {
-      writeV2(v1.limit(1), freshDir(), "append", "codec" -> "no.such.Codec")
-    }
-    assert(e2.toString.contains("no.such.Codec"), e2.toString)
-  }
-
-  test("v2 write: default ErrorIfExists mode is rejected with guidance") {
-    // The V2 contract for non-catalog providers: only append/overwrite.
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      v1.limit(1).write.format("xmlng2").option("rowTag", "r").save(freshDir())
-    }
-    assert(e.getMessage.toLowerCase.contains("errorifexists"))
   }
 }
