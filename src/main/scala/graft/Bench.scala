@@ -125,48 +125,29 @@ object Bench {
     // /tmp path another user could pre-create or symlink) so the round's
     // end-of-round commit preserves the full result.
     println(json)
-    // Two on-disk copies: the stable BENCH_full.json name, and the round
-    // artifact BENCH_r{NN}.json the judge reads — the driver's stdout tail
-    // truncated mid-JSON three rounds running, so the round file must not
-    // depend on the tail. The round number is one past the highest
-    // BENCH_r*/CORRECTNESS_r* already on disk (whichever the driver has
-    // written so far this round).
-    // A filtered run is an A/B probe, not the round's bench — it must
-    // never overwrite the round artifact. The round number keys off
-    // CORRECTNESS files ONLY: counting BENCH_r files too would let an
-    // earlier full run THIS round (which already wrote BENCH_r{N}) push
-    // the driver's own end-of-round bench to BENCH_r{N+1}, stranding the
-    // judge's BENCH_r{N} on the truncated stdout tail. CORRECTNESS_r{N}
-    // is driver-written exactly once per round, so max+1 is stable
-    // whether this bench runs before or after it.
-    val roundFile = if (onlyQueries.isDefined) None else Some {
-      val rx = "CORRECTNESS_r(\\d+)\\.json".r
-      val seen = Option(new java.io.File(".").list()).getOrElse(Array.empty)
-        .collect { case rx(n) => n.toInt }
-      f"BENCH_r${seen.foldLeft(0)(math.max) + 1}%02d.json"
-    }
-    // Same rule for the stable name: BENCH_full.json is the canonical
-    // LAST COMPLETE SUITE result (VERDICT r14 hygiene / ADVICE r15 —
-    // a one-query scale probe overwrote the 235-query capture twice).
-    // Filtered runs land in BENCH_partial.json unless the caller routes
-    // them explicitly via SPARK_GRAFT_BENCH_OUT.
+    // The on-disk copy is the canonical LAST COMPLETE SUITE result, one
+    // per core count, so an 8-core run never overwrites the 32-core
+    // capture (VERDICT r14 hygiene / ADVICE r15 — a one-query scale probe
+    // overwrote the 235-query capture twice). Filtered runs land in
+    // BENCH_partial.json unless the caller routes them explicitly via
+    // SPARK_GRAFT_BENCH_OUT.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (onlyQueries.isDefined) "BENCH_partial.json" else "BENCH_full.json")
-    for (path <- (Seq(outPath) ++ roundFile).distinct) {
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch {
-        case e: java.io.IOException =>
-          System.err.println(s"bench: could not write $path: $e")
-      }
+      if (onlyQueries.isDefined) "BENCH_partial.json"
+      else if (cpus.toInt == 32) "BENCH_full.json"
+      else s"BENCH_full_c${cpus.toInt}.json")
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } catch {
+      case e: java.io.IOException =>
+        System.err.println(s"bench: could not write $outPath: $e")
     }
     // Compact FINAL line: at 255 queries the full JSON line is ~11 KB, far
     // past the driver's 2000-char stdout tail, so rounds 17-18 came back
     // with parsed:null and an empty PERF per_query block. This summary is
     // ~120 bytes and printed LAST so any tail capture ends with one complete,
     // parseable JSON object; the per-query map lives in the full line above
-    // and in the on-disk copies named here.
+    // and in the on-disk copy named here.
     println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","full":"$outPath"}""")
     spark.stop()
   }
