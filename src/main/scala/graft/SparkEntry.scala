@@ -3913,8 +3913,8 @@ object SparkEntry {
 
     "q142_pagerank_redistribute" -> ((s, d) => {
       // The standard (mass-conserving) PageRank: dangling mass
-      // redistributes equally each round — one extra 1-row sink-mass
-      // aggregate per iteration, same integer parts-per-1e12 seams, so
+      // redistributes equally each round — one extra driver-side sink-mass
+      // sum per iteration, same integer parts-per-1e12 seams, so
       // the DuckDB iteration CTEs (now with a dangling term) still
       // replay bit-for-bit. Same planted graph as q136.
       Graph.pageRankRedistributing(plantedDomainEdges(s, d), "src", "dst",

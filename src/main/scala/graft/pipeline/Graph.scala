@@ -1,16 +1,21 @@
 package graft.pipeline
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types._
 
 /**
  * Link-graph centrality for corpus curation: web-scale training sets
  * weight documents by the standing of their host (the CommonCrawl
  * harmonic/PageRank-centrality signal), and a crawler's frontier
  * prioritizes by it. This is the batch fixed-point computation, done the
- * Spark way: ranks and degrees are DataFrames keyed by node, one
- * edge-keyed equi-join + one dst aggregate per iteration — never an
- * adjacency matrix, never driver-side state.
+ * Spark way: per-node state partitioned by node, one co-partitioned pass
+ * over the edges + one dst aggregate per iteration — never an adjacency
+ * matrix, never a driver-side copy of the graph.
  *
  * Determinism: all arithmetic is INTEGER (rank mass in parts-per-1e12,
  * damping in permille, truncating `div` at every seam — the q107
@@ -21,14 +26,15 @@ import org.apache.spark.sql.functions._
  * by one unit per node per iteration) — acceptable for a ranking signal,
  * and exactly reproducible.
  *
- * Scale shape per iteration: contributions = ranks ⋈ edges on src (hash
- * join on the edge key), one aggregate on dst, one left join back to the
- * node table for sinks — compact (node, long) rows only. All four
- * PageRank variants run one kernel ([[rankKernel]]); plan depth is
- * O(iterations), and lineage truncates with a `localCheckpoint` per
- * round when the recurrence reads the previous ranks twice or runs deep
- * (the [[Dedup.connectedComponents]] discipline), so a 50-iteration run
- * doesn't hand Catalyst a 50-deep plan to re-analyze per action.
+ * Scale shape per iteration: all four PageRank variants run one kernel
+ * ([[rankKernel]]). Its prep (edge cleaning or weighting, seeds, degrees)
+ * is DataFrame code; its rounds run co-partitioned RDDs in the shape of
+ * Spark's own PageRank example — the edge rows shuffle once per call and
+ * stay put, and a round is one partition-local pass over them, one
+ * `reduceByKey` on dst, and one partition-local zip back onto the nodes,
+ * over compact (node, long) pairs. Each round's state is
+ * `localCheckpoint`ed, so a task's lineage is one round deep at any
+ * iteration count, and Catalyst never plans a round at all.
  */
 object Graph {
 
@@ -130,8 +136,8 @@ object Graph {
    * The standard PageRank formulation: dangling (sink) mass is
    * REDISTRIBUTED equally to every node each iteration instead of
    * dropped, so total mass is conserved up to truncation remainders.
-   * The dangling sum is an exact int64 aggregate (a broadcast 1-row
-   * frame) and every node's share is one truncating `div`:
+   * The dangling sum is an exact int64 total (one driver-side `Long` per
+   * round) and every node's share is one truncating `div`:
    *
    * rank_{k+1}(v) = ((1000−d) · (Total div N)) div 1000
    *   + (d · (Σ_{u→v} (rank_k(u) div outdeg(u)) + dangling_k div N)) div 1000
@@ -163,29 +169,25 @@ object Graph {
    * with S = `seeds` ∩ nodes, or every node when `seeds` is None, and
    * the bracketed dangling term only when `redistribute`.
    *
-   * Shape. The edges and the invariant frame are each materialized once
-   * (lazy `localCheckpoint`): every round re-embeds them in the rank
-   * frame's plan, so a derived edge list (q199's co-occurrence graph)
-   * would otherwise hand Catalyst hundreds of Exchange nodes to re-analyze
-   * per action, and a per-round checkpoint would re-run the node distinct
-   * and out-weight aggregate in every round's segment. The frame holds
-   * (node, __wout, __tele) — __wout is the out-weight sum, null for
-   * sinks — and its teleport terms fold to literals from ONE driver-side
-   * count (|S|; N when S is every node). Ranks carry __wout, so a round
-   * is: ranks with __wout ⋈ edges on src, one `sum(__u · __w)` on dst,
-   * the frame left-joined to it (cross-joined to the sink sum when
-   * redistributing) — compact (node, __wout, rank) rows only. An empty graph
-   * returns an empty (node, rank_ppt) frame.
-   *
-   * Lineage rule. The rank frame localCheckpoints every round exactly
-   * when the plan would otherwise grow super-linearly in iterations —
-   * redistribution reads the previous ranks TWICE per round (contributions
-   * and the dangling sum), so its plan doubles per round (measured 2.8× at
-   * 5 iterations) — or when the run is deep (> 10 rounds, where
-   * re-analyzing an ever-deeper linear chain starts to dominate).
-   * Shallow single-read runs skip it: per-round materialization cost
-   * ~1.8× on a 5-iteration run (measured r12). Values are identical
-   * either way; only plan depth changes.
+   * Shape. The prep stays in DataFrames: the weighted edges are
+   * materialized once (lazy `localCheckpoint`), and the node frame
+   * (node, W_u, [v ∈ S]) derives from them. The rounds run on RDDs
+   * co-partitioned by one `HashPartitioner` over the session's shuffle
+   * partitions: the nodes in one block per partition (materialized by
+   * the one driver-side job that counts N and |S|), the rank state as
+   * one array per partition aligned with its block, and the edge rows
+   * keyed by src, shuffled once. A round is a partition-local pass that
+   * hashes the partition's (node, rank div W_u) and streams the edge rows
+   * against it, one `reduceByKey` on dst into the same partitioner, and a
+   * partition-local zip of the sums back onto the node block. The
+   * dangling sum is one driver-side `Long` per round, read from the
+   * materialized state (so the redistributing variant runs one job per
+   * round; the others run none until the caller's action). Every round's
+   * state is `localCheckpoint`ed and a shuffle separates consecutive
+   * rounds, so no task's lineage holds more than one round, and once
+   * materialized a state truncates everything before it: the first
+   * action computes each round once, later actions read the last state.
+   * An empty graph returns an empty (node, rank_ppt) frame.
    */
   private def rankKernel(
       weightedEdges: DataFrame,
@@ -196,48 +198,122 @@ object Graph {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampingPermille >= 0 && dampingPermille <= 1000,
       s"dampingPermille must be in [0, 1000], got $dampingPermille")
+    val nodeType = nodesOf(weightedEdges).schema("node").dataType
+    val key = nodeKey(nodeType)
     val e = weightedEdges.localCheckpoint(eager = false)
-    val nodes = e.select(col("__src").as("node"))
-      .unionByName(e.select(col("__dst").as("node")))
-      .distinct()
-    val flagged = seeds.fold(nodes.withColumn("__tele", lit(true)))(s =>
-      nodes.join(s.withColumn("__tele", lit(true)), Seq("node"), "left"))
+    val flagged = seeds.fold(nodesOf(e).withColumn("__tele", lit(true)))(s =>
+      nodesOf(e).join(s.withColumn("__tele", lit(true)), Seq("node"), "left"))
     val frame = flagged
       .join(e.groupBy(col("__src").as("node")).agg(sum(col("__w")).as("__wout")),
         Seq("node"), "left")
-      .select(col("node"), col("__wout"),
+      .select(col("node"), coalesce(col("__wout"), lit(0L)).as("__wout"),
         coalesce(col("__tele"), lit(false)).as("__tele"))
-      .localCheckpoint(eager = false)
-    lazy val n = frame.count()
-    val sn = if (seeds.isEmpty) n else frame.where(col("__tele")).count()
+
+    val spark = e.sparkSession
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val blocks = frame.queryExecution.toRdd
+      .map(r => (key(r, 0), (r.getLong(1), r.getBoolean(2))))
+      .partitionBy(part)
+      .mapPartitions { it =>
+        val ns = it.toArray
+        Iterator.single(NodeBlock(ns.map(_._1), ns.map(_._2._1), ns.map(_._2._2)))
+      }
+      .localCheckpoint()
+    val Array(n, sn, seedSinks) = blocks
+      .map(b => Array(b.keys.length.toLong, b.tele.count(identity).toLong,
+        b.keys.indices.count(i => b.tele(i) && b.wout(i) == 0L).toLong))
+      .reduce((x, y) => x.zip(y).map { case (a, b) => a + b })
     if (sn == 0) {
       require(seeds.isEmpty, "no seed survives the intersection with the graph's nodes")
       return frame.select(col("node"), lit(0L).as("rank_ppt"))
     }
-    val share = Total / sn // Total, sn > 0: Scala / == SQL div here
-    def teleport(v: Long) = when(col("__tele"), lit(v)).otherwise(lit(0L))
-    val base = frame.select(col("node"), col("__wout"),
-      teleport((1000L - dampingPermille) * share / 1000L).as("__base"))
-    val perRound = redistribute || iterations > 10
+    val edges = e.select(col("__src").cast(nodeType), col("__dst").cast(nodeType), col("__w"))
+      .queryExecution.toRdd
+      .map(r => (key(r, 0), (key(r, 1), r.getLong(2))))
+      .setName(EdgeRows)
+      .partitionBy(part)
+      .localCheckpoint()
 
-    var ranks = frame.select(col("node"), col("__wout"), teleport(share).as("rank_ppt"))
-    for (_ <- 1 to iterations) {
-      val contribs = ranks.where(col("__wout").isNotNull)
-        .select(col("node"), expr("rank_ppt div __wout").as("__u"))
-        .join(e, col("node") === col("__src"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(col("__u") * col("__w")).as("__in"))
-      val (next, inflow) =
-        if (!redistribute) (base, "coalesce(__in, 0L)")
-        else (base.crossJoin(broadcast(ranks.where(col("__wout").isNull)
-            .agg(coalesce(sum(col("rank_ppt")), lit(0L)).as("__dang")))),
-          s"coalesce(__in, 0L) + __dang div ${n}L")
-      ranks = next.join(contribs, Seq("node"), "left")
-        .select(col("node"), col("__wout"),
-          expr(s"__base + ($dampingPermille * ($inflow)) div 1000").as("rank_ppt"))
-      if (perRound) ranks = ranks.localCheckpoint(eager = false)
+    val share = Total / sn // Total, sn > 0: Scala / == SQL div here
+    val base = (1000L - dampingPermille) * share / 1000L
+    val d = dampingPermille.toLong
+    var ranks: RDD[Array[Long]] = blocks.map(_.tele.map(t => if (t) share else 0L))
+    var dangling = seedSinks * share // Σ_{sinks u} rank_0(u)
+    for (k <- 1 to iterations) {
+      val inflow = blocks.zipPartitions(ranks, edges) { (bs, rs, es) =>
+        val (b, r) = (bs.next(), rs.next())
+        val unit = new java.util.HashMap[Any, Long](2 * b.keys.length)
+        for (i <- b.keys.indices if b.wout(i) > 0L) unit.put(b.keys(i), r(i) / b.wout(i))
+        es.map { case (src, (dst, w)) => (dst, unit.get(src) * w) }
+      }.reduceByKey(part, _ + _)
+      val spread = if (redistribute) dangling / n else 0L
+      ranks = blocks.zipPartitions(inflow) { (bs, in) =>
+        val b = bs.next()
+        val sums = new java.util.HashMap[Any, Long]
+        in.foreach { case (v, s) => sums.put(v, s) }
+        Iterator.single(Array.tabulate(b.keys.length) { i =>
+          (if (b.tele(i)) base else 0L) + d * (sums.getOrDefault(b.keys(i), 0L) + spread) / 1000L
+        })
+      }.localCheckpoint()
+      if (redistribute && k < iterations)
+        dangling = blocks.zipPartitions(ranks) { (bs, rs) =>
+          val (b, r) = (bs.next(), rs.next())
+          Iterator.single(b.keys.indices.filter(b.wout(_) == 0L).map(r(_)).sum)
+        }.reduce(_ + _)
     }
-    ranks.select(col("node"), col("rank_ppt"))
+
+    val out = blocks.zipPartitions(ranks) { (bs, rs) =>
+      val (b, r) = (bs.next(), rs.next())
+      b.keys.indices.iterator.map(i => InternalRow(nodeValue(b.keys(i)), r(i)))
+    }
+    Bridge.internalCreateDataFrame(spark, out,
+      StructType(Seq(frame.schema("node"), StructField("rank_ppt", LongType))))
+  }
+
+  /** The distinct endpoints of an edge list, as one `node` column. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("__src").as("node"))
+      .unionByName(e.select(col("__dst").as("node")))
+      .distinct()
+
+  /** Name of the keyed edge rows before [[rankKernel]]'s one edge shuffle. */
+  private[pipeline] val EdgeRows = "rankKernel edge rows by src"
+
+  /** One partition's nodes in a fixed order: hash key, out-weight W_u
+    * (0 for a sink) and whether the node is in the teleport set. */
+  private final case class NodeBlock(keys: Array[Any], wout: Array[Long], tele: Array[Boolean])
+
+  /** A binary node as a hash key: arrays hash and compare by identity,
+    * SQL compares them by content. */
+  private final case class BinaryNode(bytes: Array[Byte]) {
+    override def equals(o: Any): Boolean = o match {
+      case BinaryNode(other) => java.util.Arrays.equals(bytes, other)
+      case _ => false
+    }
+    override def hashCode: Int = java.util.Arrays.hashCode(bytes)
+  }
+
+  /**
+   * The round loop's hash key for a node value, such that two values are
+   * one key exactly when Spark SQL's `=` makes them one node: UTF8String
+   * (binary collation) and boxed integrals compare and hash by content,
+   * binary rides [[BinaryNode]]. Types SQL equates through a normalizing
+   * rule (floating −0.0/NaN, collated strings) or structurally (struct,
+   * array, map, decimal) are refused, so no node ever splits in two.
+   */
+  private def nodeKey(t: DataType): (InternalRow, Int) => Any = t match {
+    case s: StringType if s.collationId == StringType.collationId =>
+      (r, i) => r.getUTF8String(i).clone()
+    case ByteType | ShortType | IntegerType | LongType => (r, i) => r.get(i, t)
+    case BinaryType => (r, i) => BinaryNode(r.getBinary(i))
+    case other => throw new IllegalArgumentException(
+      s"PageRank node columns of type ${other.catalogString} are not supported: " +
+        "use string, integral or binary node ids")
+  }
+
+  private def nodeValue(k: Any): Any = k match {
+    case BinaryNode(bytes) => bytes
+    case v => v
   }
 
   /**
@@ -253,8 +329,7 @@ object Graph {
    * new frontier, one anti-join against the known set — all on compact
    * (node) longs; the frontier shrinks to empty on converged graphs and
    * later rounds cost scheduling only. The known set is read twice per
-   * round (anti-join + union), so lineage truncates every round (the
-   * [[rankKernel]] double-read rule).
+   * round (anti-join + union), so lineage truncates every round.
    */
   def hopDistances(
       edges: DataFrame,

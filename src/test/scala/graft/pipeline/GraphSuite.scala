@@ -272,11 +272,8 @@ class GraphSuite extends AnyFunSuite {
       "a" -> "b", "b" -> "c", "c" -> "a", "d" -> "a", "a" -> "d", "e" -> "sink")
     val got = runRedist(edges, 20)
     assert(got === replayRedist(edges, 20))
-    // plain variant too: past 10 rounds it checkpoints every round, which
-    // must not change values
+    // every variant checkpoints every round, which must not change values
     assert(run(edges, 20) === replay(edges, 20))
-    // personalized variant deep-iterates under the default (per-round)
-    // checkpoint convention too, and values match the replay exactly
     val pers = Graph.pageRankPersonalized(edges.toDF("src", "dst"), "src",
         "dst", Seq("a", "e").toDF("source"), "source", iterations = 20)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -398,5 +395,127 @@ class GraphSuite extends AnyFunSuite {
     val nodes = Graph.pageRankWeighted(e2, "src", "dst", "w", iterations = 1)
       .collect().map(_.getString(0)).toSet
     assert(nodes === Set("A", "B"))
+  }
+
+  private val SampleGraph = Seq(
+    "a" -> "b", "b" -> "c", "c" -> "a", "d" -> "a", "d" -> "b", "e" -> "sink", "a" -> "sink")
+
+  /** Jobs `body` runs, and how many of its stages shuffle [[Graph.EdgeRows]].
+    * Listener events arrive asynchronously but in order, so a marked
+    * sentinel job closes the window. */
+  private def sparkWork(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val edgeShuffles = new java.util.concurrent.atomic.AtomicInteger
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("graft.sentinel") != null)
+          closed.countDown()
+        else jobs.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (s.stageInfo.rddInfos.exists(_.name == Graph.EdgeRows)) edgeShuffles.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.sentinel", null)
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      (jobs.get, edgeShuffles.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("pageRank rounds cost at most 2 jobs each over a fixed set-up; edges shuffle once") {
+    // Set-up: the prep's query stages, the node count, the caller's
+    // collect. Rounds add no plan, only RDD work; the redistributing
+    // variant adds one dangling-mass job per round.
+    val SetUp = 6
+    for ((name, variant, replayed) <- Seq(
+        ("pageRankRedistributing",
+          (n: Int) => runRedist(SampleGraph, n), replayRedist(SampleGraph, 5)),
+        ("pageRank", (n: Int) => run(SampleGraph, n), replay(SampleGraph, 5)))) {
+      var got = Map.empty[String, Long]
+      val (jobs5, shuffles5) = sparkWork { got = variant(5) }
+      val (jobs1, shuffles1) = sparkWork(variant(1))
+      assert(got === replayed, name)
+      assert(jobs5 <= SetUp + 2 * 5, s"$name: $jobs5 jobs for 5 rounds")
+      assert(jobs5 - jobs1 <= 2 * 4, s"$name: $jobs1 jobs for 1 round, $jobs5 for 5")
+      assert(shuffles5 === 1 && shuffles1 === 1,
+        s"$name: edge rows shuffled $shuffles1 times in 1 round, $shuffles5 in 5")
+    }
+  }
+
+  /** Every PageRank variant over [[SampleGraph]] with its node ids
+    * re-encoded by `enc`, decoded back by `dec`, next to its string replay. */
+  private def variantsOver(enc: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+      dec: Any => String): Seq[(String, Map[String, Long], Map[String, Long])] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val df = SampleGraph.toDF("src", "dst")
+      .select(enc(col("src")).as("src"), enc(col("dst")).as("dst"))
+    val seeds = Seq("a", "e").toDF("seed").select(enc(col("seed")).as("seed"))
+    def decoded(r: org.apache.spark.sql.DataFrame) =
+      r.collect().map(row => dec(row.get(0)) -> row.getLong(1)).toMap
+    Seq(
+      ("pageRank", decoded(Graph.pageRank(df, "src", "dst", 4)), replay(SampleGraph, 4)),
+      ("pageRankRedistributing", decoded(Graph.pageRankRedistributing(df, "src", "dst", 4)),
+        replayRedist(SampleGraph, 4)),
+      ("pageRankWeighted",
+        decoded(Graph.pageRankWeighted(df.withColumn("w", lit(1L)), "src", "dst", "w", 4)),
+        replayWeighted(SampleGraph.map { case (a, b) => (a, b, 1L) }, 4)),
+      ("pageRankPersonalized",
+        decoded(Graph.pageRankPersonalized(df, "src", "dst", seeds, "seed", 4)),
+        replayPersonalized(SampleGraph, Set("a", "e"), 4)))
+  }
+
+  test("long and binary node ids: every variant matches the replay, no node splits") {
+    import org.apache.spark.sql.functions.{element_at, typedLit}
+    val ids = (SampleGraph.map(_._1) ++ SampleGraph.map(_._2)).distinct
+      .zipWithIndex.map { case (v, i) => v -> 1000L * i }.toMap
+    val byId = ids.map(_.swap)
+    val longs = variantsOver(element_at(typedLit(ids), _), x => byId(x.asInstanceOf[Long]))
+    // every row reads its own array: content-equal ids must still be one node
+    val binary = variantsOver(_.cast("binary"),
+      x => new String(x.asInstanceOf[Array[Byte]], "UTF-8"))
+    for ((name, got, want) <- longs ++ binary) assert(got === want, name)
+  }
+
+  test("node columns SQL equates by a normalizing or structural rule are refused") {
+    import org.apache.spark.sql.functions._
+    val base = SampleGraph.toDF("src", "dst")
+    for ((kind, e) <- Seq(
+        "double" -> base.select(lit(0.0).as("src"), lit(-0.0).as("dst")),
+        "struct" -> base.select(struct(col("src").as("id")).as("src"),
+          struct(col("dst").as("id")).as("dst")),
+        "array" -> base.select(array(col("src")).as("src"), array(col("dst")).as("dst")),
+        "collated string" -> base.select(collate(col("src"), "UTF8_LCASE").as("src"),
+          collate(col("dst"), "UTF8_LCASE").as("dst")))) {
+      val err = intercept[IllegalArgumentException](Graph.pageRank(e, "src", "dst", 1))
+      assert(err.getMessage.contains(e.schema("src").dataType.catalogString), s"$kind: $err")
+    }
+  }
+
+  test("output schema and the empty graph are unchanged by the round loop") {
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType.simpleString, f.nullable)).toSeq
+    val strings = SampleGraph.toDF("src", "dst")
+    val longs = Seq(1L -> 2L, 2L -> 3L).toDF("src", "dst")
+    assert(shape(Graph.pageRank(strings, "src", "dst", 2)) ===
+      Seq(("node", "string", true), ("rank_ppt", "bigint", true)))
+    assert(shape(Graph.pageRankRedistributing(longs, "src", "dst", 2)) ===
+      Seq(("node", "bigint", false), ("rank_ppt", "bigint", true)))
+    val empty = Graph.pageRank(longs.where("src < 0"), "src", "dst", 2)
+    assert(shape(empty) === Seq(("node", "bigint", false), ("rank_ppt", "bigint", false)))
+    assert(empty.count() === 0L)
+  }
+
+  test("60 iterations: deep runs finish and match the replay") {
+    val deep = SampleGraph :+ ("sink" -> "sink2")
+    assert(runRedist(deep, 60) === replayRedist(deep, 60))
+    val weighted = deep.zipWithIndex.map { case ((a, b), i) => (a, b, 1L + i % 3) }
+    val got = Graph.pageRankWeighted(weighted.toDF("src", "dst", "w"), "src", "dst", "w", 60)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got === replayWeighted(weighted, 60))
   }
 }

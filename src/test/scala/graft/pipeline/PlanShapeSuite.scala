@@ -351,6 +351,30 @@ class PlanShapeSuite extends AnyFunSuite {
       s"carry join fell back to a product:\n$plan")
   }
 
+  /** The RDDs of `df`'s lineage down to its checkpoints, and the shuffle
+    * dependencies between them. */
+  private def lineage(df: org.apache.spark.sql.DataFrame)
+      : (Seq[org.apache.spark.rdd.RDD[_]], Seq[org.apache.spark.ShuffleDependency[_, _, _]]) = {
+    val seen = scala.collection.mutable.LinkedHashMap.empty[Int, org.apache.spark.rdd.RDD[_]]
+    def walk(r: org.apache.spark.rdd.RDD[_]): Unit =
+      if (!seen.contains(r.id)) { seen(r.id) = r; r.dependencies.foreach(d => walk(d.rdd)) }
+    walk(df.queryExecution.toRdd)
+    val rdds = seen.values.toSeq
+    (rdds, rdds.flatMap(_.dependencies).collect {
+      case d: org.apache.spark.ShuffleDependency[_, _, _] => d
+    }.distinct)
+  }
+
+  /** The rank loop runs outside Catalyst: the result's plan is one scan of
+    * the loop's RDD, with no join, exchange, broadcast, product or Expand
+    * for the optimizer to re-plan per round. */
+  private def assertBareScan(name: String, ranks: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = physical(ranks)
+    assert(plan.contains("Scan ExistingRDD"), s"$name: no RDD scan:\n$plan")
+    for (op <- Seq("Join", "Exchange", "Broadcast", "CartesianProduct", "Expand"))
+      assert(!plan.contains(op), s"$name: unexpected $op:\n$plan")
+  }
+
   test("pageRank iteration moves compact rows: no product joins, no Expand") {
     val edges = spark.range(0, 32).select(
       (col("id") % 7).cast("string").as("src"),
@@ -363,10 +387,16 @@ class PlanShapeSuite extends AnyFunSuite {
       "pageRankPersonalized" ->
         Graph.pageRankPersonalized(edges, "src", "dst", seeds, "seed", 2))
     for ((name, ranks) <- variants) {
-      val plan = physical(ranks)
-      assert(!plan.contains("CartesianProduct"),
-        s"$name: rank-edge join fell back to a product:\n$plan")
-      assert(!plan.contains("Expand"), s"$name: unexpected expand:\n$plan")
+      assertBareScan(name, ranks)
+      val (rdds, shuffles) = lineage(ranks)
+      assert(!rdds.exists(_.getClass.getSimpleName == "CartesianRDD"),
+        s"$name: rank-edge pass fell back to a product")
+      // the edge rows shuffle once, each round shuffles only its per-dst
+      // sums (map-side combined), and all of them land on one partitioner
+      assert(shuffles.size === 1 + 2, s"$name: ${shuffles.size} shuffles for 2 rounds")
+      assert(shuffles.count(_.mapSideCombine) === 2, s"$name: rounds must combine map-side")
+      assert(shuffles.map(_.partitioner).distinct.size === 1,
+        s"$name: rounds are not co-partitioned: ${shuffles.map(_.partitioner)}")
     }
   }
 
@@ -384,13 +414,23 @@ class PlanShapeSuite extends AnyFunSuite {
   }
 
   test("redistributing pageRank: dangling aggregate broadcasts, no products") {
+    // The dangling mass is one driver-side Long per round, read from the
+    // materialized state: no broadcast, no product, and every round but
+    // the last is already checkpointed, so lineage is one round deep at
+    // any iteration count.
     val edges = spark.range(0, 32).select(
       (col("id") % 7).cast("string").as("src"),
       ((col("id") + 3) % 7).cast("string").as("dst"))
-    val plan = physical(Graph.pageRankRedistributing(edges, "src", "dst", 2))
-    assert(!plan.contains("CartesianProduct"),
-      s"rank-edge join fell back to a product:\n$plan")
-    assert(!plan.contains("Expand"), s"unexpected expand:\n$plan")
+    for (iterations <- Seq(2, 4)) {
+      val ranks = Graph.pageRankRedistributing(edges, "src", "dst", iterations)
+      assertBareScan(s"$iterations rounds", ranks)
+      val (rdds, shuffles) = lineage(ranks)
+      assert(!rdds.exists(_.getClass.getSimpleName == "CartesianRDD"),
+        s"$iterations rounds: dangling term fell back to a product")
+      assert(shuffles.size === 2 && shuffles.count(_.mapSideCombine) === 1,
+        s"$iterations rounds: lineage must hold the edge shuffle and one round, " +
+          s"got ${shuffles.size} shuffles")
+    }
   }
 
   test("token JS divergence: count tables align on one (group, token) join, no Expand") {

@@ -22,7 +22,8 @@ BENCHMARK.json, each side's median and quartiles, the pairs the change won
     -          none of these.
 Only xmlbench/ and BENCHMARK.json of each checkout are used; the repository
 itself is only read. The checkouts are removed at the end; the log of every
-run (its stderr) stays in the work directory.
+run (its stderr) stays in the work directory, and so does a copy of the
+build log of each side's failed runs (build-SIDE-seedN.log).
 """
 import argparse
 import json
@@ -61,12 +62,24 @@ def run(side_dir, workload, seed, seconds, trace, log):
     p = subprocess.run(cmd, cwd=side_dir, capture_output=True, text=True)
     log.write(f"$ (cd {side_dir} && {' '.join(cmd)})  exit {p.returncode}\n{p.stderr[-4000:]}\n")
     lines = p.stdout.strip().splitlines()
-    if p.returncode != 0 or not lines:
-        return None
     try:
-        return json.loads(lines[-1])
+        if p.returncode == 0 and lines:
+            return json.loads(lines[-1])
     except json.JSONDecodeError:
-        return None
+        pass
+    keep_build_log(side_dir, seed)
+    return None
+
+
+def keep_build_log(side_dir, seed):
+    """Copies a failed run's build log next to the run log: the checkout it
+    lives in is removed at the end, and run.py's error message points into it."""
+    build_log = side_dir / "xmlbench" / ".work" / "build.log"
+    if build_log.exists():
+        kept = side_dir.parent / f"build-{side_dir.name}-seed{seed}.log"
+        shutil.copy2(build_log, kept)
+        print(f"[ab] {side_dir.name} run failed; its build log is kept at {kept}",
+              file=sys.stderr, flush=True)
 
 
 def quartiles(xs):
