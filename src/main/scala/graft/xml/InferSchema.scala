@@ -1,7 +1,5 @@
 package graft.xml
 
-import java.io.StringReader
-
 import javax.xml.stream.{XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable
@@ -111,75 +109,86 @@ private[graft] object InferSchema {
   }
 
   def inferRecord(record: String, options: XmlOptions): DataType = {
-    val reader = StaxFactories.get.createXMLStreamReader(new StringReader(record))
-    try {
-      while (reader.getEventType != XMLStreamConstants.START_ELEMENT && reader.hasNext) {
-        reader.next()
-      }
-      inferElement(reader, options)
-    } finally reader.close()
+    val reader = StaxXmlParser.openRecord(record)
+    try inferElement(reader, options)
+    finally reader.close()
   }
 
   /**
    * Infers the type of the element the reader is positioned on, consuming it.
    * Result is one of: NullType (empty), a scalar type, or StructType whose
    * fields cover attributes (prefixed), children, and optionally valueTag.
+   * The attribute buffer, child map, repeated set and text builder exist
+   * only for an element that has attributes, children, repeated children or
+   * text split over more than one event: a plain leaf allocates none.
    */
   private def inferElement(reader: XMLStreamReader, options: XmlOptions): DataType = {
     import XMLStreamConstants._
 
-    val attrFields = mutable.ArrayBuffer.empty[(String, DataType)]
-    if (!options.excludeAttribute) {
+    var attrFields: mutable.ArrayBuffer[StructField] = null
+    val attributes = if (options.excludeAttribute) 0 else reader.getAttributeCount
+    if (attributes > 0) {
+      attrFields = new mutable.ArrayBuffer[StructField](attributes)
       var i = 0
-      while (i < reader.getAttributeCount) {
+      while (i < attributes) {
         val name = options.attributePrefix + stripNs(reader.getAttributeLocalName(i), options)
-        attrFields += name -> inferLeaf(reader.getAttributeValue(i), options)
+        attrFields += StructField(name, inferLeaf(reader.getAttributeValue(i), options))
         i += 1
       }
     }
 
-    val children = mutable.LinkedHashMap.empty[String, DataType]
-    val repeated = mutable.Set.empty[String]
-    val text = new StringBuilder
+    var children: mutable.LinkedHashMap[String, DataType] = null
+    var repeated: mutable.Set[String] = null
+    var text = ""
+    var moreText: java.lang.StringBuilder = null
     var done = false
     while (!done && reader.hasNext) {
       reader.next() match {
         case START_ELEMENT =>
           val name = stripNs(reader.getLocalName, options)
           val childType = inferElement(reader, options)
+          if (children == null) children = mutable.LinkedHashMap.empty[String, DataType]
           children.get(name) match {
             case Some(existing) =>
+              if (repeated == null) repeated = mutable.Set.empty[String]
               repeated += name
               children(name) = compatibleType(options)(existing, childType)
             case None =>
               children(name) = childType
           }
         case CHARACTERS | CDATA =>
-          if (!reader.isWhiteSpace) text ++= reader.getText
+          if (!reader.isWhiteSpace) {
+            if (text.isEmpty && moreText == null) text = reader.getText
+            else {
+              if (moreText == null) moreText = new java.lang.StringBuilder(text)
+              moreText.append(reader.getText)
+            }
+          }
         case END_ELEMENT | END_DOCUMENT => done = true
         case _ =>
       }
     }
 
-    val textStr0 = text.result()
+    val textStr0 = if (moreText != null) moreText.toString else text
     val textStr = if (options.ignoreSurroundingSpaces) textStr0.trim else textStr0
 
-    if (children.isEmpty && attrFields.isEmpty) {
+    if (children == null && attrFields == null) {
       // Plain leaf.
       if (textStr.isEmpty) NullType else inferLeaf(textStr, options)
     } else {
-      val fields = mutable.ArrayBuffer.empty[(String, DataType)]
-      fields ++= attrFields
-      children.foreach { case (name, dt) =>
-        val finalType = if (repeated(name)) wrapArray(dt) else dt
-        fields += name -> finalType
+      val fields = if (attrFields != null) attrFields else mutable.ArrayBuffer.empty[StructField]
+      if (children != null) {
+        val repeats = repeated // a var the closure captured would be boxed on every call
+        children.foreach { case (name, dt) =>
+          fields += StructField(name, if (repeats != null && repeats(name)) wrapArray(dt) else dt)
+        }
       }
       // Text beside attributes/elements → valueTag (mixed content: struct wins,
       // text recorded only when there are no child elements).
-      if (textStr.nonEmpty && children.isEmpty) {
-        fields += options.valueTag -> inferLeaf(textStr, options)
+      if (textStr.nonEmpty && children == null) {
+        fields += StructField(options.valueTag, inferLeaf(textStr, options))
       }
-      StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) }.toSeq)
+      StructType(fields.toArray)
     }
   }
 
@@ -264,24 +273,4 @@ private[graft] object InferSchema {
     case ArrayType(et, _) => ArrayType(stringOnly(et))
     case _ => StringType
   }
-}
-
-/** Shared thread-local StAX input factories (not thread-safe per spec). */
-private[graft] object StaxFactories {
-  import javax.xml.stream.XMLInputFactory
-  private val tl = new ThreadLocal[XMLInputFactory] {
-    override def initialValue(): XMLInputFactory = {
-      val f = XMLInputFactory.newInstance()
-      f.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, false)
-      f.setProperty(XMLInputFactory.IS_COALESCING, true)
-      f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-      f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-      // SJSXP reader recycling (see StaxXmlParser): per-thread sequential
-      // parses, so instance reuse is safe; other impls reject and allocate.
-      try f.setProperty("reuse-instance", java.lang.Boolean.TRUE)
-      catch { case _: IllegalArgumentException => }
-      f
-    }
-  }
-  def get: javax.xml.stream.XMLInputFactory = tl.get()
 }

@@ -36,6 +36,12 @@ import org.apache.spark.unsafe.types.UTF8String
 private[graft] object StaxXmlParser {
   import XMLStreamConstants._
 
+  /** One StAX input factory per thread (a factory is not thread-safe),
+   *  shared by the parse and by inference. `XMLInputFactory.newInstance()`
+   *  resolves to Hadoop's shaded Woodstox, which the Spark classpath
+   *  registers as the StAX service; XmlSuite pins that class, since another
+   *  implementation would change how malformed records fail. Woodstox has no
+   *  reader recycling, so every record gets a fresh reader. */
   private val factories = new ThreadLocal[XMLInputFactory] {
     override def initialValue(): XMLInputFactory = {
       val f = XMLInputFactory.newInstance()
@@ -43,16 +49,67 @@ private[graft] object StaxXmlParser {
       f.setProperty(XMLInputFactory.IS_COALESCING, true)
       f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
       f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-      // The JDK's SJSXP recycles its reader instance across
-      // createXMLStreamReader calls when asked, skipping ~10 allocations +
-      // buffer setup per record. Safe here: the factory is thread-local and
-      // every parse completes before the next begins on a thread (parses
-      // never nest — expression arguments are evaluated strictly). Other
-      // StAX impls reject the property; that's fine, they just allocate.
-      try f.setProperty("reuse-instance", java.lang.Boolean.TRUE)
-      catch { case _: IllegalArgumentException => }
       f
     }
+  }
+
+  private[xml] def inputFactory: XMLInputFactory = factories.get()
+
+  /** A reader over `record`, positioned on its first START_ELEMENT (or at
+   *  the end, if it has none). */
+  private[xml] def openRecord(record: String): XMLStreamReader = {
+    val reader = factories.get().createXMLStreamReader(new StringReader(record))
+    try {
+      while (reader.getEventType != START_ELEMENT && reader.hasNext) reader.next()
+      reader
+    } catch {
+      case NonFatal(e) => reader.close(); throw e
+    }
+  }
+
+  /**
+   * A struct's field ordinals by name, and those of the struct under each
+   * field (through arrays and map values), built once per task, or once per
+   * `from_xml` expression, and passed down the parse: `StructType` has no
+   * O(1) name lookup. A repeated name resolves to its last field.
+   * Attributes are looked up by their name without `attributePrefix`, so a
+   * lookup concatenates and hashes no new string.
+   */
+  private[xml] final class FieldOrdinals(val schema: StructType, options: XmlOptions) {
+    private val byName = new java.util.HashMap[String, Integer](schema.length * 2)
+    private val byAttribute = new java.util.HashMap[String, Integer](schema.length * 2)
+    schema.fields.indices.foreach { i =>
+      val name = schema.fields(i).name
+      byName.put(name, i)
+      if (name.startsWith(options.attributePrefix)) {
+        byAttribute.put(name.substring(options.attributePrefix.length), i)
+      }
+    }
+
+    private def find(map: java.util.HashMap[String, Integer], name: String): Int = {
+      val v = map.get(name)
+      if (v == null) -1 else v.intValue
+    }
+
+    def apply(name: String): Int = find(byName, name)
+
+    /** The field of the attribute `name`, given without `attributePrefix`. */
+    def attribute(name: String): Int = find(byAttribute, name)
+
+    val valueTag: Int = apply(options.valueTag)
+    val wildcard: Int = apply(options.wildcardColName)
+    val corruptRecord: Int = apply(options.columnNameOfCorruptRecord)
+
+    /** The ordinals of the struct field `i` holds, or null if it holds none. */
+    val nested: Array[FieldOrdinals] =
+      schema.fields.map(f => structUnder(f.dataType).map(new FieldOrdinals(_, options)).orNull)
+  }
+
+  private def structUnder(dt: DataType): Option[StructType] = dt match {
+    case st: StructType => Some(st)
+    case ArrayType(et, _) => structUnder(et)
+    case MapType(_, vt, _) => structUnder(vt)
+    case _ => None
   }
 
   /**
@@ -66,6 +123,7 @@ private[graft] object StaxXmlParser {
   def parse(xml: RDD[String], schema: StructType, options: XmlOptions): RDD[InternalRow] =
     xml.mapPartitions { iter =>
       val validator = options.rowValidationXSDPath.map(ValidatorUtil.forPath)
+      val fields = new FieldOrdinals(schema, options)
       iter.flatMap { record =>
         val valid =
           try { validator.foreach(ValidatorUtil.validate(_, record)); true }
@@ -76,61 +134,35 @@ private[graft] object StaxXmlParser {
               case _ => false
             }
           }
-        if (valid) parseRecord(record, schema, options)
-        else handleMalformed(record, schema, options, partial = None)
+        if (valid) parseRecord(record, fields, options)
+        else handleMalformed(record, fields, options, partial = None)
       }
     }
 
   /** Single-string parse to internal form (backs `from_xml`). */
-  def parseColumn(xml: String, schema: StructType, options: XmlOptions): InternalRow =
-    parseRecord(xml, schema, options).orNull
+  def parseColumn(xml: String, fields: FieldOrdinals, options: XmlOptions): InternalRow =
+    parseRecord(xml, fields, options).orNull
 
   /** Single-string parse to an external [[Row]] (public `from_xml_string`). */
   def parseColumnExternal(xml: String, schema: StructType, options: XmlOptions): Row =
-    parseRecord(xml, schema, options)
+    parseRecord(xml, new FieldOrdinals(schema, options), options)
       .map(CatalystTypeConverters.createToScalaConverter(schema)(_).asInstanceOf[Row])
       .orNull
 
   /** Tracks whether any field in the current record failed to convert. */
   private final class Status { var malformed: Boolean = false }
 
-  // Per-thread identity-keyed field-index cache: name->ordinal lookups are on
-  // the per-element hot path and StructType offers no public O(1) accessor.
-  private val idxCache =
-    new ThreadLocal[java.util.IdentityHashMap[StructType, java.util.HashMap[String, Integer]]] {
-      override def initialValue() = new java.util.IdentityHashMap
-    }
-
-  // A task deserializes fresh StructType instances, so identity keys pile up
-  // one per (task × nested struct) on long-lived executor threads; flushing
-  // past a small bound caps the leak at the cost of a rare rebuild.
-  private val IdxCacheMaxEntries = 256
-
-  private def fieldIndex(schema: StructType, name: String): Int = {
-    val cache = idxCache.get()
-    var m = cache.get(schema)
-    if (m == null) {
-      if (cache.size >= IdxCacheMaxEntries) cache.clear()
-      m = new java.util.HashMap[String, Integer](schema.length * 2)
-      var i = 0
-      while (i < schema.length) { m.put(schema.fields(i).name, i); i += 1 }
-      cache.put(schema, m)
-    }
-    val v = m.get(name)
-    if (v == null) -1 else v.intValue
-  }
-
-  def parseRecord(record: String, schema: StructType, options: XmlOptions): Option[InternalRow] = {
+  private def parseRecord(
+      record: String, fields: FieldOrdinals, options: XmlOptions): Option[InternalRow] = {
     val status = new Status
     try {
-      val reader = factories.get().createXMLStreamReader(new StringReader(record))
+      val reader = openRecord(record)
       try {
-        while (reader.getEventType != START_ELEMENT && reader.hasNext) reader.next()
         if (reader.getEventType != START_ELEMENT) {
           throw new IllegalArgumentException("no element found in record")
         }
-        val row = convertStruct(reader, schema, options, status)
-        if (status.malformed) handleMalformed(record, schema, options, partial = Some(row))
+        val row = convertStruct(reader, fields, options, status)
+        if (status.malformed) handleMalformed(record, fields, options, partial = Some(row))
         else Some(row)
       } finally {
         reader.close()
@@ -140,26 +172,27 @@ private[graft] object StaxXmlParser {
         options.parseMode match {
           case ParseMode.FailFast =>
             throw new IllegalArgumentException(s"Malformed record: $record", e)
-          case _ => handleMalformed(record, schema, options, partial = None)
+          case _ => handleMalformed(record, fields, options, partial = None)
         }
     }
   }
 
   private def handleMalformed(
       record: String,
-      schema: StructType,
+      fields: FieldOrdinals,
       options: XmlOptions,
       partial: Option[InternalRow]): Option[InternalRow] = options.parseMode match {
     case ParseMode.FailFast =>
       throw new IllegalArgumentException(s"Malformed record: $record")
     case ParseMode.DropMalformed => None
     case ParseMode.Permissive =>
-      val corruptIdx = fieldIndex(schema, options.columnNameOfCorruptRecord)
       val row = partial match {
         case Some(r: GenericInternalRow) => r
-        case _ => new GenericInternalRow(schema.length)
+        case _ => new GenericInternalRow(fields.schema.length)
       }
-      if (corruptIdx >= 0) row.update(corruptIdx, UTF8String.fromString(record))
+      if (fields.corruptRecord >= 0) {
+        row.update(fields.corruptRecord, UTF8String.fromString(record))
+      }
       Some(row)
   }
 
@@ -186,15 +219,18 @@ private[graft] object StaxXmlParser {
    */
   private def convertStruct(
       reader: XMLStreamReader,
-      schema: StructType,
+      fields: FieldOrdinals,
       options: XmlOptions,
       status: Status): InternalRow = {
+    val schema = fields.schema
     val values = new Array[Any](schema.length)
     val arrays = new Array[mutable.ArrayBuffer[Any]](schema.length)
     val seen = new Array[Boolean](schema.length)
-    val valueTagIdx = fieldIndex(schema, options.valueTag)
-    val wildcardIdx = fieldIndex(schema, options.wildcardColName)
-    val text = new StringBuilder
+    val valueTagIdx = fields.valueTag
+    val wildcardIdx = fields.wildcard
+    // Character data: the first event's string, a builder only from a second.
+    var text: String = null
+    var moreText: java.lang.StringBuilder = null
 
     def setScalarField(idx: Int, raw: String): Unit = {
       seen(idx) = true
@@ -211,29 +247,27 @@ private[graft] object StaxXmlParser {
     if (!options.excludeAttribute) {
       var i = 0
       while (i < reader.getAttributeCount) {
-        val name = options.attributePrefix + attributeName(reader, i, options)
-        val idx = fieldIndex(schema, name)
+        val idx = fields.attribute(attributeName(reader, i, options))
         if (idx >= 0) setScalarField(idx, reader.getAttributeValue(i))
         i += 1
       }
     }
 
     var done = false
-    var sawChildElement = false
     while (!done && reader.hasNext) {
       reader.next() match {
         case START_ELEMENT =>
-          sawChildElement = true
           val name = elementName(reader, options)
-          val idx = fieldIndex(schema, name)
+          val idx = fields(name)
           if (idx >= 0) {
             seen(idx) = true
             schema(idx).dataType match {
               case ArrayType(elementType, _) =>
                 if (arrays(idx) == null) arrays(idx) = mutable.ArrayBuffer.empty[Any]
-                arrays(idx) += convertField(reader, elementType, options, status)
+                arrays(idx) +=
+                  convertField(reader, elementType, fields.nested(idx), options, status)
               case dt =>
-                values(idx) = convertField(reader, dt, options, status)
+                values(idx) = convertField(reader, dt, fields.nested(idx), options, status)
             }
           } else if (wildcardIdx >= 0) {
             seen(wildcardIdx) = true
@@ -250,15 +284,22 @@ private[graft] object StaxXmlParser {
             skipElement(reader)
           }
         case CHARACTERS | CDATA =>
-          if (!reader.isWhiteSpace) text ++= reader.getText
+          if (!reader.isWhiteSpace) {
+            if (text == null) text = reader.getText
+            else {
+              if (moreText == null) moreText = new java.lang.StringBuilder(text)
+              moreText.append(reader.getText)
+            }
+          }
         case END_ELEMENT | END_DOCUMENT => done = true
         case _ => // comments, PIs: ignore
       }
     }
 
     // Character data beside attributes/elements lands in the valueTag field.
-    if (valueTagIdx >= 0 && !seen(valueTagIdx) && text.nonEmpty) {
-      val t = if (options.ignoreSurroundingSpaces) text.result().trim else text.result()
+    if (valueTagIdx >= 0 && !seen(valueTagIdx) && text != null) {
+      val all = if (moreText != null) moreText.toString else text
+      val t = if (options.ignoreSurroundingSpaces) all.trim else all
       if (t.nonEmpty) setScalarField(valueTagIdx, t)
     }
 
@@ -285,19 +326,22 @@ private[graft] object StaxXmlParser {
 
   /**
    * Converts the element at the current START_ELEMENT into a value of `dt`,
-   * consuming through its END_ELEMENT. Scalar cast failures are recorded on
+   * consuming through its END_ELEMENT; `nested` holds the ordinals of the
+   * struct under `dt`, if any. Scalar cast failures are recorded on
    * `status` and produce null (PERMISSIVE partial results).
    */
   private def convertField(
       reader: XMLStreamReader,
       dt: DataType,
+      nested: FieldOrdinals,
       options: XmlOptions,
       status: Status): Any = dt match {
-    case st: StructType => convertStruct(reader, st, options, status)
-    case MapType(StringType, valueType, _) => convertMap(reader, valueType, options, status)
+    case _: StructType => convertStruct(reader, nested, options, status)
+    case MapType(StringType, valueType, _) =>
+      convertMap(reader, valueType, nested, options, status)
     case ArrayType(elementType, _) =>
       // Nested array with no intermediate struct: treat as single element.
-      new GenericArrayData(Array(convertField(reader, elementType, options, status)))
+      new GenericArrayData(Array(convertField(reader, elementType, nested, options, status)))
     case StringType => convertStringField(reader, options)
     case scalar =>
       val raw = collectText(reader, options)
@@ -325,13 +369,22 @@ private[graft] object StaxXmlParser {
    * Gathers the character content of the current element; nested elements make
    * the content non-scalar and raise (caught by the caller's cast handler).
    * Returns "" for an empty element, which casts to null for non-string types.
+   * A one-event leaf returns that event's string, with no builder.
    */
   private def collectText(reader: XMLStreamReader, options: XmlOptions): String = {
-    val sb = new StringBuilder
+    var text = ""
+    var moreText: java.lang.StringBuilder = null
+    var events = 0
     var done = false
     while (!done && reader.hasNext) {
       reader.next() match {
-        case CHARACTERS | CDATA => sb ++= reader.getText
+        case CHARACTERS | CDATA =>
+          if (events == 0) text = reader.getText
+          else {
+            if (moreText == null) moreText = new java.lang.StringBuilder(text)
+            moreText.append(reader.getText)
+          }
+          events += 1
         case START_ELEMENT =>
           skipElement(reader)
           throw new IllegalArgumentException("unexpected child element in scalar field")
@@ -339,26 +392,37 @@ private[graft] object StaxXmlParser {
         case _ =>
       }
     }
-    val s = sb.result()
+    val s = if (moreText != null) moreText.toString else text
     if (options.ignoreSurroundingSpaces) s.trim else s
   }
 
   /**
    * A StringType field: plain text normally; if the element turns out to have
    * child elements (mixed content), the raw inner XML is captured verbatim.
+   * Plain text of one event is taken as is, with no builder.
    */
   private def convertStringField(reader: XMLStreamReader, options: XmlOptions): UTF8String = {
-    val sb = new StringBuilder
+    var text = ""
+    var sb: StringBuilder = null
+    var events = 0
     var sawElement = false
     var done = false
     while (!done && reader.hasNext) {
       reader.next() match {
         case CHARACTERS | CDATA =>
-          if (sawElement) appendEscaped(sb, reader.getText) else sb ++= reader.getText
+          if (sawElement) appendEscaped(sb, reader.getText)
+          else if (events == 0) text = reader.getText
+          else {
+            if (sb == null) sb = new StringBuilder(text)
+            sb ++= reader.getText
+          }
+          events += 1
         case START_ELEMENT =>
           if (!sawElement) {
             // Retroactively escape what we already collected as plain text.
-            val plain = sb.result(); sb.clear(); appendEscaped(sb, plain)
+            val plain = if (sb != null) sb.result() else text
+            sb = new StringBuilder
+            appendEscaped(sb, plain)
             sawElement = true
           }
           serializeElement(reader, sb, options)
@@ -366,7 +430,7 @@ private[graft] object StaxXmlParser {
         case _ =>
       }
     }
-    val s = sb.result()
+    val s = if (sb != null) sb.result() else text
     val trimmed = if (options.ignoreSurroundingSpaces) s.trim else s
     if (trimmed.isEmpty && options.treatEmptyValuesAsNulls) null
     else if (trimmed == options.nullValue) null
@@ -376,6 +440,7 @@ private[graft] object StaxXmlParser {
   private def convertMap(
       reader: XMLStreamReader,
       valueType: DataType,
+      nested: FieldOrdinals,
       options: XmlOptions,
       status: Status): ArrayBasedMapData = {
     val entries = mutable.LinkedHashMap.empty[String, Any]
@@ -400,7 +465,7 @@ private[graft] object StaxXmlParser {
       reader.next() match {
         case START_ELEMENT =>
           val key = elementName(reader, options)
-          entries(key) = convertField(reader, valueType, options, status)
+          entries(key) = convertField(reader, valueType, nested, options, status)
         case END_ELEMENT => done = true
         case _ =>
       }

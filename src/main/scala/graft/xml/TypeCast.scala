@@ -8,9 +8,9 @@ import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder}
 import java.time.temporal.ChronoField
 import java.util.Locale
 
-import scala.util.Try
-import scala.util.control.Exception.allCatch
+import scala.util.control.NonFatal
 
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
 /**
@@ -23,6 +23,13 @@ import org.apache.spark.sql.types._
  * user-configured pattern, and the configured `nullValue` maps to null.
  * Catalyst's `Cast` is deliberately NOT used: its semantics differ on all of
  * the above.
+ *
+ * Every XML read casts and probes each leaf here, so the common shapes take
+ * a direct path: a plain `yyyy-MM-dd` is scanned by [[plainDate]] instead of
+ * parsed by java.time, casts to the internal form go from the parsed
+ * `Instant`/`LocalDate` straight to micros/epoch days (Spark's own
+ * conversions, which refuse a value out of range instead of wrapping it),
+ * and failures are caught by plain `try`, not a `Try` or `Catch` per value.
  */
 private[graft] object TypeCast {
 
@@ -40,14 +47,10 @@ private[graft] object TypeCast {
     } else {
       castType match {
         case _: StringType => org.apache.spark.unsafe.types.UTF8String.fromString(datum)
-        case _: TimestampType =>
-          val i = parseXmlTimestamp(datum, options).toInstant
-          i.getEpochSecond * 1000000L + i.getNano / 1000L
+        case _: TimestampType => DateTimeUtils.instantToMicros(parseXmlInstant(datum, options))
         case _: TimestampNTZType =>
-          val ldt = parseXmlLocalDateTime(datum)
-          ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
-        case _: DateType =>
-          parseXmlDate(datum, options).toLocalDate.toEpochDay.toInt
+          DateTimeUtils.localDateTimeToMicros(parseXmlLocalDateTime(datum))
+        case _: DateType => DateTimeUtils.localDateToDays(parseXmlLocalDate(datum, options))
         case other => castTo(datum, other, options)
       }
     }
@@ -65,11 +68,15 @@ private[graft] object TypeCast {
         case _: ShortType => datum.toShort
         case _: IntegerType => signSafe(datum, _.toInt)
         case _: LongType => signSafe(datum, _.toLong)
-        case _: FloatType => Try(datum.toFloat).getOrElse(parseLocaleNumber(datum).floatValue())
-        case _: DoubleType => Try(datum.toDouble).getOrElse(parseLocaleNumber(datum).doubleValue())
+        case _: FloatType =>
+          try datum.toFloat
+          catch { case _: NumberFormatException => parseLocaleNumber(datum).floatValue() }
+        case _: DoubleType =>
+          try datum.toDouble
+          catch { case _: NumberFormatException => parseLocaleNumber(datum).doubleValue() }
         case _: BooleanType => parseXmlBoolean(datum)
         case dt: DecimalType =>
-          Decimal(new JBigDecimal(datum.replaceAll(",", "")), dt.precision, dt.scale)
+          Decimal(new JBigDecimal(datum.replace(",", "")), dt.precision, dt.scale)
         case _: TimestampType => parseXmlTimestamp(datum, options)
         case _: TimestampNTZType => parseXmlLocalDateTime(datum)
         case _: DateType => parseXmlDate(datum, options)
@@ -97,6 +104,11 @@ private[graft] object TypeCast {
     case other => throw new IllegalArgumentException(s"For input string: '$other'")
   }
 
+  private val localSpaceTimestamp: DateTimeFormatter = new DateTimeFormatterBuilder()
+    .appendPattern("yyyy-MM-dd HH:mm:ss")
+    .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
+    .toFormatter
+
   // ISO-ish timestamp formats accepted out of the box.
   private val builtInTimestampFormats: Seq[DateTimeFormatter] = Seq(
     DateTimeFormatter.ISO_INSTANT,
@@ -107,10 +119,7 @@ private[graft] object TypeCast {
       .appendPattern("yyyy-MM-dd'T'HH:mm:ss")
       .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
       .toFormatter,
-    new DateTimeFormatterBuilder()
-      .appendPattern("yyyy-MM-dd HH:mm:ss")
-      .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
-      .toFormatter
+    localSpaceTimestamp
   )
 
   /** Index of the last built-in format that matched. A corpus uses one
@@ -132,76 +141,122 @@ private[graft] object TypeCast {
       pos.getIndex == value.length
   }
 
-  /** `value` under `fmt` as a timestamp, or null. With `gate`, a value that
+  /** `value` under `fmt` as an instant, or null. With `gate`, a value that
    *  does not fit `fmt` is turned away by [[fitsWhole]] instead of by a
    *  thrown exception: for probes, which mostly miss. Casts mostly hit and
    *  skip it, since a match then costs a second parse. A full match can
    *  still fail to resolve (30 February), which the caught `parse` rejects. */
-  private def timestampOrNull(
-      fmt: DateTimeFormatter, value: String, zone: ZoneId, gate: Boolean): Timestamp =
-    allCatch.opt {
+  private def instantOrNull(
+      fmt: DateTimeFormatter, value: String, zone: ZoneId, gate: Boolean): Instant =
+    try {
       if (gate && !fitsWhole(fmt, value)) null
       else {
         val parsed = fmt.parse(value)
-        if (parsed.isSupported(ChronoField.OFFSET_SECONDS)) Timestamp.from(Instant.from(parsed))
-        else Timestamp.from(LocalDateTime.from(parsed).atZone(zone).toInstant)
+        if (parsed.isSupported(ChronoField.OFFSET_SECONDS)) Instant.from(parsed)
+        else LocalDateTime.from(parsed).atZone(zone).toInstant
       }
-    }.orNull
+    } catch { case NonFatal(_) => null }
 
   /** The built-in formats, then the user `timestampFormat`; null if none
    *  matches. Throws only for an invalid `timezone` or `timestampFormat`. */
-  private def xmlTimestampOrNull(value: String, options: XmlOptions, gate: Boolean): Timestamp = {
+  private def xmlInstantOrNull(value: String, options: XmlOptions, gate: Boolean): Instant = {
     val zone = options.timezone.map(ZoneId.of).getOrElse(ZoneOffset.UTC)
     val n = builtInTimestampFormats.length
     val start = lastHitTimestampFormat.get()
-    var ts: Timestamp = null
+    var ts: Instant = null
     var i = 0
     while (i < n && ts == null) {
       val idx = (start + i) % n
-      ts = timestampOrNull(builtInTimestampFormats(idx), value, zone, gate)
+      ts = instantOrNull(builtInTimestampFormats(idx), value, zone, gate)
       if (ts != null && idx != start) lastHitTimestampFormat.lazySet(idx)
       i += 1
     }
     if (ts != null) ts
-    else options.timestampFormatter.map(timestampOrNull(_, value, zone, gate)).orNull
+    else options.timestampFormatter.map(instantOrNull(_, value, zone, gate)).orNull
   }
 
-  private[xml] def parseXmlTimestamp(value: String, options: XmlOptions): Timestamp = {
-    val ts = xmlTimestampOrNull(value, options, gate = false)
+  private def parseXmlInstant(value: String, options: XmlOptions): Instant = {
+    val ts = xmlInstantOrNull(value, options, gate = false)
     if (ts == null) throw new IllegalArgumentException(s"cannot parse timestamp: '$value'")
     ts
   }
 
+  private[xml] def parseXmlTimestamp(value: String, options: XmlOptions): Timestamp =
+    Timestamp.from(parseXmlInstant(value, options))
+
   /** Zone-less timestamps (TIMESTAMP_NTZ): ISO local date-time or `yyyy-MM-dd HH:mm:ss[.S]`. */
-  private[xml] def parseXmlLocalDateTime(value: String): LocalDateTime = {
-    allCatch.opt(LocalDateTime.parse(value, DateTimeFormatter.ISO_LOCAL_DATE_TIME))
-      .orElse(allCatch.opt(LocalDateTime.parse(value,
-        new DateTimeFormatterBuilder()
-          .appendPattern("yyyy-MM-dd HH:mm:ss")
-          .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
-          .toFormatter)))
-      .getOrElse(throw new IllegalArgumentException(s"cannot parse local timestamp: '$value'"))
+  private[xml] def parseXmlLocalDateTime(value: String): LocalDateTime =
+    try LocalDateTime.parse(value, DateTimeFormatter.ISO_LOCAL_DATE_TIME)
+    catch {
+      case NonFatal(_) =>
+        try LocalDateTime.parse(value, localSpaceTimestamp)
+        catch {
+          case NonFatal(_) =>
+            throw new IllegalArgumentException(s"cannot parse local timestamp: '$value'")
+        }
+    }
+
+  /** `v` as a plain `yyyy-MM-dd` (a four-digit year, ASCII digits only),
+   *  packed as `year * 10000 + month * 100 + day`, or -1 for any other shape.
+   *  Month and day are not checked here: see [[isRealDay]]. */
+  private def plainDate(v: String): Int =
+    if (v.length != 10 || v.charAt(4) != '-' || v.charAt(7) != '-') -1
+    else {
+      val y = digits(v, 0, 4)
+      val m = digits(v, 5, 7)
+      val d = digits(v, 8, 10)
+      if ((y | m | d) < 0) -1 else y * 10000 + m * 100 + d
+    }
+
+  /** The ASCII digits `v(from until until)` as a number, or -1. */
+  private def digits(v: String, from: Int, until: Int): Int = {
+    var n = 0
+    var i = from
+    while (i < until) {
+      val c = v.charAt(i)
+      if (!isAsciiDigit(c)) return -1
+      n = n * 10 + (c - '0')
+      i += 1
+    }
+    n
   }
 
-  /** As [[timestampOrNull]], for dates. */
+  /** Whether a [[plainDate]] names a day of the proleptic Gregorian
+   *  calendar, exactly as `ISO_DATE`'s strict resolver decides it. */
+  private def isRealDay(ymd: Int): Boolean = {
+    val m = ymd / 100 % 100
+    val d = ymd % 100
+    m >= 1 && m <= 12 && d >= 1 && d <= Month.of(m).length(Year.isLeap(ymd / 10000))
+  }
+
+  /** As [[instantOrNull]], for dates. */
   private def localDateOrNull(fmt: DateTimeFormatter, value: String, gate: Boolean): LocalDate =
-    allCatch.opt {
+    try {
       if (gate && !fitsWhole(fmt, value)) null else LocalDate.parse(value, fmt)
-    }.orNull
+    } catch { case NonFatal(_) => null }
 
   /** ISO, then the user `dateFormat`; null if neither matches (an invalid
-   *  `dateFormat` matches nothing). */
+   *  `dateFormat` matches nothing). A real plain `yyyy-MM-dd` day is the
+   *  day ISO parses it to, so it skips the parse. */
   private def xmlDateOrNull(value: String, options: XmlOptions, gate: Boolean): LocalDate = {
+    val ymd = plainDate(value)
+    if (ymd >= 0 && isRealDay(ymd)) return LocalDate.of(ymd / 10000, ymd / 100 % 100, ymd % 100)
     val iso = localDateOrNull(DateTimeFormatter.ISO_DATE, value, gate)
     if (iso != null) iso
-    else allCatch.opt(options.dateFormatter).flatten.map(localDateOrNull(_, value, gate)).orNull
+    else {
+      val user = try options.dateFormatter.orNull catch { case NonFatal(_) => null }
+      if (user == null) null else localDateOrNull(user, value, gate)
+    }
   }
 
-  private[xml] def parseXmlDate(value: String, options: XmlOptions): Date = {
+  private def parseXmlLocalDate(value: String, options: XmlOptions): LocalDate = {
     val d = xmlDateOrNull(value, options, gate = false)
     if (d == null) throw new IllegalArgumentException(s"cannot parse date: '$value'")
-    Date.valueOf(d)
+    d
   }
+
+  private[xml] def parseXmlDate(value: String, options: XmlOptions): Date =
+    Date.valueOf(parseXmlLocalDate(value, options))
 
   // ---- inference predicates (used by InferSchema) ----
 
@@ -226,7 +281,8 @@ private[graft] object TypeCast {
     else if (len - start <= 18) true // within Long range by construction
     else { // 19+ digits: only the boundary needs a real parse
       val v = if (c0 == '+') value.substring(1) else value
-      allCatch.opt(v.toLong).isDefined
+      try { v.toLong; true }
+      catch { case _: NumberFormatException => false }
     }
   }
 
@@ -266,7 +322,10 @@ private[graft] object TypeCast {
   // The scan is a necessary condition only; `toDouble` (which accepts one
   // leading sign itself) has the last word, as in `castTo`.
   def isDouble(value: String): Boolean =
-    looksDecimal(value) && allCatch.opt(value.toDouble).isDefined
+    looksDecimal(value) && {
+      try { value.toDouble; true }
+      catch { case _: NumberFormatException => false }
+    }
 
   /** The ISO-family built-in formats (instant/offset/local, `yyyy-MM-dd
    *  [HH:mm:ss]`) all start with a year — optionally `+`/`-`-signed, 4 or
@@ -295,12 +354,21 @@ private[graft] object TypeCast {
           (v.charAt(1).isDigit && v.charAt(2) == ' ')))
     }
 
+  /** No built-in timestamp format matches a plain `yyyy-MM-dd` (each needs
+   *  a time or a day name), so that shape is rejected without a parse
+   *  unless a user `timestampFormat` could match it. */
   def isTimestamp(value: String, options: XmlOptions): Boolean =
-    (maybeIsoTemporal(value) || maybeRfc1123(value) ||
-      options.timestampFormat.isDefined) &&
-      allCatch.opt(xmlTimestampOrNull(value, options, gate = true)).exists(_ != null)
+    if (options.timestampFormat.isEmpty && plainDate(value) >= 0) false
+    else
+      (maybeIsoTemporal(value) || maybeRfc1123(value) || options.timestampFormat.isDefined) &&
+        (try xmlInstantOrNull(value, options, gate = true) != null
+        catch { case NonFatal(_) => false })
 
-  def isDate(value: String, options: XmlOptions): Boolean =
-    (maybeIsoTemporal(value) || options.dateFormat.isDefined) &&
-      xmlDateOrNull(value, options, gate = true) != null
+  def isDate(value: String, options: XmlOptions): Boolean = {
+    val ymd = plainDate(value)
+    if (ymd >= 0 && options.dateFormat.isEmpty) isRealDay(ymd)
+    else
+      (maybeIsoTemporal(value) || options.dateFormat.isDefined) &&
+        xmlDateOrNull(value, options, gate = true) != null
+  }
 }

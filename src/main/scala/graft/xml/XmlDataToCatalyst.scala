@@ -40,13 +40,16 @@ case class XmlDataToCatalyst(
       throw new IllegalArgumentException(s"from_xml requires a struct schema, got $other")
   }
 
+  /** The row schema's field ordinals, resolved once per expression instance. */
+  @transient private lazy val fields = new StaxXmlParser.FieldOrdinals(rowSchema, xmlOptions)
+
   override def dataType: DataType = schema
 
   override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any = (input, schema) match {
     case (s: UTF8String, _: StructType) =>
-      StaxXmlParser.parseColumn(s.toString, rowSchema, xmlOptions)
+      StaxXmlParser.parseColumn(s.toString, fields, xmlOptions)
     case (arr: ArrayData, ArrayType(_: StructType, _)) =>
       // Accept any ArrayData shape (UnsafeArrayData after scans/shuffles,
       // GenericArrayData from literals); null elements map to null rows.
@@ -55,8 +58,7 @@ case class XmlDataToCatalyst(
       var i = 0
       while (i < n) {
         if (!arr.isNullAt(i)) {
-          out(i) = StaxXmlParser.parseColumn(
-            arr.getUTF8String(i).toString, rowSchema, xmlOptions)
+          out(i) = StaxXmlParser.parseColumn(arr.getUTF8String(i).toString, fields, xmlOptions)
         }
         i += 1
       }

@@ -32,6 +32,32 @@ class InferSchemaSuite extends AnyFunSuite {
     assert(vt("_VALUE").dataType === DoubleType)
   }
 
+  test("record inference per element shape: leaf, attributes, text, repeats, split text") {
+    def st(fields: (String, DataType)*): StructType =
+      StructType(fields.map { case (n, t) => StructField(n, t) })
+    // Leaf-only elements, one per leaf type, and an empty one.
+    assert(infer("<r><a>1</a><b>x</b><c>2020-01-01</c><d/><e>1.5</e><f>true</f></r>") ===
+      st("a" -> LongType, "b" -> StringType, "c" -> DateType, "d" -> NullType,
+        "e" -> DoubleType, "f" -> BooleanType))
+    // Attribute-only elements, with and without a body.
+    assert(infer("""<r><e k="1" n="x"/><g t="2020-01-01T00:00:00Z"></g></r>""") ===
+      st("e" -> st("_k" -> LongType, "_n" -> StringType),
+        "g" -> st("_t" -> TimestampType)))
+    // Text beside an attribute lands in the valueTag, also at the record.
+    assert(infer("""<r id="3">7<w unit="kg">12.5</w></r>""") ===
+      st("_id" -> LongType, "w" -> st("_unit" -> StringType, "_VALUE" -> DoubleType)))
+    assert(infer("""<r id="3">7</r>""") === st("_id" -> LongType, "_VALUE" -> LongType))
+    // A repeated child becomes an array of the merged type, wherever it repeats.
+    assert(infer("<r><i>1</i><j><x>1</x></j><i>2.5</i><j><x>b</x><y/></j></r>") ===
+      st("i" -> ArrayType(DoubleType),
+        "j" -> ArrayType(st("x" -> StringType, "y" -> NullType))))
+    // Text split by a comment or a processing instruction is one value.
+    assert(infer("""<r><t>12<!-- c -->34</t><u a="1">ab<?pi x?>cd</u><v> </v></r>""") ===
+      st("t" -> LongType, "u" -> st("_a" -> LongType, "_VALUE" -> StringType),
+        "v" -> NullType))
+    assert(infer("<r>1<!-- c -->.5</r>") === DoubleType)
+  }
+
   test("merge lattice: numeric widening, null absorption, string top") {
     assert(merge(LongType, DoubleType) === DoubleType)
     assert(merge(NullType, LongType) === LongType)

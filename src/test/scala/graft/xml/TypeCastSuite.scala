@@ -213,8 +213,27 @@ class TypeCastSuite extends AnyFunSuite {
       d <- d2(0, 32); m <- d2(0, 13); y <- year; h <- d2(0, 25); mi <- d2(0, 60)
       s <- Gen.oneOf(s"$d/$m/$y $h:$mi", s"$d.$m.$y", s"$d/$m/$y")
     } yield s
-    val base = Gen.frequency(3 -> iso, 2 -> date, 1 -> dateWithZone, 2 -> rfc1123,
-      3 -> number, 1 -> fixed, 2 -> userShaped)
+    // Calendar edges: 29 February on leap, common and century years, the
+    // ten days the Julian-to-Gregorian switch skipped, year 0000 and signed
+    // years, years of five or more digits (past the microsecond range from
+    // about 294,000 on), 0-9 fraction digits, and either separator.
+    val edgeYear = Gen.oneOf("0000", "9999", "1582", "2000", "1900", "2100", "2024", "2023",
+      "-0001", "-0044", "+10000", "+294248", "+300000", "-300000", "+999999999")
+    val edgeDate = for {
+      y <- edgeYear
+      md <- Gen.oneOf(Gen.const("02-29"), Gen.choose(1, 31).map(d => f"10-$d%02d"),
+        for (m <- d2(1, 12); d <- d2(28, 32)) yield s"$m-$d")
+    } yield s"$y-$md"
+    val edgeTimestamp = for {
+      dt <- edgeDate; sep <- Gen.oneOf("T", " "); t <- time
+      digits <- Gen.choose(0, 9)
+      zone <- Gen.oneOf("", "Z", "+02:00", "-05:30", "+14:00")
+    } yield s"$dt$sep$t${if (digits == 0) "" else "." + "987654321".take(digits)}$zone"
+    val unpadded = Gen.frequency(3 -> iso, 2 -> date, 1 -> dateWithZone, 2 -> rfc1123,
+      3 -> number, 1 -> fixed, 2 -> userShaped, 2 -> edgeDate, 3 -> edgeTimestamp)
+    val base = for {
+      v <- unpadded; l <- Gen.oneOf("", "", "", " ", "\t "); r <- Gen.oneOf("", "", "", " ", "\n")
+    } yield l + v + r
     // Near misses: a valid-looking value cut short, extended or with one
     // character replaced.
     val value = for {
@@ -230,19 +249,100 @@ class TypeCastSuite extends AnyFunSuite {
     }
     val userFmt = XmlOptions(Map(
       "timestampFormat" -> "dd/MM/yyyy HH:mm", "dateFormat" -> "dd.MM.yyyy"))
-    for (o <- Seq(opts, userFmt)) {
+    // User formats that read the plain yyyy-MM-dd shape: as a timestamp
+    // (`2020-01-01` is 20:00 on 2020-01-01), and as a date where ISO cannot.
+    val plainShaped = Map("timestampFormat" -> "yyHH-MM-dd", "dateFormat" -> "yyyy-dd-MM")
+    val spaced = Map("ignoreSurroundingSpaces" -> "true")
+    for (o <- Seq(opts, userFmt, XmlOptions(plainShaped), XmlOptions(spaced),
+        XmlOptions(spaced ++ plainShaped))) {
       val prop = Prop.forAll(value) { v =>
         val ts = allCatch.opt(TypeCast.parseXmlTimestamp(v, o))
         val date = allCatch.opt(TypeCast.parseXmlDate(v, o))
-        Prop.all(
+        val casts = Seq(TimestampType, TimestampNTZType, DateType).map { dt =>
+          val cast = allCatch.opt(TypeCast.castToInternal(v, dt, o))
+          val exact = OldCasts.exact(v, dt, o)
+          val old = OldCasts.castToInternal(v, dt, o)
+          ((cast == exact) :| s"castToInternal('$v', $dt) = $cast, not $exact") &&
+            ((old == exact || OldCasts.knownWrong(v, dt, o)) :|
+              s"the old cast of '$v' to $dt is ${old.orNull}, not ${exact.orNull}, unexplained")
+        }
+        Prop.all(Seq(
           (TypeCast.isDouble(v) == OldProbes.isDouble(v)) :| s"isDouble('$v')",
           (TypeCast.isTimestamp(v, o) == OldProbes.isTimestamp(v, o)) :| s"isTimestamp('$v')",
           (TypeCast.isDate(v, o) == OldProbes.isDate(v, o)) :| s"isDate('$v')",
           (ts == OldProbes.timestamp(v, o)) :| s"parseXmlTimestamp('$v') = $ts",
-          (date == OldProbes.date(v, o)) :| s"parseXmlDate('$v') = $date")
+          (date == OldProbes.date(v, o)) :| s"parseXmlDate('$v') = $date") ++ casts: _*)
       }
       val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(20000), prop)
       assert(result.passed, Pretty.pretty(result))
+    }
+  }
+
+  /** `castToInternal`'s temporal branches as they were before the direct
+   *  paths: each value parsed as [[OldProbes]] parses it, then taken through
+   *  `java.sql.Timestamp`/`java.sql.Date` and converted with unchecked
+   *  arithmetic, beside the exact value of the same parse. */
+  private object OldCasts {
+    private val localSpace = new DateTimeFormatterBuilder()
+      .appendPattern("yyyy-MM-dd HH:mm:ss")
+      .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
+      .toFormatter
+
+    private def trimmed(v: String, o: XmlOptions): String =
+      if (o.ignoreSurroundingSpaces) v.trim else v
+
+    private def localDateTime(v: String): Option[LocalDateTime] =
+      allCatch.opt(LocalDateTime.parse(v, DateTimeFormatter.ISO_LOCAL_DATE_TIME))
+        .orElse(allCatch.opt(LocalDateTime.parse(v, localSpace)))
+
+    def castToInternal(raw: String, dt: DataType, o: XmlOptions): Option[Any] = {
+      val v = trimmed(raw, o)
+      dt match {
+        case TimestampType => OldProbes.timestamp(v, o).map { t =>
+          val i = t.toInstant
+          i.getEpochSecond * 1000000L + i.getNano / 1000L
+        }
+        case TimestampNTZType => localDateTime(v).map { ldt =>
+          ldt.toEpochSecond(ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
+        }
+        case DateType =>
+          OldProbes.date(v, o).flatMap(d => allCatch.opt(d.toLocalDate.toEpochDay.toInt))
+      }
+    }
+
+    /** Micros or epoch days computed exactly; None where the value does not
+     *  parse or its result does not fit the internal type. */
+    def exact(raw: String, dt: DataType, o: XmlOptions): Option[Any] = {
+      val v = trimmed(raw, o)
+      def micros(seconds: Long, nanos: Int): Option[Long] = {
+        val m = BigInt(seconds) * 1000000 + nanos / 1000
+        if (m.isValidLong) Some(m.toLong) else None
+      }
+      dt match {
+        case TimestampType =>
+          OldProbes.instant(v, o).flatMap(i => micros(i.getEpochSecond, i.getNano))
+        case TimestampNTZType =>
+          localDateTime(v).flatMap(t => micros(t.toEpochSecond(ZoneOffset.UTC), t.getNano))
+        case DateType => OldProbes.localDate(v, o).map(_.toEpochDay).collect {
+          case d if d.isValidInt => d.toInt
+        }
+      }
+    }
+
+    /** The values the old path got wrong: a date in the ten days the hybrid
+     *  calendar of `java.sql.Date` skips (1582-10-05..14), in year 0 or
+     *  before (the hybrid calendar has no year 0), or past the `Int` range
+     *  of epoch days; a timestamp whose micros overflow a `Long`. */
+    def knownWrong(raw: String, dt: DataType, o: XmlOptions): Boolean = {
+      val v = trimmed(raw, o)
+      dt match {
+        case DateType => OldProbes.localDate(v, o).exists { d =>
+          d.getYear <= 0 || !d.toEpochDay.isValidInt ||
+            (d.getYear == 1582 && d.getMonthValue == 10 && d.getDayOfMonth >= 5 &&
+              d.getDayOfMonth <= 14)
+        }
+        case _ => exact(raw, dt, o).isEmpty && castToInternal(raw, dt, o).isDefined
+      }
     }
   }
 
@@ -264,24 +364,32 @@ class TypeCastSuite extends AnyFunSuite {
         .appendFraction(ChronoField.NANO_OF_SECOND, 0, 9, true)
         .toFormatter)
 
-    def timestamp(value: String, options: XmlOptions): Option[Timestamp] = allCatch.opt {
+    // `Timestamp.from` never throws (it multiplies without a check), so
+    // taking it after the attempts decides as taking it inside each did.
+    def timestamp(value: String, options: XmlOptions): Option[Timestamp] =
+      instant(value, options).map(Timestamp.from)
+
+    def instant(value: String, options: XmlOptions): Option[Instant] = allCatch.opt {
       val zone = options.timezone.map(ZoneId.of).getOrElse(ZoneOffset.UTC)
-      def attempt(fmt: DateTimeFormatter): Option[Timestamp] = allCatch.opt {
+      def attempt(fmt: DateTimeFormatter): Option[Instant] = allCatch.opt {
         val parsed = fmt.parse(value)
-        if (parsed.isSupported(ChronoField.OFFSET_SECONDS)) Timestamp.from(Instant.from(parsed))
-        else Timestamp.from(LocalDateTime.from(parsed).atZone(zone).toInstant)
+        if (parsed.isSupported(ChronoField.OFFSET_SECONDS)) Instant.from(parsed)
+        else LocalDateTime.from(parsed).atZone(zone).toInstant
       }
       timestampFormats.iterator.map(attempt).collectFirst { case Some(t) => t }.orElse {
         options.timestampFormat.flatMap(p => attempt(DateTimeFormatter.ofPattern(p, Locale.US)))
       }
     }.flatten
 
-    def date(value: String, options: XmlOptions): Option[Date] =
+    def localDate(value: String, options: XmlOptions): Option[LocalDate] =
       allCatch.opt(LocalDate.parse(value, DateTimeFormatter.ISO_DATE)).orElse {
         options.dateFormat.flatMap { p =>
           allCatch.opt(LocalDate.parse(value, DateTimeFormatter.ofPattern(p, Locale.US)))
         }
-      }.map(Date.valueOf)
+      }
+
+    def date(value: String, options: XmlOptions): Option[Date] =
+      localDate(value, options).map(Date.valueOf)
 
     def isDouble(v: String): Boolean =
       v.nonEmpty && !v.exists(c => c.isLetter && c != 'E' && c != 'e') &&

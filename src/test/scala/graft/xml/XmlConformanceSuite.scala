@@ -418,7 +418,7 @@ class XmlConformanceSuite extends AnyFunSuite {
     // parsing" — XXE defense: external entities must never resolve while
     // parsing untrusted corpora.
     import javax.xml.stream.XMLInputFactory
-    val f = StaxFactories.get
+    val f = StaxXmlParser.inputFactory
     assert(f.getProperty(XMLInputFactory.SUPPORT_DTD) === false)
     assert(f.getProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES) === false)
     // Behavior check: a document declaring an external entity that points at
@@ -439,6 +439,17 @@ class XmlConformanceSuite extends AnyFunSuite {
     assert(!vals.exists(_.contains("TOP-SECRET")),
       "external entity expansion leaked file content into a parsed row")
     assert(vals.exists(_ == "plain"), "well-formed sibling record must survive")
+  }
+
+  test("the StAX implementation is Hadoop's shaded Woodstox") {
+    // Which implementation `XMLInputFactory.newInstance()` finds depends on
+    // the classpath, and with it how a malformed record fails and whether
+    // readers can be recycled; a classpath change that swaps it must show.
+    assert(StaxXmlParser.inputFactory.getClass.getName ===
+      "org.apache.hadoop.shaded.com.ctc.wstx.stax.WstxInputFactory")
+    intercept[IllegalArgumentException] {
+      StaxXmlParser.inputFactory.setProperty("reuse-instance", java.lang.Boolean.TRUE)
+    }
   }
 
   test("arrayElementName names nested-array items on write (reference parity)") {

@@ -295,6 +295,63 @@ class XmlSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(parsed.filter(col("p.k") === 10).select("p.s").head().getString(0) === "ok")
   }
 
+  test("a date in the 1582 calendar gap reads as that day, from a file and through from_xml") {
+    // java.sql.Date's hybrid Julian/Gregorian calendar skips 1582-10-05..14;
+    // DateType is proleptic Gregorian, where those days exist.
+    import spark.implicits._
+    val values = Seq("1582-10-10", "1582-10-04", "1582-10-12+01:00")
+    val path = writeFixture("gap_dates.xml",
+      values.map(v => s"<ROW><d>$v</d></ROW>").mkString("<ROWS>", "", "</ROWS>"))
+    val schema = StructType(Seq(StructField("d", DateType)))
+    val fromFile = spark.read.format("graft.xml").schema(schema)
+      .option("rowTag", "ROW").load(path)
+    val fromColumn = values.map(v => s"<r><d>$v</d></r>").toDF("x")
+      .select(graft.xml.from_xml(col("x"), schema).as("p")).select("p.d")
+    for (df <- Seq(fromFile, fromColumn)) {
+      val days = df.select(expr("unix_date(d)"), col("d").cast("string")).collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSet
+      assert(days === Set((-141432, "1582-10-10"), (-141438, "1582-10-04"),
+        (-141430, "1582-10-12")))
+    }
+  }
+
+  test("text split by a comment or processing instruction parses as one value") {
+    val schema = StructType(Seq(
+      StructField("_a", LongType), StructField("_VALUE", StringType),
+      StructField("t", LongType), StructField("s", StringType), StructField("m", StringType),
+      StructField("u", StructType(Seq(
+        StructField("_k", LongType), StructField("_VALUE", StringType))))))
+    val row = graft.xml.from_xml_string(
+      """<r a="1">x<!--c-->y<t>12<!-- c -->34</t><s>ab<?pi?>cd</s>""" +
+        """<m>a<!--x-->b<i>c</i>d</m><u k="2">p<!--c-->q</u></r>""", schema)
+    assert(row === Row(1L, "xy", 1234L, "abcd", "ab<i>c</i>d", Row(2L, "pq")))
+  }
+
+  test("a timestamp beyond the microsecond range fails its cast instead of wrapping") {
+    // Year 300000 is past Long microseconds since the epoch (~294,000 years).
+    val far = Seq(
+      "<ROW><k>1</k><ts>+300000-01-01T00:00:00Z</ts></ROW>",
+      "<ROW><k>2</k><ntz>+300000-01-01T00:00:00</ntz></ROW>")
+    val fine = "<ROW><k>3</k><ts>2024-01-02T03:04:05Z</ts><ntz>2024-01-02T03:04:05</ntz></ROW>"
+    val schema = StructType(Seq(StructField("k", LongType), StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType), StructField("_corrupt_record", StringType)))
+    val path = writeFixture("far_future.xml", (far :+ fine).mkString("<ROWS>", "\n", "</ROWS>"))
+    val rows = spark.read.format("graft.xml").schema(schema).option("rowTag", "ROW")
+      .load(path).orderBy("k").collect()
+    assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
+    assert(rows(0).isNullAt(1) && rows(0).getString(3).contains("+300000"))
+    assert(rows(1).isNullAt(2) && rows(1).getString(3).contains("+300000"))
+    assert(!rows(2).isNullAt(1) && !rows(2).isNullAt(2) && rows(2).isNullAt(3))
+    for ((record, i) <- far.zipWithIndex) {
+      val one = writeFixture(s"far_future_$i.xml", s"<ROWS>$record</ROWS>")
+      val e = intercept[Exception] {
+        spark.read.format("graft.xml").schema(StructType(schema.dropRight(1)))
+          .option("rowTag", "ROW").option("mode", "FAILFAST").load(one).collect()
+      }
+      assert(e.getMessage.contains("Malformed record"), e.getMessage)
+    }
+  }
+
   test("MapType field reads element children and attributes as map entries") {
     // reference: src/test/.../XmlSuite.scala:1278-1292 (map-attribute.xml)
     val path = writeFixture("map_attr.xml",
