@@ -98,6 +98,24 @@ object SparkEntry {
   private def xmlInput(d: String, name: String, rowTag: String)(df: => DataFrame): String =
     Fixtures.once(d, name)(df.write.format("graft.xml").option("rowTag", rowTag).save(_))
 
+  /** Drains `stream` to the end: each micro-batch's `sinks(batch)` frames
+    * are appended, in order, as parquet under `base` (subdirectory →
+    * frame), with the query's checkpoint in `$base/ckpt`. Returns what
+    * landed in `$base/out`. */
+  private def drain(s: SparkSession, stream: DataFrame, base: String)(
+      sinks: DataFrame => Seq[(String, DataFrame)]): DataFrame = {
+    val q = stream.writeStream
+      .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        sinks(bdf).foreach { case (dir, out) =>
+          out.write.mode("append").parquet(s"$base/$dir")
+        }
+      }
+      .option("checkpointLocation", s"$base/ckpt")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    s.read.parquet(s"$base/out")
+  }
+
   /** Writes `df` as XML and reads it back through the graft source. */
   private def xmlRoundtrip(
       s: SparkSession,
@@ -1436,15 +1454,9 @@ object SparkEntry {
       val base = Fixtures.scratch("stream_probe_run")
       val stream = s.readStream.format("xmlng").option("rowTag", "doc")
         .schema(batchIn.schema).load(xin)
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Dedup.minHashPairsAgainstIndex(bdf, "doc_id", "text", index, 0.9)
-            .write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out").orderBy("batch_id", "index_id")
+      drain(s, stream, base) { bdf =>
+        Seq("out" -> Dedup.minHashPairsAgainstIndex(bdf, "doc_id", "text", index, 0.9))
+      }.orderBy("batch_id", "index_id")
     }),
 
     "q106_script_profile" -> ((s, d) => {
@@ -2244,16 +2256,9 @@ object SparkEntry {
       val base = Fixtures.scratch("stream_nb_run")
       val stream = s.readStream.format("xmlng").option("rowTag", "doc")
         .schema(batchIn.schema).load(xin)
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Classify.nbScoreHashed(bdf, "doc_id", "text", weights)
-            .write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-        .withColumnRenamed("id", "doc_id")
+      drain(s, stream, base) { bdf =>
+        Seq("out" -> Classify.nbScoreHashed(bdf, "doc_id", "text", weights))
+      }.withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
     }),
 
@@ -2272,16 +2277,9 @@ object SparkEntry {
       val base = Fixtures.scratch("stream_dsir_run")
       val stream = s.readStream.format("xmlng").option("rowTag", "doc")
         .schema(batchIn.schema).load(xin)
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Classify.dsirScoreHashed(bdf, "doc_id", "text", lambda)
-            .write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-        .withColumnRenamed("id", "doc_id")
+      drain(s, stream, base) { bdf =>
+        Seq("out" -> Classify.dsirScoreHashed(bdf, "doc_id", "text", lambda))
+      }.withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
     }),
 
@@ -2332,16 +2330,10 @@ object SparkEntry {
       val base = Fixtures.scratch("stream_tl_run")
       val stream = s.readStream.option("maxFilesPerTrigger", 8)
         .schema(fresh.schema).parquet(pin)
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Similarity.kmeansTwoLevelServe(bdf, "vec_id", "embedding",
-              coarse, fine, kFine = 3)
-            .write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out").orderBy("id")
+      drain(s, stream, base) { bdf =>
+        Seq("out" -> Similarity.kmeansTwoLevelServe(bdf, "vec_id", "embedding",
+            coarse, fine, kFine = 3))
+      }.orderBy("id")
     }),
 
     "q250_mixture_epoch_plan" -> ((s, d) => {
@@ -2405,16 +2397,10 @@ object SparkEntry {
       // file-level parallelism inside each trigger's argmin scan.
       val stream = s.readStream.option("maxFilesPerTrigger", 8)
         .schema(batch.schema).parquet(pin)
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Similarity.semDeDupPairsAgainstIndex(bdf, "vec_id", "embedding",
-              coarse, fine, kFine = 3, index, threshold = 0.42)
-            .write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out").orderBy("batch_id", "index_id")
+      drain(s, stream, base) { bdf =>
+        Seq("out" -> Similarity.semDeDupPairsAgainstIndex(bdf, "vec_id", "embedding",
+            coarse, fine, kFine = 3, index, threshold = 0.42))
+      }.orderBy("batch_id", "index_id")
     }),
 
     "q252_ivf_delete_refresh" -> ((s, d) => {
@@ -2554,21 +2540,15 @@ object SparkEntry {
       val schema = s.read.parquet(s"$pin/wave1.parquet").schema
       val stream = s.readStream.option("maxFilesPerTrigger", 1)
         .schema(schema).parquet(s"$pin/wave*.parquet")
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val (pairs, admitted) = Similarity.semDeDupAdmitBatch(
-            bdf, "vec_id", "embedding", coarse, fine, kFine = 3,
-            s.read.parquet(s"$base/idx"), threshold = 0.42)
-          // pairs first: its action materializes the lazy checkpoints,
-          // so the admitted append below never scans the index path it
-          // is appending to.
-          pairs.write.mode("append").parquet(s"$base/out")
-          admitted.write.mode("append").parquet(s"$base/idx")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out").orderBy("batch_id", "index_id")
+      drain(s, stream, base) { bdf =>
+        val (pairs, admitted) = Similarity.semDeDupAdmitBatch(
+          bdf, "vec_id", "embedding", coarse, fine, kFine = 3,
+          s.read.parquet(s"$base/idx"), threshold = 0.42)
+        // pairs first: its action materializes the lazy checkpoints,
+        // so the admitted append after it never scans the index path it
+        // is appending to.
+        Seq("out" -> pairs, "idx" -> admitted)
+      }.orderBy("batch_id", "index_id")
     }),
 
     "q239_dsir_serve" -> ((s, d) => {
@@ -3512,16 +3492,9 @@ object SparkEntry {
       val base = Fixtures.scratch("stream_bpe_run")
       val stream = s.readStream.format("xmlng").option("rowTag", "doc")
         .schema(batchIn.schema).load(xin)
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          TextAnalysis.bpeTokenCounts(bdf, "doc_id", "text", merges)
-            .write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-        .select(col("id").as("doc_id"), col("bpe_tokens"))
+      drain(s, stream, base) { bdf =>
+        Seq("out" -> TextAnalysis.bpeTokenCounts(bdf, "doc_id", "text", merges))
+      }.select(col("id").as("doc_id"), col("bpe_tokens"))
         .orderBy("doc_id")
     }),
 
@@ -3708,16 +3681,9 @@ object SparkEntry {
       val base = Fixtures.scratch("stream_drift_run")
       val stream = s.readStream.format("xmlng").option("rowTag", "doc")
         .schema(batchIn.schema).load(xin)
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          TextAnalysis.tokenCountsByGroup(bdf, "text", Seq("source"))
-            .write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val streamed = s.read.parquet(s"$base/out")
-        .groupBy("source", "token").agg(sum("cnt").as("cnt"))
+      val streamed = drain(s, stream, base) { bdf =>
+        Seq("out" -> TextAnalysis.tokenCountsByGroup(bdf, "text", Seq("source")))
+      }.groupBy("source", "token").agg(sum("cnt").as("cnt"))
       TextAnalysis.tokenJsDivergenceFromCounts(reference, streamed, Seq("source"))
         .orderBy("source")
     }),
@@ -4049,15 +4015,9 @@ object SparkEntry {
       val base = Fixtures.scratch("stream_cdc_run")
       val stream = s.readStream.format("xmlng").option("rowTag", "doc")
         .schema(batchIn.schema).load(xin)
-      val q = stream.writeStream
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          TextAnalysis.cdcReuseAgainstLedger(bdf, "doc_id", "text", ledger)
-            .write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out").orderBy("doc_id")
+      drain(s, stream, base) { bdf =>
+        Seq("out" -> TextAnalysis.cdcReuseAgainstLedger(bdf, "doc_id", "text", ledger))
+      }.orderBy("doc_id")
     }),
 
     "q124_cdc_transfer_diff" -> ((s, d) => {

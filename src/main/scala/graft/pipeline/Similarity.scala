@@ -111,9 +111,10 @@ object Similarity {
    * encoder's centroid probe drops between snapshots, the embedding
    * space moved (the q138 drift read, made task-shaped).
    *
-   * Scale shape: one (label, dim) partial-sum aggregate for the fit, a
-   * map-side argmin against the broadcast centroid matrix for the eval
-   * (|labels|·dim longs — bounded collect), one |labels|-row aggregate.
+   * Scale shape: one (label, dim) partial-sum aggregate for the fit, the
+   * centroid kernel's argmin against the |labels|·dim centroid matrix
+   * (bounded collect) for the eval — inline up to 16 labels, a broadcast
+   * join past that — and one |labels|-row aggregate. `idCol` is not read.
    */
   def centroidLabelProbe(
       train: DataFrame,
@@ -121,16 +122,10 @@ object Similarity {
       idCol: String,
       vecCol: String,
       labelCol: String): DataFrame = {
-    def quantized(df: DataFrame): DataFrame =
-      df.select(col(idCol).cast("long").as("id"),
-        col(labelCol).cast("int").as("label"),
-        transform(col(vecCol).cast("array<double>"),
-          x => round(x * lit(1000000.0)).cast("long")).as("qv"))
+    def labelled(df: DataFrame): DataFrame =
+      df.select(col(labelCol).cast("int").as("label"), quantize(col(vecCol)).as("qv"))
         .where(col("label").isNotNull)
-    val cents = quantized(train)
-      .select(col("label"), posexplode(col("qv")).as(Seq("dim", "q")))
-      .groupBy(col("label"), col("dim"))
-      .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
+    val cents = microSums(labelled(train), col("qv"), col("label"))
       .select(col("label"), col("dim"), expr("s div n").as("c"))
       .collect()
     require(cents.nonEmpty, "centroidLabelProbe: train slice has no labels")
@@ -138,17 +133,8 @@ object Similarity {
       case (label, rows) =>
         label -> rows.sortBy(_.getInt(1)).map(_.getLong(2))
     }
-    val scored = byLabel.map { case (label, c) =>
-      struct(
-        aggregate(zip_with(col("qv"), typedlit(c.toSeq),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, v) => acc + v).as("d2"),
-        lit(label).as("pred"))
-    }
-    quantized(eval)
-      .withColumn("__best",
-        if (scored.length == 1) scored.head else least(scored: _*))
-      .select(col("label"), col("__best.pred").as("pred"))
+    argmin(labelled(eval), byLabel.map(_._2).toArray, byLabel.map(_._1).toIndexedSeq)
+      .select(col("label"), col("__best.cluster").as("pred"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_eval"),
         sum(when(col("pred") === col("label"), 1L).otherwise(0L))
@@ -344,31 +330,188 @@ object Similarity {
     cents
   }
 
+  // ---- Centroid kernel ------------------------------------------------
+  //
+  // Every integer k-means entry point in this object (flat Lloyd, its
+  // stored-model serve and suff-stats, the two-level trainer and serve, the
+  // label probe, the IVF centroid refresh) is a thin call into these pieces, so
+  // all of them share one arithmetic, replayable bit-for-bit on any engine:
+  //  - vectors quantize ONCE to integer micro (the q138 seam);
+  //  - distances are exact integer squared-L2 (|q| ≤ ~2e6 over ≤ 1024
+  //    dims keeps d² well inside int64);
+  //  - argmin ties break on the LOWER cluster id (struct ordering);
+  //  - centroids are truncating `div` of micro sums (Spark `div` / DuckDB
+  //    `//`, toward zero — NOT floorDiv, micro sums can be negative; per-
+  //    cluster sums stay exact to ~4.6e12 rows/cluster);
+  //  - an EMPTY cluster keeps its previous centroid.
+
+  /** One element in integer micro units (round half away from zero). */
+  private def micro(x: Column): Column = round(x * lit(1000000.0)).cast("long")
+
+  /** A numeric array column quantized element-wise to micro longs. */
+  private def quantize(v: Column): Column = transform(v.cast("array<double>"), x => micro(x))
+
+  /** Exact integer squared-L2 of two long arrays. */
+  private def l2sq(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, v) => acc + v)
+
+  /** The kernel's (id, qv) input frame: ids as long, vectors in micro. */
+  private def points(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"), quantize(col(vecCol)).as("qv"))
+
+  /** Per-(keys…, dim) micro sums and counts of the `qv` vectors of
+    * `rows`: (keys…, dim, s, n) — the MERGEABLE form of a centroid update
+    * (stats of disjoint slices add), map-side combined, so keys·dim rows
+    * cross the exchange. A centroid is `s div n`. */
+  private def microSums(rows: DataFrame, qv: Column, keys: Column*): DataFrame = {
+    val exploded = rows.select(keys :+ posexplode(qv).as(Seq("dim", "q")): _*)
+    exploded.groupBy(exploded.columns.dropRight(1).map(col): _*)
+      .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
+  }
+
+  /** Inline-expression k-tier boundary for [[argmin]]: past ~16
+    * centroids the k·dim candidate expression tree outgrows whole-stage
+    * codegen and the keyed-join plan wins. */
+  private val MaxInlineCentroids = 16
+
   /**
-   * Distributed Lloyd k-means over the FULL corpus — the scale path beside
-   * [[kmeansCentroids]]'s bounded driver-sample fit: when the corpus (not
-   * just the model) must drive the centroids, assignment is a map-side
-   * exact-integer argmin against a broadcast centroid matrix, each
-   * iteration's only shuffle is the (cluster, dim) partial-sum aggregate
-   * (map-side combined — k·dim rows cross the exchange), and the only
-   * driver state is the k×dim centroid table (512 longs at k=8, dim=64 —
-   * the bounded-collect convention). The corpus re-scans once per
-   * iteration; cache the quantized projection upstream if scans dominate.
+   * Exact-integer nearest centroid of every row of a (…, qv) frame:
+   * appends `__best` = struct(d2 micro², cluster), where centroid `i`
+   * carries cluster id `ids(i)` (default `i`) and ties go to the lower
+   * id. Two plans, ONE semantics:
    *
-   * Exactness (bit-for-bit replay on any engine):
-   *  - vectors quantize ONCE to integer micro (the q138 seam);
-   *  - distances are exact integer squared-L2 (|q| ≤ ~2e6 over ≤ 1024
-   *    dims keeps d² well inside int64);
-   *  - argmin ties break on the LOWER cluster id (struct `least`);
-   *  - new centroids are truncating `div` of micro sums (per-cluster
-   *    micro sums stay exact to ~4.6e12 rows/cluster);
-   *  - an EMPTY cluster keeps its previous centroid;
-   *  - init is the k vectors with the smallest (md5(seed|id), id) — a
-   *    corpus-derived, seedable order, no RNG anywhere.
-   *
-   * Runs `iters` (assign, update) rounds, then returns the assignment
-   * against the FINAL centroids: (id, cluster, d2) with d2 in micro².
+   *  - k ≤ [[MaxInlineCentroids]]: [[argminInline]] — the k candidate
+   *    structs inline into a single codegen'd `least`; zero shuffle, zero
+   *    extra rows (the q204 plan).
+   *  - larger k (auto-k SemDeDup derives k ∝ n, so this tier is the
+   *    100×-corpus path): [[argminJoin]] against the centroid matrix as a
+   *    BROADCAST k-row table cross-joined into the scan.
    */
+  private[pipeline] def argmin(
+      base: DataFrame,
+      cents: Array[Array[Long]],
+      ids: Int => Int = identity): DataFrame =
+    if (cents.length <= MaxInlineCentroids) argminInline(base, cents, ids)
+    else {
+      val sp = base.sparkSession
+      import sp.implicits._
+      val table = cents.indices.map(i => (ids(i), cents(i).toSeq)).toDF("cluster", "cv")
+      val keys = base.columns.filter(_ != "qv").map(col)
+      argminJoin(base, broadcast(table), Nil, "cluster")
+        .select(keys :+ col("__m.qv").as("qv") :+
+          struct(col("__m.d2").as("d2"), col("__m.cluster").as("cluster")).as("__best"): _*)
+    }
+
+  /** [[argmin]]'s inline tier, for any k. */
+  private[pipeline] def argminInline(
+      base: DataFrame,
+      cents: Array[Array[Long]],
+      ids: Int => Int = identity): DataFrame = {
+    val scored = cents.indices.map { i =>
+      struct(l2sq(col("qv"), typedlit(cents(i).toSeq)).as("d2"), lit(ids(i)).as("cluster"))
+    }
+    base.withColumn("__best",
+      if (scored.length == 1) scored.head else least(scored: _*))
+  }
+
+  /**
+   * The keyed-join argmin tier shared by the flat and fine levels: every
+   * row of `base` (…, qv) meets its candidate centroids in ONE join — a
+   * cross join when `on` is empty (the flat level's broadcast matrix), an
+   * equi-join on `on` otherwise (the fine level's shard-keyed table) —
+   * and the argmin is an exact `min(struct(d2, cl, qv))` aggregate per
+   * input row. Partial aggregation collapses the candidates inside the
+   * generating task, so the exchange carries one row per input row; n·k
+   * candidate rows exist only transiently map-side. (d2, cl) is unique
+   * within a row's candidate set, so the qv tail (carried to keep the
+   * row's vector without a rejoin) never decides a comparison. Rows are
+   * keyed by position, not by their other columns, so rows that share an
+   * id stay apart as they do on the inline tier. Centroid table: (on…,
+   * `cl`, cv). Output: the non-qv columns of `base` and `__m`.
+   */
+  private[pipeline] def argminJoin(
+      base: DataFrame,
+      cents: DataFrame,
+      on: Seq[String],
+      cl: String): DataFrame = {
+    val keys = col("__row") +: base.columns.filter(_ != "qv").map(col)
+    val rows = base.withColumn("__row", monotonically_increasing_id())
+    val joined = if (on.isEmpty) rows.crossJoin(cents) else rows.join(cents, on)
+    joined
+      .select(keys :+ struct(l2sq(col("qv"), col("cv")).as("d2"), col(cl), col("qv"))
+        .as("__cand"): _*)
+      .groupBy(keys: _*)
+      .agg(min(col("__cand")).as("__m"))
+      .drop("__row")
+  }
+
+  /** Test hook: rows collected to the driver by the Lloyd trainers since
+    * the last reset. Specs pin with it that [[kmeansTwoLevelAssign]]'s
+    * driver state is bounded by the COARSE level alone — sublinear in the
+    * total cluster count k, the property that keeps auto-k SemDeDup off
+    * the driver-OOM path at 100×. Not part of any query plan. */
+  private[pipeline] val driverCollectedRows =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The flat trainer's (id, qv) frame. On the keyed-join tier
+    * (k > [[MaxInlineCentroids]] — the auto-k path, where each pass scores
+    * k candidates per row) an unsplittable scan spreads across the cores
+    * and the quantized vectors materialize ONCE, since iters+2 passes
+    * (seeding, per-iteration stats, final assignment) each re-read this
+    * frame — measured at sf0.1 as one ~1 s task per pass with the other
+    * cores idle (ABAB: q208 4.97 → 3.65 s). The inline tier keeps the
+    * bare scan: its argmin is a single codegen'd expression, and the
+    * exchange + checkpoint cost more than they save there (measured,
+    * same ABAB: q237 +0.2 s when applied unconditionally). */
+  private def lloydInput(
+      df: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int): DataFrame = {
+    Dedup.requireIntegralId(df, idCol, "kmeansLloydAssign")
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(iters >= 0, s"iters must be >= 0, got $iters")
+    val heavyK = k > MaxInlineCentroids
+    val src =
+      if (heavyK) PlanStats.spreadScan(df, df.sparkSession.sparkContext.defaultParallelism)
+      else df
+    val base = points(src, idCol, vecCol)
+    if (heavyK) base.localCheckpoint(eager = false) else base
+  }
+
+  /** (cluster, dim, s, n) of `base` assigned to `cents`. */
+  private def flatStats(base: DataFrame, cents: Array[Array[Long]]): DataFrame =
+    microSums(argmin(base, cents), col("qv"), col("__best.cluster").as("cluster"))
+
+  /** (id, cluster, d2) of an [[argmin]] frame. */
+  private def flatAssignment(best: DataFrame): DataFrame =
+    best.select(col("id"), col("__best.cluster").as("cluster"), col("__best.d2").as("d2"))
+
+  /** Flat integer Lloyd over a [[lloydInput]] frame: init is the k rows
+    * with the smallest (md5(seed|id), id) — a corpus-derived, seedable
+    * order, no RNG anywhere — then `iters` (assign, update) rounds. Each
+    * round's only shuffle is the (cluster, dim) micro-sum aggregate, and
+    * its only collect the k·dim centroid table itself. */
+  private def lloyd(base: DataFrame, k: Int, iters: Int, seed: String): Array[Array[Long]] = {
+    val seedRows = base
+      .orderBy(md5(concat(lit(seed), lit("|"), col("id").cast("string"))),
+        col("id"))
+      .limit(k).collect()
+    driverCollectedRows.addAndGet(seedRows.length)
+    require(seedRows.length == k,
+      s"kmeansLloydAssign: corpus has ${seedRows.length} rows < k=$k")
+    val dim = seedRows.head.getSeq[Long](1).length
+    var cents = seedRows.map(_.getSeq[Long](1).toArray)
+    for (_ <- 1 to iters) {
+      val parts = flatStats(base, cents).collect()
+      driverCollectedRows.addAndGet(parts.length)
+      // Clusters absent from `parts` (empty this round) keep their
+      // previous centroid.
+      val next = cents.map(_.clone())
+      parts.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getLong(2) / r.getLong(3))
+      cents = next
+    }
+    require(cents.forall(_.length == dim), "centroid dim drift")
+    cents
+  }
+
   /** [[kmeansLloydAssign]]'s trained centroid matrix, exposed for the
     * store-and-refresh lifecycle: k rows of `dim` micro longs, indexed by
     * cluster. Same training, same determinism. */
@@ -379,8 +522,23 @@ object Similarity {
       k: Int,
       iters: Int,
       seed: String = "km"): Array[Array[Long]] =
-    lloydState(df, idCol, vecCol, k, iters, seed)._2
+    lloyd(lloydInput(df, idCol, vecCol, k, iters), k, iters, seed)
 
+  /**
+   * Distributed Lloyd k-means over the FULL corpus — the scale path beside
+   * [[kmeansCentroids]]'s bounded driver-sample fit: when the corpus (not
+   * just the model) must drive the centroids, assignment is a map-side
+   * exact-integer argmin against a broadcast centroid matrix, each
+   * iteration's only shuffle is the (cluster, dim) partial-sum aggregate
+   * (map-side combined — k·dim rows cross the exchange), and the only
+   * driver state is the k×dim centroid table (512 longs at k=8, dim=64 —
+   * the bounded-collect convention). The corpus re-scans once per
+   * iteration; cache the quantized projection upstream if scans dominate.
+   * Arithmetic and init are the centroid kernel's (see [[lloyd]]).
+   *
+   * Runs `iters` (assign, update) rounds, then returns the assignment
+   * against the FINAL centroids: (id, cluster, d2) with d2 in micro².
+   */
   def kmeansLloydAssign(
       df: DataFrame,
       idCol: String,
@@ -388,154 +546,8 @@ object Similarity {
       k: Int,
       iters: Int,
       seed: String = "km"): DataFrame = {
-    val (base, cents, withBest) = lloydState(df, idCol, vecCol, k, iters, seed)
-    withBest(cents)
-      .select(col("id"), col("__best.cluster").as("cluster"),
-        col("__best.d2").as("d2"))
-  }
-
-  /** Inline-expression k-tier boundary for [[bestAssign]]: past ~16
-    * centroids the k·dim candidate expression tree outgrows whole-stage
-    * codegen and the broadcast-table plan wins. */
-  private val MaxInlineCentroids = 16
-
-  /** Test hook: rows collected to the driver by the Lloyd trainers since
-    * the last reset. Specs pin with it that [[kmeansTwoLevelAssign]]'s
-    * driver state is bounded by the COARSE level alone — sublinear in the
-    * total cluster count k, the property that keeps auto-k SemDeDup off
-    * the driver-OOM path at 100×. Not part of any query plan. */
-  private[pipeline] val driverCollectedRows =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /**
-   * Exact-integer nearest-centroid tag shared by every Lloyd-family
-   * argmin: appends `__best` = struct(d2 micro², cluster) to a frame of
-   * (id, qv) rows. Two plans, ONE semantics (exact integer squared-L2,
-   * ties to the lower cluster id):
-   *
-   *  - k ≤ [[MaxInlineCentroids]]: the k candidate structs inline into a
-   *    single codegen'd `least` — zero shuffle, zero extra rows (the
-   *    q204 plan, unchanged).
-   *  - larger k (auto-k SemDeDup derives k ∝ n, so this tier is the
-   *    100×-corpus path): the centroid matrix becomes a BROADCAST k-row
-   *    table cross-joined into the scan, and the argmin an exact
-   *    `min(struct(d2, cluster, qv))` aggregate. Partial aggregation
-   *    collapses the k candidates per row inside the generating task, so
-   *    the exchange still carries one row per input row — n·k rows exist
-   *    only transiently map-side. (d2, cluster) is unique within a row's
-   *    candidate set, so the qv tail (carried to keep the row's vector
-   *    without a rejoin) never decides a comparison.
-   */
-  private def bestAssign(
-      base: DataFrame,
-      cents: Array[Array[Long]]): DataFrame =
-    if (cents.length <= MaxInlineCentroids) bestAssignInline(base, cents)
-    else bestAssignBroadcast(base, cents)
-
-  private[pipeline] def bestAssignInline(
-      base: DataFrame,
-      cents: Array[Array[Long]]): DataFrame = {
-    val scored = cents.zipWithIndex.map { case (c, i) =>
-      struct(
-        aggregate(zip_with(col("qv"), typedlit(c.toSeq),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, v) => acc + v).as("d2"),
-        lit(i).as("cluster"))
-    }
-    base.withColumn("__best",
-      if (scored.length == 1) scored.head else least(scored: _*))
-  }
-
-  private[pipeline] def bestAssignBroadcast(
-      base: DataFrame,
-      cents: Array[Array[Long]]): DataFrame = {
-    val sp = base.sparkSession
-    import sp.implicits._
-    val centDf = cents.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("__cl", "__cv")
-    base.crossJoin(broadcast(centDf))
-      .select(col("id"),
-        struct(
-          aggregate(zip_with(col("qv"), col("__cv"),
-              (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, v) => acc + v).as("d2"),
-          col("__cl").as("cluster"),
-          col("qv").as("qv")).as("__cand"))
-      .groupBy(col("id"))
-      .agg(min(col("__cand")).as("__m"))
-      .select(col("id"), col("__m.qv").as("qv"),
-        struct(col("__m.d2").as("d2"), col("__m.cluster").as("cluster"))
-          .as("__best"))
-  }
-
-  private def lloydState(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      iters: Int,
-      seed: String): (DataFrame, Array[Array[Long]],
-        Array[Array[Long]] => DataFrame) = {
-    Dedup.requireIntegralId(df, idCol, "kmeansLloydAssign")
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    // On the broadcast-argmin tier (k > MaxInlineCentroids — the auto-k
-    // path, where each pass scores k candidates per row): spread an
-    // unsplittable scan across the cores and materialize the quantized
-    // vectors ONCE, since iters+2 passes (seeding, per-iteration
-    // suff-stats, final assignment) each re-read this frame — measured at
-    // sf0.1 as one ~1 s task per pass with the other cores idle (ABAB:
-    // q208 4.97 → 3.65 s). The k ≤ 16 inline tier keeps the bare scan:
-    // its argmin is a single codegen'd expression, and the exchange +
-    // checkpoint cost more than they save there (measured, same ABAB:
-    // q237 +0.2 s when applied unconditionally).
-    val heavyK = k > MaxInlineCentroids
-    val src =
-      if (heavyK)
-        PlanStats.spreadScan(df, df.sparkSession.sparkContext.defaultParallelism)
-      else df
-    val sel = src.select(col(idCol).cast("long").as("id"),
-      transform(col(vecCol).cast("array<double>"),
-        x => round(x * lit(1000000.0)).cast("long")).as("qv"))
-    val base = if (heavyK) sel.localCheckpoint(eager = false) else sel
-
-    def withBest(cents: Array[Array[Long]]): DataFrame = bestAssign(base, cents)
-
-    val seedRows = base
-      .orderBy(md5(concat(lit(seed), lit("|"), col("id").cast("string"))),
-        col("id"))
-      .limit(k).collect()
-    driverCollectedRows.addAndGet(seedRows.length)
-    require(seedRows.length == k,
-      s"kmeansLloydAssign: corpus has ${seedRows.length} rows < k=$k")
-    val dim = seedRows.head.getSeq[Long](1).length
-    var cents = seedRows.map(_.getSeq[Long](1).toArray)
-
-    var it = 0
-    while (it < iters) {
-      // (cluster, dim) micro sums + counts: k·dim rows after the map-side
-      // combine — the ONLY shuffle of the round, and the ONLY collect is
-      // the k·dim centroid table itself.
-      val parts = withBest(cents)
-        .select(col("__best.cluster").as("cluster"),
-          posexplode(col("qv")).as(Seq("dim", "q")))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      driverCollectedRows.addAndGet(parts.length)
-      // Truncating div toward zero (Spark `div` / DuckDB `//` semantics,
-      // NOT floorDiv — micro sums can be negative). Clusters absent from
-      // `parts` (empty this round) keep their previous centroid.
-      val next = cents.map(_.clone())
-      parts.foreach { r =>
-        val c = r.getInt(0); val d = r.getInt(1)
-        next(c)(d) = r.getLong(2) / r.getLong(3)
-      }
-      cents = next
-      it += 1
-    }
-    require(cents.forall(_.length == dim), "centroid dim drift")
-    (base, cents, withBest)
+    val base = lloydInput(df, idCol, vecCol, k, iters)
+    flatAssignment(argmin(base, lloyd(base, k, iters, seed)))
   }
 
   /**
@@ -552,11 +564,7 @@ object Similarity {
       vecCol: String,
       cents: Array[Array[Long]]): DataFrame = {
     require(cents.nonEmpty, "need at least one centroid")
-    bestAssign(df.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol).cast("array<double>"),
-          x => round(x * lit(1000000.0)).cast("long")).as("qv")), cents)
-      .select(col("id"), col("__best.cluster").as("cluster"),
-        col("__best.d2").as("d2"))
+    flatAssignment(argmin(points(df, idCol, vecCol), cents))
   }
 
   /**
@@ -575,13 +583,7 @@ object Similarity {
       vecCol: String,
       cents: Array[Array[Long]]): DataFrame = {
     require(cents.nonEmpty, "need at least one centroid")
-    bestAssign(df.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol).cast("array<double>"),
-          x => round(x * lit(1000000.0)).cast("long")).as("qv")), cents)
-      .select(col("__best.cluster").as("cluster"),
-        posexplode(col("qv")).as(Seq("dim", "q")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
+    flatStats(points(df, idCol, vecCol), cents)
   }
 
   /** Centroid refresh from merged [[kmeansSuffStats]] tables: one
@@ -591,6 +593,21 @@ object Similarity {
     stats.groupBy(col("cluster"), col("dim"))
       .agg(sum(col("s")).as("__s"), sum(col("n")).as("__n"))
       .select(col("cluster"), col("dim"), expr("__s div __n").as("c"))
+
+  /** (id, qv, shard) of a coarse [[argmin]] frame. */
+  private def shards(best: DataFrame): DataFrame =
+    best.select(col("id"), col("qv"), col("__best.cluster").as("shard"))
+
+  /** (shard, fcl, dim, s, n) of a fine argmin frame (id, shard, __m). */
+  private def fineStats(m: DataFrame): DataFrame =
+    microSums(m, col("__m.qv"), col("shard"), col("__m.fcl").as("fcl"))
+
+  /** (id, cluster, d2) of a fine argmin frame: global cluster id
+    * `shard · kFine + fcl`. */
+  private def twoLevelAssignment(m: DataFrame, kFine: Int): DataFrame =
+    m.select(col("id"),
+      (col("shard") * kFine + col("__m.fcl")).cast("int").as("cluster"),
+      col("__m.d2").as("d2"))
 
   /**
    * Two-level (coarse→fine) integer Lloyd — the trainer for cluster
@@ -605,22 +622,20 @@ object Similarity {
    *     the driver (kCoarse×dim longs, sublinear in k).
    *  2. FINE: `kFine` centroids per shard, trained for `itersFine`
    *     rounds entirely DataFrame-resident — seeds rank per shard with
-   *     a window over the shard partitioning, every argmin is a
-   *     shard-keyed equi-join against the (shard, fcl, cv) centroid
-   *     table followed by a `min(struct)` partial aggregate (the
-   *     exchange carries ONE row per input row; n·kFine candidates
-   *     exist only transiently map-side), and centroid updates are the
-   *     same (shard, fcl, dim) micro-sum truncating-div as the flat
-   *     level, landing back in a DataFrame, never on the driver.
+   *     a window over the shard partitioning, every argmin is the
+   *     kernel's keyed-join tier joined on shard against the (shard,
+   *     fcl, cv) centroid table ([[argminJoin]]), and centroid updates
+   *     are the same micro-sum truncating-div as the flat level, landing
+   *     back in a DataFrame, never on the driver.
    *
    * Global cluster id = `shard · kFine + fcl`. Same determinism contract
    * as the flat trainer — micro quantization, md5-seeded init (coarse
-   * seeds salt `seed|c`, fine seeds `seed|f|`), struct-least ties to the
-   * lower cluster id, truncating-div centroids, empty clusters keep
-   * their previous centroid — so a DuckDB CTE replay agrees
-   * bit-for-bit (the q237 gate). A boundary-straddling point may land
-   * in a different fine cluster than flat Lloyd at k would give — the
-   * documented hierarchical approximation, the same trade IVF makes.
+   * seeds salt `seed|c`, fine seeds `seed|f|`), ties to the lower
+   * cluster id, truncating-div centroids, empty clusters keep their
+   * previous centroid — so a DuckDB CTE replay agrees bit-for-bit (the
+   * q237 gate). A boundary-straddling point may land in a different fine
+   * cluster than flat Lloyd at k would give — the documented
+   * hierarchical approximation, the same trade IVF makes.
    *
    * Scale shape per fine round: one shard-keyed join (centroid side is
    * k rows, shuffled by shard alongside the corpus's reused shard
@@ -636,32 +651,10 @@ object Similarity {
       itersCoarse: Int,
       itersFine: Int,
       seed: String = "km"): DataFrame = {
-    val (base, cents, _) = twoLevelState(df, idCol, vecCol, kCoarse, kFine,
+    val (base, cents, _) = twoLevelFit(df, idCol, vecCol, kCoarse, kFine,
       itersCoarse, itersFine, seed)
-    fineArgmin(base, cents)
-      .select(col("id"),
-        (col("shard") * kFine + col("__m.fcl")).cast("int").as("cluster"),
-        col("__m.d2").as("d2"))
+    twoLevelAssignment(argminJoin(base, cents, Seq("shard"), "fcl"), kFine)
   }
-
-  /** One fine-level argmin pass: shard-keyed equi-join against the
-    * (shard, fcl, cv) centroid table, exact integer d2,
-    * min(struct(d2, fcl, qv)) partial aggregate — the exchange carries
-    * ONE row per input row; per-row candidates exist only transiently
-    * map-side. (d2, fcl) is unique within a row's candidate set, so the
-    * qv tail (carried to avoid a rejoin in the update step) never
-    * decides a comparison. Input frame: (id, shard, qv). */
-  private[pipeline] def fineArgmin(base: DataFrame, cents: DataFrame): DataFrame =
-    base.join(cents, Seq("shard"))
-      .select(col("id"), col("shard"),
-        struct(
-          aggregate(zip_with(col("qv"), col("cv"),
-              (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, v) => acc + v).as("d2"),
-          col("fcl").as("fcl"),
-          col("qv").as("qv")).as("__cand"))
-      .groupBy(col("id"), col("shard"))
-      .agg(min(col("__cand")).as("__m"))
 
   /** Serve-side fine-argmin budget: collect the STORED fine table and
     * evaluate one primitive loop per row when the model holds at most
@@ -676,17 +669,6 @@ object Similarity {
     * by the coarse level, spec-pinned) must hold at any k. */
   private[pipeline] val FineInlineMaxElements = 1L << 23
 
-  /** Inline-tier memo: the shape probe + fine-table collect, keyed by
-    * the REFERENCE identity of the caller's stored-model DataFrame (and
-    * kCoarse). A serve loop — q251's foreachBatch — holds ONE frozen
-    * fine DataFrame across micro-batches, so the probe and the ≤64 MB
-    * collect run once and every batch's expression shares the same
-    * flattened arrays instead of re-aggregating + re-collecting per
-    * invocation. Reference identity (never structural plan equality)
-    * means a re-read of a refreshed model is a new DataFrame → a fresh
-    * probe; `None` caches the join-plan decision. LRU-bounded at 8
-    * entries, each ≤ [[FineInlineMaxElements]] longs by the same gate
-    * that admits it. */
   private final class FineModelKey(val ref: AnyRef, val kCoarse: Int) {
     override def hashCode: Int = System.identityHashCode(ref) * 31 + kCoarse
     override def equals(o: Any): Boolean = o match {
@@ -694,98 +676,100 @@ object Similarity {
       case _ => false
     }
   }
-  private type FineInline = Option[(Array[Array[Long]], Array[Array[Int]], Int)]
-  private val fineServeCache =
-    new java.util.LinkedHashMap[FineModelKey, FineInline](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[FineModelKey, FineInline]): Boolean =
-        size() > 8
-    }
 
-  /** Serve-side shape-validation memo (same identity keying and bound as
-    * [[fineServeCache]]): one validated bounds row per stored fine frame. */
-  private val fineShapeCache =
-    new java.util.LinkedHashMap[FineModelKey, org.apache.spark.sql.Row](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[FineModelKey, org.apache.spark.sql.Row])
-        : Boolean = size() > 8
-    }
-
-  /** One shape probe + (when admitted) one collect of the stored fine
-    * table: the inline tier engages only when the table is non-empty,
-    * covers shard ids EXACTLY {0..kCoarse−1} (count of distinct ids
-    * alone is not enough — a malformed table with kCoarse ids outside
-    * the range, which a direct [[fineArgminServe]] caller can pass
-    * without the public entry points' shape validation, must ride the
-    * join plan rather than throw at `byShard(sh)`), and holds at most
-    * [[FineInlineMaxElements]] stored elements. */
-  private def fineInlineModel(cents: DataFrame, kCoarse: Int): FineInline = {
-    val shape = cents
-      .agg(count(lit(1)), max(size(col("cv"))), countDistinct(col("shard")),
-        min(col("shard")), max(col("shard")))
+  /** A stored fine table as the serve path sees it: its shape from ONE
+    * aggregate — (rows, shard min/max, fcl min/max, dim min/max, distinct
+    * shards), which both validates the table against a declared model
+    * ([[storedModelArgmin]]) and decides the inline tier — and, when
+    * admitted, the table collected and flattened per shard on first use.
+    * The inline tier engages only when the table is non-empty, covers
+    * shard ids EXACTLY {0..kCoarse−1} (kCoarse distinct ids all inside
+    * [0, kCoarse) — the count alone is not enough: a malformed table with
+    * kCoarse ids outside the range, which a direct [[fineArgminServe]]
+    * caller can pass without the public entry points' validation, must
+    * ride the join plan rather than throw at `byShard(sh)`), and holds at
+    * most [[FineInlineMaxElements]] elements. */
+  private final class StoredFine(cents: DataFrame, kCoarse: Int) {
+    val shape: org.apache.spark.sql.Row = cents
+      .agg(count(lit(1)), min(col("shard")), max(col("shard")),
+        min(col("fcl")), max(col("fcl")),
+        min(size(col("cv"))), max(size(col("cv"))), countDistinct(col("shard")))
       .head()
-    val nRows = shape.getLong(0)
-    val dim = if (shape.isNullAt(1)) 0 else shape.getInt(1)
-    // kCoarse DISTINCT ids all inside [0, kCoarse) is exactly the full
-    // id set (pigeonhole) — byShard(sh) below cannot miss.
-    val covered = nRows > 0 && shape.getLong(2) == kCoarse.toLong &&
-      shape.getInt(3) >= 0 && shape.getInt(4) < kCoarse
-    if (nRows == 0 || dim <= 0 || !covered ||
-        nRows * dim > FineInlineMaxElements) {
-      None
-    } else {
-      val rows = cents.select(col("shard"), col("fcl"), col("cv")).collect()
-      val byShard = rows.groupBy(_.getInt(0))
-      val fines = Array.ofDim[Array[Long]](kCoarse)
-      val fcls = Array.ofDim[Array[Int]](kCoarse)
-      (0 until kCoarse).foreach { sh =>
-        val sorted = byShard(sh).sortBy(_.getInt(1))
-        fcls(sh) = sorted.map(_.getInt(1))
-        val flat = new Array[Long](sorted.length * dim)
-        sorted.zipWithIndex.foreach { case (r, i) =>
-          val cv = r.getSeq[Long](2)
-          var d = 0
-          while (d < cv.length && d < dim) {
-            flat(i * dim + d) = cv(d); d += 1
+
+    lazy val inline: Option[(Array[Array[Long]], Array[Array[Int]], Int)] = {
+      val nRows = shape.getLong(0)
+      val dim = if (shape.isNullAt(6)) 0 else shape.getInt(6)
+      val covered = nRows > 0 && shape.getLong(7) == kCoarse.toLong &&
+        shape.getInt(1) >= 0 && shape.getInt(2) < kCoarse
+      if (!covered || dim <= 0 || nRows * dim > FineInlineMaxElements) None
+      else {
+        val byShard = cents.select(col("shard"), col("fcl"), col("cv")).collect()
+          .groupBy(_.getInt(0))
+        val fines = Array.ofDim[Array[Long]](kCoarse)
+        val fcls = Array.ofDim[Array[Int]](kCoarse)
+        (0 until kCoarse).foreach { sh =>
+          val sorted = byShard(sh).sortBy(_.getInt(1))
+          fcls(sh) = sorted.map(_.getInt(1))
+          val flat = new Array[Long](sorted.length * dim)
+          sorted.zipWithIndex.foreach { case (r, i) =>
+            val cv = r.getSeq[Long](2)
+            var d = 0
+            while (d < cv.length && d < dim) {
+              flat(i * dim + d) = cv(d); d += 1
+            }
           }
+          fines(sh) = flat
         }
-        fines(sh) = flat
+        Some((fines, fcls, dim))
       }
-      Some((fines, fcls, dim))
     }
   }
 
-  /** [[fineArgmin]] for SERVE-time callers holding a stored model:
-    * same output contract (id, shard, __m struct(d2, fcl, qv)), tiered
-    * by model size. `kCoarse` guards coverage — the inline tier needs
-    * shard ids exactly {0..kCoarse−1} (the fit-side patch guarantees
-    * it; a partial or out-of-range table falls back to the join plan,
-    * whose semantics are per-row). The probe + collect are memoized per
-    * stored-model DataFrame — see [[fineServeCache]]. */
-  private[pipeline] def fineArgminServe(
-      base: DataFrame, cents: DataFrame, kCoarse: Int): DataFrame = {
-    val key = new FineModelKey(cents, kCoarse)
-    val cached = fineServeCache.synchronized(Option(fineServeCache.get(key)))
-    val inline = cached.getOrElse {
-      val computed = fineInlineModel(cents, kCoarse)
-      fineServeCache.synchronized(fineServeCache.put(key, computed))
-      computed
+  /** Stored-model memo, keyed by the REFERENCE identity of the caller's
+    * fine DataFrame (and kCoarse). A serve loop — q251's foreachBatch —
+    * holds ONE frozen fine DataFrame across micro-batches, so the shape
+    * aggregate and the ≤64 MB collect run once and every batch's
+    * expression shares the same flattened arrays. Reference identity
+    * (never structural plan equality) means a re-read of a refreshed model
+    * is a new DataFrame → a fresh probe. LRU-bounded at 8 entries, each
+    * ≤ [[FineInlineMaxElements]] longs by the gate that admits it. */
+  private val storedFines =
+    new java.util.LinkedHashMap[FineModelKey, StoredFine](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[FineModelKey, StoredFine]): Boolean = size() > 8
     }
-    inline match {
+
+  private def storedFine(cents: DataFrame, kCoarse: Int): StoredFine = {
+    val key = new FineModelKey(cents, kCoarse)
+    storedFines.synchronized(Option(storedFines.get(key))).getOrElse {
+      val probed = new StoredFine(cents, kCoarse)
+      storedFines.synchronized(storedFines.put(key, probed))
+      probed
+    }
+  }
+
+  /** The fine argmin for SERVE-time callers holding a stored model:
+    * input (id, qv, shard), output (id, shard, __m struct(d2, fcl, qv)),
+    * tiered by model size — the `nearest_fine_centroid_l2` expression
+    * over the collected table when [[StoredFine]] admits it, else the
+    * kernel's shard-keyed join ([[argminJoin]]), whose semantics are
+    * per-row. `kCoarse` guards coverage (the fit-side patch guarantees
+    * it; a partial or out-of-range table falls back to the join). */
+  private[pipeline] def fineArgminServe(
+      base: DataFrame, cents: DataFrame, kCoarse: Int): DataFrame =
+    storedFine(cents, kCoarse).inline match {
       case Some((fines, fcls, dim)) =>
         base.select(col("id"), col("shard"),
           CentroidFunctions.nearest_fine_centroid_l2(
             col("shard"), col("qv"), fines, fcls, dim).as("__m"))
-      case None => fineArgmin(base, cents)
+      case None => argminJoin(base, cents, Seq("shard"), "fcl")
     }
-  }
 
   /** Shared fit core of the two-level lifecycle: coarse flat Lloyd →
     * shard-partitioned corpus → DataFrame-resident fine Lloyd. Returns
-    * (sharded corpus (id, shard, qv), fine centroids (shard, fcl, cv),
+    * (sharded corpus (id, qv, shard), fine centroids (shard, fcl, cv),
     * coarse centroid matrix). */
-  private def twoLevelState(
+  private def twoLevelFit(
       df: DataFrame,
       idCol: String,
       vecCol: String,
@@ -801,17 +785,13 @@ object Similarity {
     require(itersFine >= 0, s"itersFine must be >= 0, got $itersFine")
     require(kCoarse.toLong * kFine <= Int.MaxValue,
       s"kCoarse*kFine = ${kCoarse.toLong * kFine} overflows Int")
-    val (_, ccents, cwithBest) =
-      lloydState(df, idCol, vecCol, kCoarse, itersCoarse, seed + "|c")
-    // The coarse argmin frame already carries (id, qv, __best) — take the
-    // shard straight from it. The previous formulation dropped qv, re-read
-    // the corpus to re-quantize it, and joined the shards back on id: one
-    // extra corpus scan plus an id-keyed shuffle join (2 Exchanges + sorts)
-    // per fit, for columns the argmin frame already had. Values identical.
+    val flat = lloydInput(df, idCol, vecCol, kCoarse, itersCoarse)
+    val ccents = lloyd(flat, kCoarse, itersCoarse, seed + "|c")
+    // The shard comes straight from the coarse argmin frame, which
+    // already carries (id, qv): no corpus re-scan, no id-keyed rejoin.
     // Shard-partitioned once; every fine round's join and window reuse
     // this layout off the checkpoint instead of re-shuffling the corpus.
-    val base = cwithBest(ccents)
-      .select(col("id"), col("qv"), col("__best.cluster").as("shard"))
+    val base = shards(argmin(flat, ccents))
       .repartition(col("shard"))
       .localCheckpoint(eager = false)
     // Fine seeds: per shard, the first kFine ids in (md5(seed|f|id), id)
@@ -825,18 +805,13 @@ object Similarity {
       .where(col("__rn") <= kFine)
       .select(col("shard"), (col("__rn") - 1).as("fcl"), col("qv").as("cv"))
       .localCheckpoint(eager = false)
-    var it = 0
-    while (it < itersFine) {
-      val upd = fineArgmin(base, cents)
-        .select(col("shard"), col("__m.fcl").as("fcl"),
-          posexplode(col("__m.qv")).as(Seq("dim", "q")))
-        .groupBy(col("shard"), col("fcl"), col("dim"))
-        .agg(expr("sum(q) div count(1)").as("cnew"))
+    for (_ <- 1 to itersFine) {
+      val upd = fineStats(argminJoin(base, cents, Seq("shard"), "fcl"))
+        .select(col("shard"), col("fcl"), col("dim"), expr("s div n").as("cnew"))
       // Empty fine clusters keep their previous centroid — overlay the
       // sparse update onto the dense stored table ([[overlayFine]]: one
       // union + one aggregate, no join).
       cents = overlayFine(cents, upd).localCheckpoint(eager = false)
-      it += 1
     }
     (base, cents, ccents)
   }
@@ -866,7 +841,7 @@ object Similarity {
       itersCoarse: Int,
       itersFine: Int,
       seed: String = "km"): (Array[Array[Long]], DataFrame) = {
-    val (_, cents, ccents) = twoLevelState(df, idCol, vecCol, kCoarse, kFine,
+    val (_, cents, ccents) = twoLevelFit(df, idCol, vecCol, kCoarse, kFine,
       itersCoarse, itersFine, seed)
     val present = cents.select(col("shard")).distinct().collect()
       .map(_.getInt(0)).toSet
@@ -886,12 +861,13 @@ object Similarity {
   /**
    * Serve half of the two-level lifecycle: assigns any batch against a
    * STORED model — coarse argmin against the broadcast kCoarse-row
-   * matrix (the [[kmeansAssign]] plan), then one fine argmin via a
-   * shard-keyed equi-join against the stored (shard, fcl, cv) table.
-   * Zero training, zero driver state beyond the coarse matrix; the fine
-   * table streams through the join, so model size never bounds the
-   * driver. Deterministic integer arithmetic pins stored == refit
-   * (the q242 gate replays fit+serve in DuckDB and hash-matches).
+   * matrix (the [[kmeansAssign]] plan), then one fine argmin against the
+   * stored (shard, fcl, cv) table ([[fineArgminServe]]). Zero training,
+   * zero driver state beyond the coarse matrix and, when small enough,
+   * the fine table; otherwise the fine table streams through the join,
+   * so model size never bounds the driver. Deterministic integer
+   * arithmetic pins stored == refit (the q242 gate replays fit+serve in
+   * DuckDB and hash-matches).
    *
    * `kFine` is the model's declared fine fan-out — passed explicitly,
    * never inferred from the stored table (a truncated table would
@@ -906,10 +882,9 @@ object Similarity {
       coarse: Array[Array[Long]],
       fine: DataFrame,
       kFine: Int): DataFrame =
-    storedModelArgmin(df, idCol, vecCol, coarse, fine, kFine, "kmeansTwoLevelServe")
-      .select(col("id"),
-        (col("shard") * kFine + col("__m.fcl")).cast("int").as("cluster"),
-        col("__m.d2").as("d2"))
+    twoLevelAssignment(
+      storedModelArgmin(df, idCol, vecCol, coarse, fine, kFine, "kmeansTwoLevelServe"),
+      kFine)
 
   /** The serve path over a STORED model shared by [[kmeansTwoLevelServe]]
     * and [[twoLevelSuffStats]]: shape validation, quantize, coarse argmin,
@@ -927,52 +902,33 @@ object Similarity {
     require(kFine >= 1, s"kFine must be >= 1, got $kFine")
     val dim = coarse.head.length
     require(coarse.forall(_.length == dim), "coarse centroid dim drift")
-    // ONE driver row at any model size: stored-table bounds vs the
-    // declared model shape — shard/fcl ranges, dim agreement, and full
-    // shard coverage (every coarse shard must carry >= 1 fine centroid;
-    // the fit-side patch guarantees it, a hand-truncated table fails —
-    // without it, rows of a missing shard vanish in the fine join).
-    // Memoized per stored-model DataFrame REFERENCE (the fineServeCache
-    // convention): a micro-batch serve loop holds ONE frozen fine frame
-    // across batches, and re-running this aggregate job per batch is pure
-    // fixed cost; a re-read of a refreshed model is a new DataFrame and
-    // re-validates.
-    val b = fineShapeCache.synchronized(
-      Option(fineShapeCache.get(new FineModelKey(fine, coarse.length)))
-    ).getOrElse {
-      val row = fine.agg(
-        min(col("shard")), max(col("shard")), min(col("fcl")), max(col("fcl")),
-        min(size(col("cv"))), max(size(col("cv"))),
-        countDistinct(col("shard"))).head()
-      fineShapeCache.synchronized(
-        fineShapeCache.put(new FineModelKey(fine, coarse.length), row))
-      row
-    }
-    require(!b.isNullAt(0), "stored fine centroid table is empty")
-    require(b.getInt(0) >= 0 && b.getInt(1) < coarse.length,
-      s"stored fine table shard range [${b.getInt(0)}, ${b.getInt(1)}] " +
+    // ONE driver row at any model size (memoized per stored frame, see
+    // [[storedFines]]): stored-table bounds vs the declared model shape —
+    // shard/fcl ranges, dim agreement, and full shard coverage (every
+    // coarse shard must carry >= 1 fine centroid; the fit-side patch
+    // guarantees it, a hand-truncated table fails — without it, rows of a
+    // missing shard vanish in the fine join).
+    val b = storedFine(fine, coarse.length).shape
+    require(!b.isNullAt(1), "stored fine centroid table is empty")
+    require(b.getInt(1) >= 0 && b.getInt(2) < coarse.length,
+      s"stored fine table shard range [${b.getInt(1)}, ${b.getInt(2)}] " +
         s"outside coarse model of ${coarse.length} shards")
-    require(b.getInt(2) >= 0 && b.getInt(3) < kFine,
-      s"stored fine table fcl range [${b.getInt(2)}, ${b.getInt(3)}] " +
+    require(b.getInt(3) >= 0 && b.getInt(4) < kFine,
+      s"stored fine table fcl range [${b.getInt(3)}, ${b.getInt(4)}] " +
         s"outside declared kFine=$kFine")
-    require(b.getInt(4) == dim && b.getInt(5) == dim,
-      s"stored fine centroid dims [${b.getInt(4)}, ${b.getInt(5)}] != " +
+    require(b.getInt(5) == dim && b.getInt(6) == dim,
+      s"stored fine centroid dims [${b.getInt(5)}, ${b.getInt(6)}] != " +
         s"coarse dim $dim")
-    require(b.getLong(6) == coarse.length,
-      s"stored fine table covers ${b.getLong(6)} of ${coarse.length} " +
+    require(b.getLong(7) == coarse.length,
+      s"stored fine table covers ${b.getLong(7)} of ${coarse.length} " +
         "shards — truncated model")
-    val sharded = bestAssign(
-        df.select(col(idCol).cast("long").as("id"),
-          transform(col(vecCol).cast("array<double>"),
-            x => round(x * lit(1000000.0)).cast("long")).as("qv")),
-        coarse)
-      .select(col("id"), col("qv"), col("__best.cluster").as("shard"))
-    fineArgminServe(sharded, fine, coarse.length)
+    fineArgminServe(shards(argmin(points(df, idCol, vecCol), coarse)), fine,
+      coarse.length)
   }
 
   /** Deterministic bounded FIT sample: the first `maxFitRows` corpus
     * ids in (md5(seed|s|id), id) order — the house corpus-derived
-    * RNG-free rule ([[twoLevelState]]'s fine-seed ranking, globalized).
+    * RNG-free rule ([[twoLevelFit]]'s fine-seed ranking, globalized).
     * `ORDER BY hash LIMIT n` plans as a distributed per-partition top-N
     * with only the winning (hash, id) rows merging on the driver-side
     * take, and the sampled ids rejoin the corpus by key (broadcast
@@ -995,35 +951,19 @@ object Similarity {
   }
 
   /**
-   * [[kmeansTwoLevelModel]] with the FIT cost bounded by a deterministic
+   * [[kmeansTwoLevelAssign]] with the FIT cost bounded by a deterministic
    * sample — the production answer to auto-k's n^1.5 training wall:
    * auto-k makes k ∝ n, so a full-corpus Lloyd pass costs n·k ∝ n^1.5
    * per iteration (measured 14.8 → 106.3 → 1544 s per data decade at
    * 2M vectors), while THIS fit touches at most `maxFitRows` vectors —
    * k·maxFitRows per iteration, √n-shaped when k grows with the served
    * corpus — and the full corpus only ever pays the serve-side argmin
-   * ([[kmeansTwoLevelServe]], linear, size-tiered). The sample is the
-   * first `maxFitRows` ids in (md5(seed|s|id), id) order: corpus-derived
-   * and RNG-free, so stored == refit stays replayable (the q254 gate
-   * replays sample, fit, and full-corpus serve in SQL).
+   * ([[kmeansTwoLevelServe]], linear, size-tiered): same (id, cluster,
+   * d2) contract. The sample is [[fitSample]]'s first `maxFitRows` ids in
+   * (md5(seed|s|id), id) order: corpus-derived and RNG-free, so stored ==
+   * refit stays replayable (the q254 gate replays sample, fit, and
+   * full-corpus serve in SQL).
    */
-  def kmeansTwoLevelModelSampled(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      kCoarse: Int,
-      kFine: Int,
-      itersCoarse: Int,
-      itersFine: Int,
-      seed: String = "km",
-      maxFitRows: Long): (Array[Array[Long]], DataFrame) =
-    kmeansTwoLevelModel(fitSample(df, idCol, maxFitRows, seed), idCol,
-      vecCol, kCoarse, kFine, itersCoarse, itersFine, seed)
-
-  /** Sampled fit + full-corpus serve in one call — the bounded-cost
-    * counterpart of [[kmeansTwoLevelAssign]]: same (id, cluster, d2)
-    * contract, but training reads only the [[fitSample]] slice and the
-    * corpus assigns through the stored model. */
   def kmeansTwoLevelAssignSampled(
       df: DataFrame,
       idCol: String,
@@ -1034,25 +974,10 @@ object Similarity {
       itersFine: Int,
       seed: String = "km",
       maxFitRows: Long): DataFrame = {
-    val (coarse, fine) = kmeansTwoLevelModelSampled(df, idCol, vecCol,
-      kCoarse, kFine, itersCoarse, itersFine, seed, maxFitRows)
+    val (coarse, fine) = kmeansTwoLevelModel(fitSample(df, idCol, maxFitRows, seed),
+      idCol, vecCol, kCoarse, kFine, itersCoarse, itersFine, seed)
     kmeansTwoLevelServe(df, idCol, vecCol, coarse, fine, kFine)
   }
-
-  /** Flat-tier twin of [[kmeansTwoLevelAssignSampled]]: Lloyd trains on
-    * the [[fitSample]] slice, the corpus assigns through the resulting
-    * centroid matrix ([[kmeansAssign]] — map-side, zero shuffle). */
-  def kmeansLloydAssignSampled(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      iters: Int,
-      seed: String = "km",
-      maxFitRows: Long): DataFrame =
-    kmeansAssign(df, idCol, vecCol,
-      kmeansLloydCentroids(fitSample(df, idCol, maxFitRows, seed),
-        idCol, vecCol, k, iters, seed))
 
   /**
    * Sufficient statistics of a FROZEN two-level model over a corpus
@@ -1074,11 +999,8 @@ object Similarity {
       coarse: Array[Array[Long]],
       fine: DataFrame,
       kFine: Int): DataFrame =
-    storedModelArgmin(df, idCol, vecCol, coarse, fine, kFine, "twoLevelSuffStats")
-      .select(col("shard"), col("__m.fcl").as("fcl"),
-        posexplode(col("__m.qv")).as(Seq("dim", "q")))
-      .groupBy(col("shard"), col("fcl"), col("dim"))
-      .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
+    fineStats(
+      storedModelArgmin(df, idCol, vecCol, coarse, fine, kFine, "twoLevelSuffStats"))
 
   /** Fine-table refresh from merged [[twoLevelSuffStats]] tables: one
     * truncating div per (shard, fcl, dim); fine clusters absent from
@@ -1147,6 +1069,56 @@ object Similarity {
         col("nb.neighbor_id").as("id"))
   }
 
+  /** IVF cell postings of `df` as (c_id, c_v, cell) rows. Multi-assignment
+    * (`replicas` > 1) stores each vector in its `replicas` nearest cells —
+    * the standard IVF remedy for cell-boundary recall loss: a neighbor
+    * just across a cell border is still found without widening every
+    * query's probe set. Storage and scan cost scale by `replicas`; the
+    * probe aggregate dedups neighbors that meet a query in more than one
+    * probed cell. */
+  private def assignCells(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      cents: Array[Array[Double]],
+      replicas: Int): DataFrame =
+    df.select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
+      .withColumn("cell",
+        if (replicas == 1) CentroidFunctions.nearest_centroid(col("c_v"), cents)
+        else explode(CentroidFunctions.nearest_cells(col("c_v"), cents, replicas)))
+
+  /** The IVF search tail: each query probes its `nprobe` nearest cells,
+    * broadcast into the scan of the (c_id, c_v, cell) postings, and one
+    * bounded-heap aggregate keeps the k most cosine-similar neighbors. */
+  private def probeTopK(
+      cells: DataFrame,
+      cents: Array[Array[Double]],
+      queries: DataFrame,
+      queryIdCol: String,
+      vecCol: String,
+      k: Int,
+      nprobe: Int,
+      distinctIds: Boolean): DataFrame = {
+    val probes = queries
+      .select(col(queryIdCol).as("query_id"), col(vecCol).as("q_v"))
+      .withColumn("cell",
+        explode(CentroidFunctions.nearest_cells(col("q_v"), cents, nprobe)))
+    explodeTopK(cells.join(broadcast(probes), "cell")
+      .filter(col("query_id") =!= col("c_id"))
+      .groupBy("query_id")
+      .agg(TopKFunctions.topk_by_score(
+        cosine(col("q_v"), col("c_v")), col("c_id"), k,
+        distinctIds = distinctIds).as("topk")))
+  }
+
+  /** A persisted index's centroid table, in cell order (nlist rows —
+    * bounded by construction). */
+  private def ivfCentroids(
+      spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Double]] =
+    spark.read.parquet(s"$path/centroids")
+      .orderBy("cell").collect()
+      .map(_.getSeq[Double](1).toArray)
+
   /**
    * IVF (inverted-file) approximate top-k: the corpus is bucketed by nearest
    * centroid via a map-side argmax expression over the (broadcast-sized)
@@ -1167,34 +1139,8 @@ object Similarity {
       replicas: Int = 1): DataFrame = {
     require(replicas >= 1 && replicas <= nlist, "replicas must be in [1, nlist]")
     val cents = kmeansCentroids(corpus, corpusIdCol, vecCol, nlist)
-
-    // Multi-assignment (`replicas` > 1) stores each corpus vector in its
-    // `replicas` nearest cells — the standard IVF remedy for cell-boundary
-    // recall loss: a neighbor just across a cell border is still found
-    // without widening every query's probe set. Storage and scan cost scale
-    // by `replicas`; the aggregate dedups neighbors that meet a query in
-    // more than one probed cell.
-    val slim = corpus.select(col(corpusIdCol).as("c_id"), col(vecCol).as("c_v"))
-    val assigned =
-      if (replicas == 1) {
-        slim.withColumn("cell", CentroidFunctions.nearest_centroid(col("c_v"), cents))
-      } else {
-        slim.withColumn("cell",
-          explode(CentroidFunctions.nearest_cells(col("c_v"), cents, replicas)))
-      }
-
-    val probes = queries
-      .select(col(queryIdCol).as("query_id"), col(vecCol).as("q_v"))
-      .withColumn("cell",
-        explode(CentroidFunctions.nearest_cells(col("q_v"), cents, nprobe)))
-
-    val grouped = assigned.join(broadcast(probes), "cell")
-      .filter(col("query_id") =!= col("c_id"))
-      .groupBy("query_id")
-      .agg(TopKFunctions.topk_by_score(
-        cosine(col("q_v"), col("c_v")), col("c_id"), k,
-        distinctIds = replicas > 1).as("topk"))
-    explodeTopK(grouped)
+    probeTopK(assignCells(corpus, corpusIdCol, vecCol, cents, replicas), cents,
+      queries, queryIdCol, vecCol, k, nprobe, distinctIds = replicas > 1)
   }
 
   /**
@@ -1220,15 +1166,8 @@ object Similarity {
     cents.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val slim = corpus.select(col(corpusIdCol).as("c_id"), col(vecCol).as("c_v"))
-    val assigned =
-      if (replicas == 1) {
-        slim.withColumn("cell", CentroidFunctions.nearest_centroid(col("c_v"), cents))
-      } else {
-        slim.withColumn("cell",
-          explode(CentroidFunctions.nearest_cells(col("c_v"), cents, replicas)))
-      }
-    assigned.write.mode("overwrite").parquet(s"$path/cells")
+    assignCells(corpus, corpusIdCol, vecCol, cents, replicas)
+      .write.mode("overwrite").parquet(s"$path/cells")
   }
 
   /**
@@ -1245,23 +1184,9 @@ object Similarity {
       vecCol: String,
       k: Int,
       nprobe: Int = 4,
-      distinctIds: Boolean = true): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy("cell").collect() // nlist rows — bounded by construction
-      .map(_.getSeq[Double](1).toArray)
-    val assigned = spark.read.parquet(s"$path/cells")
-    val probes = queries
-      .select(col(queryIdCol).as("query_id"), col(vecCol).as("q_v"))
-      .withColumn("cell",
-        explode(CentroidFunctions.nearest_cells(col("q_v"), cents, nprobe)))
-    val grouped = assigned.join(broadcast(probes), "cell")
-      .filter(col("query_id") =!= col("c_id"))
-      .groupBy("query_id")
-      .agg(TopKFunctions.topk_by_score(
-        cosine(col("q_v"), col("c_v")), col("c_id"), k,
-        distinctIds = distinctIds).as("topk"))
-    explodeTopK(grouped)
-  }
+      distinctIds: Boolean = true): DataFrame =
+    probeTopK(spark.read.parquet(s"$path/cells"), ivfCentroids(spark, path),
+      queries, queryIdCol, vecCol, k, nprobe, distinctIds)
 
   /**
    * Delete + compaction for a persisted [[buildIvfIndex]] index — the
@@ -1298,22 +1223,18 @@ object Similarity {
       // composed with the generation swap): after mass deletion the
       // frozen centroids drift off the surviving distribution, so the
       // new generation recenters each cell on the MEAN of its surviving
-      // posting vectors — integer micro-sums with a truncating div (the
-      // Lloyd-family arithmetic, engine-deterministic so the q256
-      // oracle replays it), cells emptied by the takedown keeping their
-      // previous centroid (the empty-cluster carry rule). Postings are
-      // NOT reassigned — cell membership is the stored history; only
-      // the routing table moves, and later [[updateIvfIndex]] ingests
-      // and [[ivfTopKFromIndex]] probes assign through the refreshed
+      // posting vectors — the centroid kernel's micro sums with a
+      // truncating div (engine-deterministic, so the q256 oracle replays
+      // it), cells emptied by the takedown keeping their previous
+      // centroid (the empty-cluster carry rule). Postings are NOT
+      // reassigned — cell membership is the stored history; only the
+      // routing table moves, and later [[updateIvfIndex]] ingests and
+      // [[ivfTopKFromIndex]] probes assign through the refreshed
       // centroids. One aggregate over the surviving postings; the
       // centroid table stays nlist rows.
-      val stats = spark.read.parquet(s"$dstPath/cells")
-        .select(col("cell"),
-          posexplode(transform(col("c_v").cast("array<double>"),
-            x => round(x * lit(1000000.0)).cast("long")))
-            .as(Seq("dim", "q")))
-        .groupBy(col("cell"), col("dim"))
-        .agg(expr("sum(q) div count(1)").as("cm"))
+      val stats = microSums(spark.read.parquet(s"$dstPath/cells"),
+          quantize(col("c_v")), col("cell"))
+        .select(col("cell"), col("dim"), expr("s div n").as("cm"))
         .groupBy(col("cell"))
         .agg(transform(
           array_sort(collect_list(struct(col("dim"), col("cm")))),
@@ -1342,21 +1263,11 @@ object Similarity {
       idCol: String,
       vecCol: String,
       replicas: Int = 1): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy("cell").collect() // nlist rows — bounded by construction
-      .map(_.getSeq[Double](1).toArray)
+    val cents = ivfCentroids(spark, path)
     require(replicas >= 1 && replicas <= cents.length,
       s"replicas must be in [1, ${cents.length}], got $replicas")
-    val slim = batch.select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    val assigned =
-      if (replicas == 1) {
-        slim.withColumn("cell",
-          CentroidFunctions.nearest_centroid(col("c_v"), cents))
-      } else {
-        slim.withColumn("cell",
-          explode(CentroidFunctions.nearest_cells(col("c_v"), cents, replicas)))
-      }
-    assigned.write.mode("append").parquet(s"$path/cells")
+    assignCells(batch, idCol, vecCol, cents, replicas)
+      .write.mode("append").parquet(s"$path/cells")
   }
 
   /**
@@ -1594,30 +1505,6 @@ object Similarity {
   }
 
   /**
-   * SemDeDup as the PAPER partitions it (Abbas et al. 2023): k-means
-   * clusters bound the pair search — near-duplicate pairs (cosine ≥
-   * `threshold`) are sought only WITHIN each [[kmeansLloydAssign]]
-   * cluster, components collapse to their min id, everything else passes
-   * through. The alternative scale path beside [[semanticDupRepresentatives]]'s
-   * sign-LSH: clustering costs iters linear passes and the pair stage
-   * drops from n² to Σ n_c² (k-fold on balanced clusters), in exchange
-   * for the paper's documented approximation — a near-pair STRADDLING a
-   * cluster boundary is missed by design, where LSH misses with solved
-   * probability instead. Pick LSH when recall is contractual, clusters
-   * when the corpus is already clustered for curation anyway (q204/q205).
-   *
-   * Scale shape: one cluster-keyed self-join (the quadratic bound), exact
-   * cosine on the joined pair only, then the audited O(log n) component
-   * rounds and one anti-join. `k = 0` (the default) DERIVES the cluster
-   * count from the corpus via [[semDeDupParams]] — k = ⌈n/targetClusterSize⌉,
-   * the paper's own grow-k-with-n protocol — so the pair stage stays
-   * linear in n at a fixed target size; and whatever k is used, a
-   * bounded probe of the REALIZED cluster sizes refuses loudly before
-   * the join if skew pushes Σ nc(nc−1)/2 past `maxPairBudget`. Past
-   * ~16 derived clusters the argmin switches to the broadcast-matrix
-   * aggregate plan automatically (see `bestAssign`).
-   */
-  /**
    * Auto-k for [[semDeDupWithinClusters]] — the [[Dedup.minHashParams]]
    * convention applied to the paper's own protocol (SemDeDup grows the
    * cluster count with the corpus): k = ⌈n / targetClusterSize⌉, so the
@@ -1688,35 +1575,59 @@ object Similarity {
       iters: Int,
       seed: String,
       flatKMax: Int,
-      maxFitRows: Long = 0L): DataFrame =
+      maxFitRows: Long = 0L): DataFrame = {
+    val kc = math.ceil(math.sqrt(k.toDouble)).toInt
+    val kf = (k + kc - 1) / kc
     if (maxFitRows > 0L) {
       // Bounded-cost fit: training must be able to SEED k clusters from
       // the sample — past that the caller is asking for more clusters
       // than fit rows, which only grows targetClusterSize can fix (the
       // honest lever: target ∝ n/maxFitRows keeps k inside the sample
-      // as the served corpus outgrows the fit budget).
+      // as the served corpus outgrows the fit budget). The flat tier
+      // trains Lloyd on the [[fitSample]] slice and the corpus assigns
+      // through the resulting matrix (map-side, zero shuffle).
       require(k <= maxFitRows,
         s"sampled fit asked for k=$k clusters from a $maxFitRows-row fit " +
           "sample — raise maxFitRows or grow targetClusterSize (k ∝ " +
           "n/targetClusterSize; a bounded fit budget needs the target to " +
           "grow with the corpus).")
       if (k <= flatKMax)
-        kmeansLloydAssignSampled(df, idCol, vecCol, k, iters, seed,
-          maxFitRows)
-      else {
-        val kc = math.ceil(math.sqrt(k.toDouble)).toInt
-        val kf = (k + kc - 1) / kc
+        kmeansAssign(df, idCol, vecCol, kmeansLloydCentroids(
+          fitSample(df, idCol, maxFitRows, seed), idCol, vecCol, k, iters, seed))
+      else
         kmeansTwoLevelAssignSampled(df, idCol, vecCol, kc, kf, iters, iters,
           seed, maxFitRows)
-      }
     } else if (k <= flatKMax) {
       kmeansLloydAssign(df, idCol, vecCol, k, iters, seed)
     } else {
-      val kc = math.ceil(math.sqrt(k.toDouble)).toInt
-      val kf = (k + kc - 1) / kc
       kmeansTwoLevelAssign(df, idCol, vecCol, kc, kf, iters, iters, seed)
     }
+  }
 
+  /**
+   * SemDeDup as the PAPER partitions it (Abbas et al. 2023): k-means
+   * clusters bound the pair search — near-duplicate pairs (cosine ≥
+   * `threshold`) are sought only WITHIN each [[kmeansLloydAssign]]
+   * cluster, components collapse to their min id, everything else passes
+   * through. The alternative scale path beside [[semanticDupRepresentatives]]'s
+   * sign-LSH: clustering costs iters linear passes and the pair stage
+   * drops from n² to Σ n_c² (k-fold on balanced clusters), in exchange
+   * for the paper's documented approximation — a near-pair STRADDLING a
+   * cluster boundary is missed by design, where LSH misses with solved
+   * probability instead. Pick LSH when recall is contractual, clusters
+   * when the corpus is already clustered for curation anyway (q204/q205).
+   *
+   * Scale shape: one cluster-keyed self-join (the quadratic bound), exact
+   * cosine on the joined pair only, then the audited O(log n) component
+   * rounds and one anti-join. `k = 0` (the default) DERIVES the cluster
+   * count from the corpus via [[semDeDupParams]] — k = ⌈n/targetClusterSize⌉,
+   * the paper's own grow-k-with-n protocol — so the pair stage stays
+   * linear in n at a fixed target size; and whatever k is used, a
+   * bounded probe of the REALIZED cluster sizes refuses loudly before
+   * the join if skew pushes Σ nc(nc−1)/2 past `maxPairBudget`. Past
+   * ~16 derived clusters the argmin switches to the broadcast-matrix
+   * aggregate plan automatically (see `argmin`).
+   */
   def semDeDupWithinClusters(
       df: DataFrame,
       idCol: String,
@@ -1736,7 +1647,7 @@ object Similarity {
     // no flat region an estimate could ride (cf. resolveBandingCount);
     // on parquet it is metadata-cheap, on derived frames pass nHint.
     // maxFitRows > 0 bounds the TRAINING scan to a deterministic sample
-    // (the auto-k n^1.5 fit wall — see [[kmeansTwoLevelModelSampled]]);
+    // (the auto-k n^1.5 fit wall — see [[kmeansTwoLevelAssignSampled]]);
     // the pair stage below is unchanged, serving the full corpus.
     val kEff =
       if (k > 0) k
@@ -1911,29 +1822,6 @@ object Similarity {
   }
 
   /**
-   * Per-group embedding centroid drift between two corpus slices — the
-   * distribution-shift monitor a training pipeline runs between crawl
-   * snapshots or data-mix revisions ("did source X's embedding mass
-   * move?"). Returns one row per group present in EITHER slice:
-   * (group, n_a, n_b, l1_micro, linf_micro) — the L1 and L∞ distances
-   * between the two slices' per-group centroids, in micro units; null
-   * distances when a side has no vectors (nothing to compare against).
-   *
-   * All arithmetic is integer: elements quantize ONCE to micro units
-   * (round(x·1e6), float→double widening is exact, both engines round
-   * half away from zero), centroids are truncating `div` of micro sums
-   * (Spark `div` and DuckDB `//` agree on toward-zero), so every
-   * distance replays bit-for-bit. Float centroids would differ by
-   * summation order — useless as an equality gate AND as a cross-run
-   * drift baseline.
-   *
-   * Scale shape: one posexplode to (group, dim, micro) rows — 3 compact
-   * longs, map-side combined immediately — a single (group, dim)
-   * aggregate holding both slices' partial sums (the slices are tagged
-   * and unioned, so ONE scan each, one shuffle total), then a |groups|-
-   * row aggregate. No per-vector state, no arrays through the exchange.
-   */
-  /**
    * Prototypicality ranking — the SemDeDup-family PRUNING signal: how
    * far each embedding sits from its group's centroid, as an exact
    * integer L1 distance in micro units plus an integer-permille
@@ -1963,7 +1851,7 @@ object Similarity {
         col(groupCol).as(groupCol),
         posexplode(col(vecCol).cast("array<double>")).as(Seq("dim", "x")))
       .select(col("id"), col(groupCol), col("dim"),
-        round(col("x") * lit(1000000.0)).cast("long").as("q"))
+        micro(col("x")).as("q"))
     val centroids = rows.groupBy(col(groupCol), col("dim"))
       .agg(expr("sum(q) div count(1)").as("__c"))
     val dist = rows.join(broadcast(centroids), Seq(groupCol, "dim"))
@@ -2019,7 +1907,7 @@ object Similarity {
     df.select(col(idCol).cast("long").as("id"),
         posexplode(col(vecCol).cast("array<double>")).as(Seq("dim", "x")))
       .select(col("id"), col("dim").cast("long").as("dim"),
-        round(col("x") * lit(1000000.0)).cast("long").as("q"))
+        micro(col("x")).as("q"))
       .join(broadcast(cells), "dim")
       .groupBy(col("id"), col("k"))
       .agg(sum(col("sign") * col("q")).as("proj_micro"))
@@ -2079,10 +1967,7 @@ object Similarity {
       .withColumnRenamed("id", "query_id").withColumnRenamed("pv", "qpv"))
     val coarse = pivot(corpus, corpusIdCol)
       .join(qp, col("query_id") =!= col("id"))
-      .withColumn("__d2",
-        aggregate(zip_with(col("qpv"), col("pv"),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, v) => acc + v))
+      .withColumn("__d2", l2sq(col("qpv"), col("pv")))
       .groupBy(col("query_id"))
       .agg(graft.functions.TopKFunctions.topk_by_score(
         -(expr("__d2 div 256")).cast("double"), col("id"), k * expand)
@@ -2103,6 +1988,29 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"))
   }
 
+  /**
+   * Per-group embedding centroid drift between two corpus slices — the
+   * distribution-shift monitor a training pipeline runs between crawl
+   * snapshots or data-mix revisions ("did source X's embedding mass
+   * move?"). Returns one row per group present in EITHER slice:
+   * (group, n_a, n_b, l1_micro, linf_micro) — the L1 and L∞ distances
+   * between the two slices' per-group centroids, in micro units; null
+   * distances when a side has no vectors (nothing to compare against).
+   *
+   * All arithmetic is integer: elements quantize ONCE to micro units
+   * (round(x·1e6), float→double widening is exact, both engines round
+   * half away from zero), centroids are truncating `div` of micro sums
+   * (Spark `div` and DuckDB `//` agree on toward-zero), so every
+   * distance replays bit-for-bit. Float centroids would differ by
+   * summation order — useless as an equality gate AND as a cross-run
+   * drift baseline.
+   *
+   * Scale shape: one posexplode to (group, dim, micro) rows — 3 compact
+   * longs, map-side combined immediately — a single (group, dim)
+   * aggregate holding both slices' partial sums (the slices are tagged
+   * and unioned, so ONE scan each, one shuffle total), then a |groups|-
+   * row aggregate. No per-vector state, no arrays through the exchange.
+   */
   def centroidDrift(
       sliceA: DataFrame,
       sliceB: DataFrame,
@@ -2112,7 +2020,7 @@ object Similarity {
       df.select(col(groupCol).as("group"), lit(tag).as("__t"),
           posexplode(col(vecCol).cast("array<double>")).as(Seq("dim", "x")))
         .select(col("group"), col("__t"), col("dim"),
-          round(col("x") * lit(1000000.0)).cast("long").as("q"))
+          micro(col("x")).as("q"))
     val perDim = side(sliceA, 0).unionByName(side(sliceB, 1))
       .groupBy(col("group"), col("dim"))
       .agg(

@@ -106,21 +106,29 @@ class KmeansSuite extends AnyFunSuite {
     assert(e.getMessage.contains("within-cluster pairs"))
   }
 
-  test("bestAssignBroadcast == bestAssignInline: exact d2, tie to lower cluster") {
+  test("argmin: keyed-join tier == inline tier: exact d2, tie to lower cluster") {
     val base = Seq(
-      (0L, Seq(0L, 0L)), (1L, Seq(1000000L, 0L)), (2L, Seq(500000L, 0L))
+      (0L, Seq(0L, 0L)), (1L, Seq(1000000L, 0L)), (2L, Seq(500000L, 0L)),
+      (2L, Seq(1000000L, 0L))
     ).toDF("id", "qv")
-    // id 2 is EQUIDISTANT from both centroids — the tie must go to
-    // cluster 0 on both plans.
-    val cents = Array(Array(0L, 0L), Array(1000000L, 0L))
+    // The first id-2 row is EQUIDISTANT from clusters 0 and 1 — the tie
+    // must go to cluster 0 on both tiers; the second id-2 row must stay a
+    // row of its own on both. 15 far-away centroids push k to 17, past
+    // the inline tier, so `argmin` takes the broadcast keyed join.
+    val cents = Array(Array(0L, 0L), Array(1000000L, 0L)) ++
+      Array.tabulate(15)(i => Array(1000000000L + i, 1000000000L))
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select(col("id"), col("__best.d2"), col("__best.cluster"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      .sortBy(_._1).toSeq
-    val inline = canon(Similarity.bestAssignInline(base, cents))
-    val bc = canon(Similarity.bestAssignBroadcast(base, cents))
-    assert(inline === bc)
-    assert(inline(2) === ((2L, 500000L * 500000L, 0)))
+      .sorted.toSeq
+    val keyed = Similarity.argmin(base, cents)
+    assert(keyed.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.nonEmpty, "k=17 must plan the keyed-join tier")
+    val inline = canon(Similarity.argminInline(base, cents))
+    assert(inline === canon(keyed))
+    assert(inline.length === 4)
+    assert(inline.contains((2L, 500000L * 500000L, 0)))
   }
 
   test("Lloyd past the inline tier (k=17) stays exact and deterministic") {
@@ -172,6 +180,28 @@ class KmeansSuite extends AnyFunSuite {
       .toMap
     assert(out(0) === ((2L, 1L, 500L)))
     assert(out(1) === ((1L, 1L, 1000L)))
+  }
+
+  test("centroidLabelProbe past the inline tier: planted tie to the lower label") {
+    // 18 labels (> 16, the keyed-join tier): label L's one train row sits
+    // at (L, 0), so its centroid is (L·1e6, 0). Every eval row sits 0.1
+    // off its own label's centroid, except a label-4 row planted at
+    // (3.5, 0), EXACTLY between labels 3 and 4: the tie goes to label 3.
+    // The planted row shares its id AND label with label 4's own eval
+    // row; both still count.
+    val train = (0 until 18).map(l => (l.toLong, Seq(l.toDouble, 0.0), l))
+      .toDF("id", "v", "label")
+    val eval = ((0 until 18).map(l => (100L + l, Seq(l + 0.1, 0.0), l)) :+
+      ((104L, Seq(3.5, 0.0), 4))).toDF("id", "v", "label")
+    val probe = Similarity.centroidLabelProbe(train, eval, "id", "v", "label")
+    assert(probe.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.nonEmpty, "18 labels must plan the keyed-join tier")
+    val out = probe.collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(out.size === 18)
+    assert(out(4) === ((2L, 1L, 500L)))
+    (0 until 18).filter(_ != 4).foreach(l => assert(out(l) === ((1L, 1L, 1000L)), s"label $l"))
   }
 
   test("kmeansAssign from stored centroids equals the trained assignment") {
@@ -304,7 +334,7 @@ class KmeansSuite extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3),
         r.getSeq[Long](4)))
       .sortBy(_._1).toSeq
-    val viaJoin = canon(Similarity.fineArgmin(sharded, cents))
+    val viaJoin = canon(Similarity.argminJoin(sharded, cents, Seq("shard"), "fcl"))
     val viaInline = canon(Similarity.fineArgminServe(sharded, cents, 3))
     assert(viaInline === viaJoin)
     // ties landed on the lowest fcl for every shard-1 row
@@ -525,7 +555,7 @@ class KmeansSuite extends AnyFunSuite {
       .select(col("id"), col("__m.fcl"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
     // identical to the join plan on the same inputs
-    val viaJoin = Similarity.fineArgmin(sharded, badCents)
+    val viaJoin = Similarity.argminJoin(sharded, badCents, Seq("shard"), "fcl")
       .select(col("id"), col("__m.fcl"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
     assert(out.toSeq === viaJoin.toSeq)

@@ -20,6 +20,11 @@ BENCHMARK.json, each side's median and quartiles, the pairs the change won
                metric's bound (end-to-end metrics only);
     unresolved either side's interquartile range is wider than the bound;
     -          none of these.
+The work directory (`--workdir`, created if missing) must be short: each side's
+build runs sbt with its temp dir inside the checkout, and sbt binds its boot
+socket at <temp dir>/.sbt/sbt-socket<signed 64-bit hash>/sbt-load.sock, which
+sbt's socket library refuses past 103 bytes. A work directory whose worst-case
+socket path is longer is refused before anything is copied or built.
 Only xmlbench/ and BENCHMARK.json of each checkout are used; the repository
 itself is only read. The checkouts are removed at the end; the log of every
 run (its stderr) stays in the work directory, and so does a copy of the
@@ -27,6 +32,7 @@ build log of each side's failed runs (build-SIDE-seedN.log).
 """
 import argparse
 import json
+import os
 import shutil
 import statistics
 import subprocess
@@ -35,6 +41,10 @@ import tempfile
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+SIDES = ("parent", "change")
+# sbt's socket library (ipcsocket's SockaddrUn) holds the path in a 104-byte
+# buffer with a terminating NUL.
+SOCKET_PATH_MAX = 103
 
 
 def git(*args, **kw):
@@ -82,6 +92,33 @@ def keep_build_log(side_dir, seed):
               file=sys.stderr, flush=True)
 
 
+def worst_socket_path(work_root):
+    """The longest boot-socket path sbt can pick for a side's build under
+    `work_root`: xmlbench/run.py points the build's java.io.tmpdir at
+    xmlbench/.work/tmp of the checkout, and sbt puts the socket under
+    $XDG_RUNTIME_DIR instead when that is set."""
+    checkout_tmp = work_root / "ab-XXXXXXXX" / max(SIDES, key=len) / "xmlbench" / ".work" / "tmp"
+    sock_dir = os.environ.get("XDG_RUNTIME_DIR", str(checkout_tmp))
+    return f"{sock_dir}/.sbt/sbt-socket{-2 ** 63}/sbt-load.sock"
+
+
+def prepare_workdir(ap, workdir):
+    """Refuses a work directory too long for sbt's boot socket, creates a
+    missing one, and returns it (None: the system temp dir)."""
+    root = Path(workdir or tempfile.gettempdir()).resolve()
+    sock = worst_socket_path(root)
+    if len(sock.encode()) > SOCKET_PATH_MAX:
+        ap.error(f"--workdir {root} is too long: sbt's boot socket path could be "
+                 f"{len(sock.encode())} bytes ({sock}), over the {SOCKET_PATH_MAX} its socket "
+                 "library accepts; pick a shorter directory")
+    if workdir:
+        try:
+            root.mkdir(parents=True, exist_ok=True)
+        except OSError as e:
+            ap.error(f"--workdir {workdir}: cannot create it: {e.strerror}")
+    return workdir
+
+
 def quartiles(xs):
     if len(xs) == 1:
         return xs[0], xs[0], xs[0]
@@ -98,13 +135,14 @@ def main():
     ap.add_argument("--seed0", type=int, default=7001, help="pair i runs seed seed0+i")
     ap.add_argument("--seconds", type=float, default=7)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--workdir", help="where the two checkouts go (default: the system temp dir);"
-                    " keep it short: sbt's boot socket path under it must fit in 108 bytes")
+    ap.add_argument("--workdir", help="where the two checkouts go, created if missing (default: the"
+                    " system temp dir); keep it short: sbt's boot socket path under it must fit"
+                    f" in {SOCKET_PATH_MAX} bytes")
     ap.add_argument("--json", help="also write every run's metrics to this file")
     a = ap.parse_args()
 
-    work = Path(tempfile.mkdtemp(prefix="ab-", dir=a.workdir))
-    sides = {"parent": work / "parent", "change": work / "change"}
+    work = Path(tempfile.mkdtemp(prefix="ab-", dir=prepare_workdir(ap, a.workdir)))
+    sides = {s: work / s for s in SIDES}
     checkout(a.parent, sides["parent"])
     checkout(a.change, sides["change"])
     spec = json.loads((sides["change"] / "BENCHMARK.json").read_text())
