@@ -1379,13 +1379,13 @@ object SparkEntry {
     }),
 
     "q101_partitioned_layout" -> ((s, d) => {
-      // Hive-style partitioned XML layout end to end: one-pass partitioned
-      // write (source=<v>/ directories, each part file a complete XML
-      // document), partition-discovery read with values rebuilt from the
-      // path, and a partition filter that PRUNES non-matching directories
-      // out of the plan via constant folding (XmlPartitionedSuite pins the
-      // plan). Oracle: plain SQL over the same two sources.
-      val path = Fixtures.once(d, "partitioned_v1") {
+      // Hive-style partitioned XML layout end to end: partitioned write
+      // (source=<v>/ directories, each part file a complete XML document),
+      // partition-discovery read with values rebuilt from the path, and a
+      // partition filter the planner applies to the directory listing of
+      // one scan (XmlPartitionedSuite pins the plan). Oracle: plain SQL
+      // over the same two sources.
+      val path = Fixtures.once(d, "partitioned_v2") {
         graft.xml.XmlPartitioned.write(
           t(s, d, "documents").select("doc_id", "text", "lang", "source"),
           _, Seq("source"), Map("rowTag" -> "doc"))

@@ -1402,24 +1402,43 @@ object Similarity {
         aggregate(zip_with(col("qq"), col("cq"),
             (a, b) => a.cast("long") * b.cast("long")),
           lit(0L), (acc, v) => acc + v))
+    rerankCoarseHeap(coarse, col("__qdot").cast("double"), col("neighbor_id"),
+      queries, corpus, queryIdCol, corpusIdCol, vecCol, k, expand)
+  }
+
+  /**
+   * The exact second stage of the two-stage ANN serves: keep each query's
+   * top-(k·expand) candidates by the coarse `score` (ties to the lower
+   * `neighbor`), join back the corpus and query vectors of only those,
+   * and re-rank by float cosine DESC, neighbor_id ASC, keeping k per query.
+   * `scored` has one row per (query_id, candidate) pair.
+   */
+  private def rerankCoarseHeap(
+      scored: DataFrame,
+      score: Column,
+      neighbor: Column,
+      queries: DataFrame,
+      corpus: DataFrame,
+      queryIdCol: String,
+      corpusIdCol: String,
+      vecCol: String,
+      k: Int,
+      expand: Int): DataFrame =
+    scored
       .groupBy(col("query_id"))
-      .agg(TopKFunctions.topk_by_score(
-        col("__qdot").cast("double"), col("neighbor_id"), k * expand).as("topk"))
+      .agg(TopKFunctions.topk_by_score(score, neighbor, k * expand).as("topk"))
       .select(col("query_id"), explode(col("topk")).as("nb"))
       .select(col("query_id"), col("nb.neighbor_id").as("neighbor_id"))
-    coarse
       .join(corpus.select(col(corpusIdCol).as("neighbor_id"),
         col(vecCol).as("cv")), "neighbor_id")
       .join(broadcast(queries.select(col(queryIdCol).as("query_id"),
         col(vecCol).as("qv"))), "query_id")
       .withColumn("sim", cosine(col("qv"), col("cv")))
       .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
+        row_number().over(Window.partitionBy(col("query_id"))
           .orderBy(desc("sim"), asc("neighbor_id"))).cast("int"))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"))
-  }
 
   /**
    * Feature-hashing document embedding (the "hashing trick"): each token
@@ -1968,24 +1987,8 @@ object Similarity {
     val coarse = pivot(corpus, corpusIdCol)
       .join(qp, col("query_id") =!= col("id"))
       .withColumn("__d2", l2sq(col("qpv"), col("pv")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKFunctions.topk_by_score(
-        -(expr("__d2 div 256")).cast("double"), col("id"), k * expand)
-        .as("topk"))
-      .select(col("query_id"), explode(col("topk")).as("nb"))
-      .select(col("query_id"), col("nb.neighbor_id").as("neighbor_id"))
-    coarse
-      .join(corpus.select(col(corpusIdCol).as("neighbor_id"),
-        col(vecCol).as("cv")), "neighbor_id")
-      .join(broadcast(queries.select(col(queryIdCol).as("query_id"),
-        col(vecCol).as("qv"))), "query_id")
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
-          .orderBy(desc("sim"), asc("neighbor_id"))).cast("int"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
+    rerankCoarseHeap(coarse, -(expr("__d2 div 256")).cast("double"), col("id"),
+      queries, corpus, queryIdCol, corpusIdCol, vecCol, k, expand)
   }
 
   /**

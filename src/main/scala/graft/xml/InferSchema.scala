@@ -66,6 +66,14 @@ private[graft] object InferSchema {
     }
   }
 
+  /** The schema a read without a user schema resolves, shared by the
+   *  batch relation, the stream source and [[XmlFileFormat]]: the inferred
+   *  schema, with every leaf a string unless `inferSchema` is on. */
+  def forRead(xml: RDD[String], options: XmlOptions): StructType = {
+    val inferred = infer(xml, options)
+    if (options.inferSchema) inferred else stringOnly(inferred).asInstanceOf[StructType]
+  }
+
   /** One partition's records merged to one type. */
   private def inferPartition(records: Iterator[String], options: XmlOptions): DataType = {
     val validator = options.rowValidationXSDPath.map(ValidatorUtil.forPath)

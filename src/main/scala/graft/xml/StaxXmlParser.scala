@@ -121,23 +121,30 @@ private[graft] object StaxXmlParser {
    * per-row external→internal conversion layer entirely.
    */
   def parse(xml: RDD[String], schema: StructType, options: XmlOptions): RDD[InternalRow] =
-    xml.mapPartitions { iter =>
-      val validator = options.rowValidationXSDPath.map(ValidatorUtil.forPath)
-      val fields = new FieldOrdinals(schema, options)
-      iter.flatMap { record =>
-        val valid =
-          try { validator.foreach(ValidatorUtil.validate(_, record)); true }
-          catch {
-            case NonFatal(e) => options.parseMode match {
-              case ParseMode.FailFast =>
-                throw new IllegalArgumentException(s"Record failed XSD validation: $record", e)
-              case _ => false
-            }
+    xml.mapPartitions(parseRecords(_, schema, options))
+
+  /** One task's records parsed as [[parse]] does, for a caller that holds the
+   *  records as an iterator (a `FileFormat` reader). */
+  private[xml] def parseRecords(
+      records: Iterator[String],
+      schema: StructType,
+      options: XmlOptions): Iterator[InternalRow] = {
+    val validator = options.rowValidationXSDPath.map(ValidatorUtil.forPath)
+    val fields = new FieldOrdinals(schema, options)
+    records.flatMap { record =>
+      val valid =
+        try { validator.foreach(ValidatorUtil.validate(_, record)); true }
+        catch {
+          case NonFatal(e) => options.parseMode match {
+            case ParseMode.FailFast =>
+              throw new IllegalArgumentException(s"Record failed XSD validation: $record", e)
+            case _ => false
           }
-        if (valid) parseRecord(record, fields, options)
-        else handleMalformed(record, fields, options, partial = None)
-      }
+        }
+      if (valid) parseRecord(record, fields, options)
+      else handleMalformed(record, fields, options, partial = None)
     }
+  }
 
   /** Single-string parse to internal form (backs `from_xml`). */
   def parseColumn(xml: String, fields: FieldOrdinals, options: XmlOptions): InternalRow =

@@ -2,11 +2,20 @@ package graft.xml
 
 import java.nio.charset.Charset
 
+import scala.util.Try
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, NullWritable, Text}
 import org.apache.hadoop.io.compress.CompressionCodec
-import org.apache.spark.SparkContext
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.RecordReaderIterator
+import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog, SinkFileStatus}
 
 
 /**
@@ -54,8 +63,28 @@ private[graft] object XmlFile {
       sc: SparkContext,
       path: String,
       options: XmlOptions,
-      splitMaxSize: Option[Long]): RDD[String] = {
-    val conf = new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)
+      splitMaxSize: Option[Long]): RDD[String] =
+    readInputs(sc, path, options, splitMaxSize)(FileInputFormat.setInputPaths(_, path))
+
+  /** Raw record strings for an explicit file list. The files go to Hadoop
+   *  as `Path`s, not as one comma-joined string, so a comma in a name (a
+   *  partition value, say) cannot split a path in two. */
+  def readFiles(
+      sc: SparkContext,
+      files: Seq[Path],
+      options: XmlOptions,
+      splitMaxSize: Option[Long]): RDD[String] =
+    if (files.isEmpty) sc.emptyRDD[String]
+    else readInputs(sc, files.mkString(","), options, splitMaxSize)(
+      FileInputFormat.setInputPaths(_, files: _*))
+
+  private def readInputs(
+      sc: SparkContext,
+      name: String,
+      options: XmlOptions,
+      splitMaxSize: Option[Long])(setInputs: Job => Unit): RDD[String] = {
+    val job = Job.getInstance(sc.hadoopConfiguration) // a private copy
+    val conf = job.getConfiguration
     conf.set(XmlInputFormat.ROW_TAG_KEY, options.rowTag)
     conf.set(XmlInputFormat.ENCODING_KEY, options.charset)
     splitMaxSize.foreach { maxSplit =>
@@ -66,23 +95,72 @@ private[graft] object XmlFile {
         conf.setLong("mapreduce.input.fileinputformat.split.maxsize", maxSplit)
       }
     }
+    setInputs(job)
     val charsetName = options.charset
-    sc.newAPIHadoopFile(
-        path,
-        classOf[XmlInputFormat],
-        classOf[LongWritable],
-        classOf[Text],
-        conf)
+    sc.newAPIHadoopRDD(conf, classOf[XmlInputFormat], classOf[LongWritable], classOf[Text])
+      .setName(name)
       .mapPartitions { iter =>
-        // Non-ASCII-compatible input was decoded to UTF-8 by the record
-        // reader (TranscodingInputStream), so record bytes are then UTF-8
-        // regardless of the file charset.
-        val cs = Charset.forName(charsetName)
-        val charset =
-          if (XmlInputFormat.isAsciiCompatible(cs)) cs
-          else java.nio.charset.StandardCharsets.UTF_8
+        val charset = recordCharset(charsetName)
         iter.map { case (_, text) => new String(text.getBytes, 0, text.getLength, charset) }
       }
+  }
+
+  /** The charset of the record bytes `XmlRecordReader` emits: the file's own
+   *  when it is ASCII-compatible, else UTF-8, since the reader decodes such
+   *  input to UTF-8 (`TranscodingInputStream`) before scanning. */
+  private def recordCharset(charsetName: String): Charset = {
+    val cs = Charset.forName(charsetName)
+    if (XmlInputFormat.isAsciiCompatible(cs)) cs else java.nio.charset.StandardCharsets.UTF_8
+  }
+
+  /** Raw record strings of one byte range of one file: the records
+   *  `XmlRecordReader` assigns to the split `(start, length)` of `file`, under
+   *  the same ownership rules as a `FileInputFormat` split. `conf` carries
+   *  [[XmlInputFormat.ROW_TAG_KEY]] and [[XmlInputFormat.ENCODING_KEY]]. The
+   *  reader closes when the records run out or the task ends. */
+  private[xml] def records(
+      conf: Configuration,
+      file: Path,
+      start: Long,
+      length: Long): Iterator[String] = {
+    val charset = recordCharset(conf.get(XmlInputFormat.ENCODING_KEY))
+    val reader = new XmlRecordReader
+    val attempt = new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0)
+    reader.initialize(new FileSplit(file, start, length, Array.empty[String]),
+      new TaskAttemptContextImpl(conf, attempt))
+    val texts = new RecordReaderIterator(reader)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => texts.close()))
+    texts.map(text => new String(text.getBytes, 0, text.getLength, charset))
+  }
+
+  /** The files a streaming file sink committed under `path`, from its
+   *  `_spark_metadata` log; None when `path` is not a sink's output. A part
+   *  file of a batch that never committed is not listed, so a batch read
+   *  skips it, and a replayed batch never shows up twice. A sink written
+   *  with `partitionBy` is refused: its partition values live in directory
+   *  names, which this flat read would drop. */
+  private[xml] def sinkCommittedFiles(
+      spark: SparkSession,
+      path: String): Option[Seq[SinkFileStatus]] = {
+    val sqlConf = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    // A glob or a comma list names no directory; asked about one,
+    // `hasMetadata` would log a stack trace before answering no.
+    val isDirectory = Try(fs.getFileStatus(dir).isDirectory).getOrElse(false)
+    if (!isDirectory || !FileStreamSink.hasMetadata(Seq(path), conf, sqlConf)) None
+    else {
+      val files = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark,
+        FileStreamSink.getMetadataLogPath(fs, dir, sqlConf).toString)
+        .allFiles().toSeq.filterNot(_.isDir)
+      val base = fs.makeQualified(dir)
+      require(files.forall(f => new Path(f.sparkPath.toUri).getParent == base),
+        s"$path is the output of a partitioned stream sink; its partition columns live " +
+          "in directory names, which this source does not read: read it with " +
+          s"""spark.read.format("${classOf[XmlFileFormat].getName}")""")
+      Some(files)
+    }
   }
 
   /** Total byte size of the files `path` names (comma-separated, globs ok);
@@ -107,9 +185,7 @@ private[graft] object XmlFile {
 
   def save(df: DataFrame, path: String, options: XmlOptions): Unit = {
     val schema = df.schema
-    // rootTag may carry inline attributes ("books count=\"3\""); only the
-    // name part closes the document (reference: XmlFile.scala:88-101).
-    val rootTagName = options.rootTag.split(" ", 2)(0)
+    val (header, footer) = documentEnds(options)
     val codecClass: Option[Class[_ <: CompressionCodec]] = options.codec.map { name =>
       resolveCodec(name)
     }
@@ -151,20 +227,14 @@ private[graft] object XmlFile {
         override def next(): (NullWritable, Text) = {
           if (!begun) {
             begun = true
-            val header = new StringBuilder
-            if (options.declaration.nonEmpty) {
-              header ++= s"<?xml ${options.declaration}?>\n"
-            }
-            header ++= s"<${options.rootTag}>"
-            if (!rows.hasNext) { ended = true; header ++= s"\n</$rootTagName>" }
-            text.set(header.result())
+            text.set(if (rows.hasNext) header else { ended = true; header + "\n" + footer })
           } else if (rows.hasNext) {
             sb.setLength(0)
             val emitter = new XmlEmitter(sb, baseDepth = 1, compact = options.compactOutput)
             gen.write(emitter, rows.next())
             if (!rows.hasNext) {
               ended = true
-              sb.append('\n').append("</").append(rootTagName).append('>')
+              sb.append('\n').append(footer)
             }
             // Pretty mode: strip the emitter's leading newline — the sink
             // writes one per record. Compact rows start at '<'.
@@ -185,8 +255,18 @@ private[graft] object XmlFile {
     }
   }
 
+  /** The text before the first row and after the last one of every part
+   *  file: the declaration line and the root start tag, and the root end
+   *  tag. rootTag may carry inline attributes ("books count=\"3\""); only
+   *  the name part closes the document (reference: XmlFile.scala:88-101). */
+  private[xml] def documentEnds(options: XmlOptions): (String, String) = {
+    val declaration =
+      if (options.declaration.isEmpty) "" else s"<?xml ${options.declaration}?>\n"
+    (s"$declaration<${options.rootTag}>", s"</${options.rootTag.split(" ", 2)(0)}>")
+  }
+
   /** `codec` option value (a short name or a codec class name) to its
-   *  class; shared with [[XmlPartitioned]]'s writer. */
+   *  class; shared with [[XmlFileFormat]]'s writer. */
   private[graft] def resolveCodec(name: String): Class[_ <: CompressionCodec] = {
     val shortNames = Map(
       "gzip" -> "org.apache.hadoop.io.compress.GzipCodec",

@@ -3,6 +3,10 @@ package graft.xml
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.streaming.runtime.FileStreamSource
+import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, SinkFileStatus}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -73,6 +77,58 @@ private[xml] object RawRecordFilter {
 }
 
 /**
+ * One scan's work on raw record strings, shared by [[XmlRelation.buildScan]]
+ * and [[XmlFileFormat]]'s reader: the raw pre-test of the pushed filters,
+ * the StAX parse, and the projection to the requested columns.
+ *
+ * FAILFAST must see every record: a pre-dropped malformed record would let
+ * a query succeed that is contractually required to throw, so that mode
+ * gets no pre-test. Malformedness is defined against the full row: a pruned
+ * parse would never attempt the casts of unselected columns, silently
+ * changing what counts as corrupt. When the query observes malformedness —
+ * it selects the corrupt-record column, or the mode drops bad rows — the
+ * full schema is parsed and projected afterwards. So is an empty request (a
+ * count), which must yield one row per record the full parse keeps.
+ */
+private[xml] final class RecordScan(
+    full: StructType,
+    requested: StructType,
+    filters: Array[Filter],
+    options: XmlOptions) extends Serializable {
+
+  private val preGroups: Array[Array[String]] =
+    if (options.rawFilterPushdown && options.parseMode != ParseMode.FailFast) {
+      RawRecordFilter.compile(filters, full, options)
+    } else Array.empty
+
+  private val observesMalformed =
+    requested.fieldNames.contains(options.columnNameOfCorruptRecord) ||
+      options.parseMode == ParseMode.DropMalformed
+
+  private val parseFull =
+    requested.isEmpty || (observesMalformed && requested.length != full.length)
+
+  private val projection: Array[Int] =
+    if (parseFull) requested.fieldNames.map(full.fieldIndex) else null
+
+  def rows(records: Iterator[String]): Iterator[InternalRow] = {
+    val kept =
+      if (preGroups.isEmpty) records
+      else records.filter(rec => preGroups.forall(g => g.exists(rec.contains)))
+    if (!parseFull) StaxXmlParser.parseRecords(kept, requested, options)
+    else {
+      val types = projection.map(i => full(i).dataType)
+      StaxXmlParser.parseRecords(kept, full, options).map { row =>
+        val values = new Array[Any](projection.length)
+        var i = 0
+        while (i < projection.length) { values(i) = row.get(projection(i), types(i)); i += 1 }
+        new GenericInternalRow(values): InternalRow
+      }
+    }
+  }
+}
+
+/**
  * The XML-backed relational table: a directory/glob of XML files plus a
  * `rowTag` (reference: src/main/scala/com/databricks/spark/xml/XmlRelation.scala:29-84).
  *
@@ -92,23 +148,30 @@ case class XmlRelation(
 
   private val options = XmlOptions(parameters)
 
+  // The output directory of a streaming file sink reads as the files its
+  // log committed, not as whatever part files the directory holds.
+  @transient private lazy val committedFiles: Option[Seq[SinkFileStatus]] =
+    XmlFile.sinkCommittedFiles(sqlContext.sparkSession, location)
+
   // One driver-side listing per relation, shared by the size estimate,
   // inference and every buildScan (each would otherwise re-list the input).
-  @transient private lazy val inputBytes: Option[Long] =
-    XmlFile.totalInputBytes(sqlContext.sparkContext.hadoopConfiguration, location)
+  @transient private lazy val inputBytes: Option[Long] = committedFiles match {
+    case Some(files) => Some(files.map(_.size).sum)
+    case None => XmlFile.totalInputBytes(sqlContext.sparkContext.hadoopConfiguration, location)
+  }
 
   @transient private lazy val splitMaxSize: Option[Long] =
     options.splitMaxBytes.orElse(
       XmlFile.splitMaxSizeFor(sqlContext.sparkContext, inputBytes))
 
-  private def baseRDD(): RDD[String] =
-    XmlFile.read(sqlContext.sparkContext, location, options, splitMaxSize)
-
-  override val schema: StructType = userSchema.getOrElse {
-    val inferred = InferSchema.infer(baseRDD(), options)
-    if (options.inferSchema) inferred
-    else InferSchema.stringOnly(inferred).asInstanceOf[StructType]
+  private def baseRDD(): RDD[String] = committedFiles match {
+    case Some(files) => XmlFile.readFiles(sqlContext.sparkContext,
+      files.map(f => new Path(f.sparkPath.toUri)), options, splitMaxSize)
+    case None => XmlFile.read(sqlContext.sparkContext, location, options, splitMaxSize)
   }
+
+  override val schema: StructType =
+    userSchema.getOrElse(InferSchema.forRead(baseRDD(), options))
 
   // HadoopFsRelation's rule: input bytes scaled by the session's
   // fileCompressionFactor. Raw XML overstates in-memory row width, so the
@@ -132,40 +195,8 @@ case class XmlRelation(
     val requested =
       if (requiredColumns.isEmpty) schema
       else StructType(requiredColumns.flatMap(c => schema.fields.find(_.name == c)))
-    // FAILFAST must see every record: a pre-dropped malformed record would
-    // let a query succeed that is contractually required to throw.
-    val preGroups =
-      if (options.rawFilterPushdown && options.parseMode != ParseMode.FailFast) {
-        RawRecordFilter.compile(filters, schema, options)
-      } else Array.empty[Array[String]]
-    def rawRecords(): RDD[String] = {
-      val raw = baseRDD()
-      if (preGroups.isEmpty) raw
-      else raw.filter(rec => preGroups.forall(g => g.exists(rec.contains)))
-    }
-    // Malformedness is defined against the full row: a pruned parse would
-    // never attempt the casts of unselected columns, silently changing what
-    // counts as corrupt. When the query observes malformedness — it selects
-    // the corrupt-record column, or the mode drops bad rows — parse the full
-    // schema and project afterwards.
-    val observesMalformed =
-      requiredColumns.contains(options.columnNameOfCorruptRecord) ||
-        options.parseMode == ParseMode.DropMalformed
-    if (!observesMalformed || requested.length == schema.length) {
-      StaxXmlParser.parse(rawRecords(), requested, options).asInstanceOf[RDD[Row]]
-    } else {
-      val full = schema
-      val idxs = requested.fieldNames.map(full.fieldIndex)
-      val types = idxs.map(i => full(i).dataType)
-      StaxXmlParser.parse(rawRecords(), full, options)
-        .map { row =>
-          val values = new Array[Any](idxs.length)
-          var i = 0
-          while (i < idxs.length) { values(i) = row.get(idxs(i), types(i)); i += 1 }
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values):
-            org.apache.spark.sql.catalyst.InternalRow
-        }.asInstanceOf[RDD[Row]]
-    }
+    val scan = new RecordScan(schema, requested, filters, options)
+    baseRDD().mapPartitions(scan.rows).asInstanceOf[RDD[Row]]
   }
 
   override def insert(data: DataFrame, overwrite: Boolean): Unit = {
@@ -215,9 +246,7 @@ class DefaultSource
         "Cannot infer a schema for an XML stream over an empty directory; " +
           "provide .schema(...) or seed the directory first")
     }
-    val inferred = InferSchema.infer(raw, options)
-    if (options.inferSchema) inferred
-    else InferSchema.stringOnly(inferred).asInstanceOf[StructType]
+    InferSchema.forRead(raw, options)
   }
 
   override def sourceSchema(
@@ -261,7 +290,15 @@ class DefaultSource
       Option(DefaultSource.plannedStreamSchemas.remove(key))
         .getOrElse(inferStreamSchema(sqlContext, parameters))
     }
-    new XmlStreamSource(sqlContext, metadataPath, pathFor(parameters), resolved, parameters)
+    // Spark's file stream source: a durable, compacted log of the files
+    // each batch took, `maxFilesPerTrigger`/`maxBytesPerTrigger` pacing and
+    // `maxFileAge`. Its batches resolve the format by class name, and
+    // DataSource tests RelationProvider before FileFormat, so the format is
+    // its own class rather than this one.
+    new FileStreamSource(
+      sqlContext.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      pathFor(parameters), classOf[XmlFileFormat].getName, resolved, Nil,
+      metadataPath, parameters)
   }
 
   // ---- Structured Streaming: writeStream.format("xmlng") ----
@@ -274,9 +311,11 @@ class DefaultSource
     require(outputMode == org.apache.spark.sql.streaming.OutputMode.Append(),
       s"xmlng sink supports Append output mode only, got $outputMode " +
         "(files are immutable once written; aggregate with a watermark to use Append)")
-    require(partitionColumns.isEmpty,
-      "xmlng sink does not support partitionBy; partition upstream or write separate streams")
-    new XmlStreamSink(sqlContext, pathFor(parameters), parameters)
+    // Spark's file stream sink: each batch's files are written under the
+    // commit protocol and listed in `_spark_metadata`; a batch already in
+    // the log is skipped on replay.
+    new FileStreamSink(sqlContext.sparkSession, pathFor(parameters), new XmlFileFormat,
+      partitionColumns, parameters)
   }
 
   override def createRelation(
@@ -288,10 +327,9 @@ class DefaultSource
       sqlContext: SQLContext,
       parameters: Map[String, String],
       schema: StructType): BaseRelation = {
-    val withTz =
-      if (parameters.contains("timezone")) parameters
-      else parameters + ("timezone" -> sqlContext.sparkSession.sessionState.conf.sessionLocalTimeZone)
-    XmlRelation(pathFor(parameters), withTz, Option(schema))(sqlContext)
+    XmlRelation(pathFor(parameters),
+      DefaultSource.withSessionTimeZone(sqlContext.sparkSession, parameters),
+      Option(schema))(sqlContext)
   }
 
   override def createRelation(
@@ -327,6 +365,13 @@ class DefaultSource
 class XmlNg2Source extends DefaultSource { override def shortName(): String = "xmlng2" }
 
 object DefaultSource {
+  /** `parameters` with the session time zone as `timezone` when none is set. */
+  private[xml] def withSessionTimeZone(
+      spark: org.apache.spark.sql.SparkSession,
+      parameters: Map[String, String]): Map[String, String] =
+    if (parameters.contains("timezone")) parameters
+    else parameters + ("timezone" -> spark.sessionState.conf.sessionLocalTimeZone)
+
   /** Plan-time → start-time schema handoff: (path, sorted options) ->
    *  schema inferred at sourceSchema, consumed (removed) by createSource.
    *  Driver-side; bounded because every entry is consumed at query start. */

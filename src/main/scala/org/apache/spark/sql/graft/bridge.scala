@@ -41,13 +41,4 @@ object Bridge {
 
   def restoreCheckpointDir(sc: org.apache.spark.SparkContext, dir: Option[String]): Unit =
     sc.checkpointDir = dir
-
-  /** Streaming-flagged variant: micro-batch DataFrames returned from a v1
-   *  `Source.getBatch` must carry `isStreaming=true` in their logical plan. */
-  def internalCreateStreamingDataFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = true)
 }

@@ -34,20 +34,32 @@ class XmlPartitionedSuite extends AnyFunSuite {
       (3L, "gamma", "s2"), (4L, "delta", "s3")))
   }
 
-  test("filters on partition columns prune branches from the plan") {
+  test("a partition filter prunes 1,000 directories to one under one scan") {
     val dir = tmp()
-    val df = (0L until 40L).map(i => (i, s"t$i", s"p${i % 4}")).toDF("id", "t", "src")
+    val n = 1000
+    val df = spark.range(0, 2L * n).select(col("id"), concat(lit("t"), col("id")).as("t"),
+      format_string("p%04d", col("id") % n).as("src"))
     XmlPartitioned.write(df, dir, Seq("src"), Map("rowTag" -> "doc"))
-    val all = XmlPartitioned.read(spark, dir, Map("rowTag" -> "doc"))
-    def relationCount(d: org.apache.spark.sql.DataFrame): Int =
-      d.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-      }.size
-    assert(relationCount(all) === 4)
-    val one = all.filter(col("src") === "p2")
-    assert(relationCount(one) === 1,
-      s"non-matching branches must fold away:\n${one.queryExecution.optimizedPlan}")
-    assert(one.count() === 10)
+    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("src=")) === n)
+    val dataSchema = org.apache.spark.sql.types.StructType(df.schema.fields.take(2))
+    val all = XmlPartitioned.read(spark, dir, Map("rowTag" -> "doc"), Some(dataSchema))
+    def scans(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+    assert(scans(all).size === 1, s"one scan node:\n${all.queryExecution.sparkPlan}")
+    assert(scans(all).head.selectedPartitions.partitionCount === n)
+    val one = all.filter(col("src") === "p0042")
+    val scan = scans(one)
+    assert(scan.size === 1)
+    assert(scan.head.selectedPartitions.partitionCount === 1,
+      "the planner prunes the listing to the one matching directory")
+    val files = scan.head.inputRDD.partitions.toSeq.flatMap {
+      case p: org.apache.spark.sql.execution.datasources.FilePartition =>
+        p.files.map(_.filePath.toString).toSeq
+    }
+    assert(files.size === 1 && files.head.contains("/src=p0042/"), files)
+    assert(one.select("id").collect().map(_.getLong(0)).sorted.toSeq === Seq(42L, 1042L))
   }
 
   test("multi-level partitions, special characters, and null values roundtrip") {
@@ -55,9 +67,14 @@ class XmlPartitionedSuite extends AnyFunSuite {
     val df = Seq(
       (1L, "a", "s 1/x", "en"),
       (2L, "b", null.asInstanceOf[String], "de"),
-      (3L, "c", "s=2%", "de")
+      (3L, "c", "s=2%", "de"),
+      (4L, "d", "a\t,{x}", "ja"),
+      (5L, "e", "\u65e5\u672c\u8a9e + caf\u00e9", "ja")
     ).toDF("id", "t", "src", "lang")
     XmlPartitioned.write(df, dir, Seq("src", "lang"), Map("rowTag" -> "doc"))
+    // Every directory name is ASCII, whatever the values hold.
+    val names = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
+    assert(names.length === 5 && names.forall(_.forall(_ < 0x80)), names.mkString(" "))
     val back = XmlPartitioned.read(spark, dir, Map("rowTag" -> "doc"))
       .select("id", "t", "src", "lang")
       .collect().map(r => (r.getLong(0), r.getString(1),
@@ -65,7 +82,32 @@ class XmlPartitionedSuite extends AnyFunSuite {
     assert(back === Seq(
       (1L, "a", Some("s 1/x"), "en"),
       (2L, "b", None, "de"),
-      (3L, "c", Some("s=2%"), "de")))
+      (3L, "c", Some("s=2%"), "de"),
+      (4L, "d", Some("a\t,{x}"), "ja"),
+      (5L, "e", Some("\u65e5\u672c\u8a9e + caf\u00e9"), "ja")))
+    val pruned = XmlPartitioned.read(spark, dir, Map("rowTag" -> "doc"))
+      .where(col("src") === "\u65e5\u672c\u8a9e + caf\u00e9")
+    assert(pruned.select("id").collect().map(_.getLong(0)).toSeq === Seq(5L))
+  }
+
+  test("untyped partition columns read back as the strings written, never retyped") {
+    val dir = tmp()
+    val df = Seq((1L, "a", "007", "2024-01-01"), (2L, "b", "1.50", "2024-01-02"))
+      .toDF("id", "t", "src", "day")
+    XmlPartitioned.write(df, dir, Seq("src", "day"), Map("rowTag" -> "doc"))
+    val back = XmlPartitioned.read(spark, dir, Map("rowTag" -> "doc"))
+    assert(back.schema("src").dataType === org.apache.spark.sql.types.StringType)
+    assert(back.schema("day").dataType === org.apache.spark.sql.types.StringType)
+    assert(back.select("id", "src", "day").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq ===
+      Seq((1L, "007", "2024-01-01"), (2L, "1.50", "2024-01-02")))
+    // A schema that names a partition column still types it.
+    val typed = XmlPartitioned.read(spark, dir, Map("rowTag" -> "doc"),
+      Some(org.apache.spark.sql.types.StructType.fromDDL("id LONG, t STRING, day DATE")))
+    assert(typed.schema("day").dataType === org.apache.spark.sql.types.DateType)
+    assert(typed.schema("src").dataType === org.apache.spark.sql.types.StringType)
+    assert(typed.where(col("src") === "007").select("day").collect().head.getDate(0)
+      .toString === "2024-01-01")
   }
 
   test("gzip-compressed partitioned layout roundtrips (stream codec, whole-file splits)") {
@@ -79,18 +121,6 @@ class XmlPartitionedSuite extends AnyFunSuite {
     val back = XmlPartitioned.read(spark, dir, Map("rowTag" -> "doc"))
     assert(back.count() === 30)
     assert(back.filter(col("src") === "g1").count() === 10)
-  }
-
-  test("escape/unescape roundtrips arbitrary unicode values; escaped form is path-safe") {
-    val rnd = new scala.util.Random(31)
-    val alphabet = "ab/=%. -_\t\n日本語é€" + (0 until 16).map(_ => rnd.nextPrintableChar()).mkString
-    (0 until 300).foreach { _ =>
-      val s = Seq.fill(rnd.nextInt(20))(alphabet(rnd.nextInt(alphabet.length))).mkString
-      val esc = XmlPartitioned.escape(s)
-      assert(XmlPartitioned.unescape(esc) === s, s"value='$s'")
-      assert(esc.forall(c => c.isLetterOrDigit && c < 0x80 || "._-%".contains(c)),
-        s"unsafe char survives escaping: '$esc'")
-    }
   }
 
   test("write rejects empty or unknown partition columns") {

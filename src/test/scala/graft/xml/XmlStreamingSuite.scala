@@ -2,6 +2,10 @@ package graft.xml
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,6 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * column-function layer composes with Structured Streaming out of the box —
  * `readStream.text` over an XML-records directory + `from_xml` gives an
  * incremental XML pipeline with watermarks/windows available downstream.
+ * The `xmlng` stream source and sink are Spark's file stream source and
+ * sink over [[XmlFileFormat]].
  */
 class XmlStreamingSuite extends AnyFunSuite {
 
@@ -110,7 +116,7 @@ class XmlStreamingSuite extends AnyFunSuite {
   test("xmlng stream source: maxFilesPerTrigger paces discovery deterministically") {
     val spark = SparkTestSession.spark
     val dir = Files.createTempDirectory("graft-stream-paced")
-    val in = dir.resolve("in"); val meta = dir.resolve("meta")
+    val in = dir.resolve("in")
     Files.createDirectories(in)
     (1 to 3).foreach { i =>
       Files.writeString(in.resolve(s"f$i.xml"), s"<rows><r><k>$i</k></r></rows>")
@@ -118,46 +124,33 @@ class XmlStreamingSuite extends AnyFunSuite {
       assert(in.resolve(s"f$i.xml").toFile.setLastModified(100000L * i))
     }
     val schema = StructType(Seq(StructField("k", LongType)))
-    // Drive the Source's discovery directly: offsets advance one file per
-    // trigger, each durably logged before the offset is surfaced.
-    val src = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString,
-      schema, Map("rowTag" -> "r", "maxFilesPerTrigger" -> "1"))
-    val offsets = Seq(src.getOffset, src.getOffset, src.getOffset)
-    assert(offsets.flatten.map(_.json).distinct.size === 3,
-      "each trigger should discover exactly one file")
-    assert(src.getOffset === offsets.last, "no new files -> offset unchanged")
-    val logged = (0L to 2L).map { id =>
-      new String(Files.readAllBytes(meta.resolve(id.toString)), "UTF-8").trim
-    }
-    assert(logged.forall(_.linesIterator.size == 1), s"one file per batch log: $logged")
-    // Log lines are `path TAB mtime`; compare the file names.
-    assert(logged.map(_.split('\t').head.split('/').last) ===
-      Seq("f1.xml", "f2.xml", "f3.xml"), "FIFO by modification time")
-    // A fresh incarnation over the same metadata dir re-reads the log and
-    // discovers nothing new — restart cannot re-deliver seen files.
-    val src2 = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString,
-      schema, Map("rowTag" -> "r"))
-    assert(src2.getOffset === offsets.last)
-
-    // End-to-end pacing: a real query with maxFilesPerTrigger=1 must consume
-    // the three files in (at least) three non-empty micro-batches.
-    val q = spark.readStream.format("xmlng")
+    val batches = pacedBatches(spark.readStream.format("xmlng")
       .option("rowTag", "r").option("maxFilesPerTrigger", "1")
-      .schema(schema).load(in.toString)
-      .writeStream.format("memory").queryName("xmlng_paced").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val ks = spark.table("xmlng_paced").collect().map(_.getLong(0)).sorted.toSeq
-      assert(ks === Seq(1L, 2L, 3L))
-      val nonEmpty = q.recentProgress.count(_.numInputRows > 0)
-      assert(nonEmpty >= 3, s"expected >=3 paced batches, saw $nonEmpty")
-    } finally q.stop()
+      .schema(schema).load(in.toString), dir.resolve("ckpt").toString)
+    assert(batches === Seq(Seq(1L), Seq(2L), Seq(3L)),
+      "one file per trigger, oldest modification time first")
+  }
+
+  /** Drains `stream` and returns each non-empty micro-batch's `k` values,
+   *  sorted, in batch order. */
+  private def pacedBatches(stream: DataFrame, checkpoint: String): Seq[Seq[Long]] = {
+    val seen = new java.util.concurrent.ConcurrentSkipListMap[Long, Seq[Long]]()
+    val q = stream.writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val ks = batch.collect().map(_.getLong(0)).sorted.toSeq
+        if (ks.nonEmpty) seen.put(id, ks)
+        ()
+      }
+      .option("checkpointLocation", checkpoint)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    seen.values().asScala.toSeq
   }
 
   test("xmlng stream source maxBytesPerTrigger paces by file size") {
     val spark = SparkTestSession.spark
     val dir = Files.createTempDirectory("graft-stream-bytes")
-    val in = dir.resolve("in"); val meta = dir.resolve("meta")
+    val in = dir.resolve("in")
     Files.createDirectories(in)
     val schema = StructType(Seq(StructField("k", LongType)))
     // Three ~60-byte files plus one oversized file; budget 150 bytes.
@@ -169,147 +162,12 @@ class XmlStreamingSuite extends AnyFunSuite {
     val big = in.resolve("s3big.xml")
     Files.writeString(big, s"<rows><r><k>3</k></r></rows>" + (" " * 400))
     assert(big.toFile.setLastModified(400000L))
-    val src = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString,
-      schema, Map("rowTag" -> "r", "maxBytesPerTrigger" -> "150"))
-    // Trigger 1: s0+s1 fit in 150 bytes, s2 would cross.
-    src.getOffset
-    assert(src.loggedFiles(0L).map(_.split('/').last) === Seq("s0.xml", "s1.xml"))
-    // Trigger 2: s2 alone (big would cross).
-    src.getOffset
-    assert(src.loggedFiles(1L).map(_.split('/').last) === Seq("s2.xml"))
-    // Trigger 3: the oversized file must still be admitted alone.
-    src.getOffset
-    assert(src.loggedFiles(2L).map(_.split('/').last) === Seq("s3big.xml"))
-  }
-
-  test("xmlng stream source log compacts: bounded dir, replay and restart intact") {
-    val spark = SparkTestSession.spark
-    val dir = Files.createTempDirectory("graft-stream-compact")
-    val in = dir.resolve("in"); val meta = dir.resolve("meta")
-    Files.createDirectories(in)
-    val schema = StructType(Seq(StructField("k", LongType)))
-    val src = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString,
-      schema, Map("rowTag" -> "r", "maxFilesPerTrigger" -> "1", "logCompactInterval" -> "10"))
-    // 25 files discovered one per trigger → batches 0..24; compactions at 9, 19.
-    (0 until 25).foreach { i =>
-      val f = in.resolve(f"f$i%03d.xml")
-      Files.writeString(f, s"<rows><r><k>$i</k></r></rows>")
-      assert(f.toFile.setLastModified(100000L * (i + 1)))
-      src.getOffset
-    }
-    val names = Files.list(meta).map[String](_.getFileName.toString)
-      .filter(n => !n.startsWith(".")).sorted().toArray.toSeq
-    assert(names.contains("19.compact"), s"latest snapshot missing: $names")
-    assert(!names.contains("9.compact"), s"old snapshot must be deleted: $names")
-    assert(names.map(_.toString).count(n => !n.endsWith(".compact")) === 5,
-      s"only batches 20..24 should remain as numbered entries: $names")
-
-    // A fresh incarnation rebuilds the full seen-set (no re-delivery) and can
-    // replay a batch that only exists inside the snapshot.
-    val src2 = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString,
-      schema, Map("rowTag" -> "r"))
-    assert(src2.getOffset.map(_.json) === Some("24"))
-    val replayed = (3L to 4L).flatMap(src2.loggedFiles)
-    assert(replayed.map(_.split('/').last) === Seq("f003.xml", "f004.xml"),
-      "batches 3..4 live only in the compact snapshot and must replay from it")
-  }
-
-  test("xmlng stream source maxFileAgeMs: aged committed entries evict, no re-delivery") {
-    val spark = SparkTestSession.spark
-    val dir = Files.createTempDirectory("graft-stream-age")
-    val in = dir.resolve("in"); val meta = dir.resolve("meta")
-    Files.createDirectories(in)
-    val schema = StructType(Seq(StructField("k", LongType)))
-    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-    val opts = Map("rowTag" -> "r", "maxFilesPerTrigger" -> "1",
-      "logCompactInterval" -> "4", "maxFileAgeMs" -> "250000")
-    val src = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString, schema, opts)
-    // Files at mtimes 100k..800k; age window 250k behind the newest.
-    (0 until 8).foreach { i =>
-      val f = in.resolve(f"f$i%03d.xml")
-      Files.writeString(f, s"<rows><r><k>$i</k></r></rows>")
-      assert(f.toFile.setLastModified(100000L * (i + 1)))
-      src.getOffset
-      src.commit(LongOffset(i.toLong)) // engine has committed this batch
-    }
-    // Compaction at batch 7 (mtime watermark 800k, cutoff 550k): batches
-    // 0..4 (mtimes 100k..500k) are committed AND aged → evicted from the
-    // snapshot; recent ones survive.
-    val compact = Files.readString(meta.resolve("7.compact"))
-    assert(!compact.contains("f000.xml") && !compact.contains("f004.xml"),
-      s"aged committed entries must leave the snapshot: $compact")
-    assert(compact.contains("f005.xml") && compact.contains("f007.xml"),
-      s"in-window entries must survive: $compact")
-
-    // Restart: the aged files are listed in the input dir but must NOT be
-    // re-delivered — discovery's age filter excludes them even though the
-    // seen-set no longer holds them.
-    val src2 = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString, schema, opts)
-    assert(src2.getOffset.map(_.json) === Some("7"), "no new batch on restart")
-    // A genuinely new in-window file is still picked up.
-    val fresh = in.resolve("f100.xml")
-    Files.writeString(fresh, "<rows><r><k>100</k></r></rows>")
-    assert(fresh.toFile.setLastModified(900000L))
-    assert(src2.getOffset.map(_.json) === Some("8"))
-    assert(src2.loggedFiles(8L).map(_.split('/').last) === Seq("f100.xml"))
-  }
-
-  test("xmlng stream source: 1e5-file corpus — log and seen-set stay bounded",
-      graft.pipeline.SlowTest) {
-    // The one streaming path whose DRIVER-side cost grows with corpus file
-    // count is discovery (one listing per trigger — the cost Spark's own
-    // FileStreamSource pays too). Everything else must stay bounded:
-    // compaction keeps the log dir at O(logCompactInterval) files and age
-    // eviction keeps the snapshot/seen-set at O(files-per-age-window), no
-    // matter how many files have ever streamed through. Proven here at the
-    // 10^5-file mark.
-    val spark = SparkTestSession.spark
-    val dir = Files.createTempDirectory("graft-stream-scale")
-    val in = dir.resolve("in"); val meta = dir.resolve("meta")
-    Files.createDirectories(in)
-    val n = 100000
-    val record = "<rows><r><k>7</k></r></rows>".getBytes("UTF-8")
-    (0 until n).foreach { i =>
-      val f = in.resolve(f"f$i%06d.xml")
-      Files.write(f, record)
-      assert(f.toFile.setLastModified(1000000L + i))
-    }
-    val schema = StructType(Seq(StructField("k", LongType)))
-    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-    val opts = Map("rowTag" -> "r", "logCompactInterval" -> "2",
-      "maxFileAgeMs" -> "100000")
-    val src = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString, schema, opts)
-    val t0 = System.nanoTime()
-    assert(src.getOffset.map(_.json) === Some("0"), "all files in one batch")
-    assert(src.loggedFiles(0L).size === n)
-    src.commit(LongOffset(0L))
-    // One newer file pushes the mtime watermark past every original file's
-    // age window; the compaction at batch 1 must evict all n committed aged
-    // entries from the snapshot.
-    val fresh = in.resolve("g000000.xml")
-    Files.write(fresh, record)
-    assert(fresh.toFile.setLastModified(1200000L))
-    assert(src.getOffset.map(_.json) === Some("1"))
-    src.commit(LongOffset(1L))
-    val secs = (System.nanoTime() - t0) / 1e9
-    info(f"1e5-file discovery + compaction: $secs%.1f s")
-    val compactLines = Files.readString(meta.resolve("1.compact"))
-      .linesIterator.count(_.nonEmpty)
-    assert(compactLines <= 3,
-      s"snapshot must hold only in-window entries, found $compactLines lines")
-    val metaFiles = Files.list(meta).filter(p =>
-      !p.getFileName.toString.startsWith(".")).count()
-    assert(metaFiles <= 3,
-      s"log dir must stay O(interval) files, found $metaFiles")
-    // Restart at 10^5 listed-but-evicted files: no re-delivery, and a new
-    // in-window file still arrives.
-    val src2 = new XmlStreamSource(spark.sqlContext, meta.toString, in.toString, schema, opts)
-    assert(src2.getOffset.map(_.json) === Some("1"), "no new batch on restart")
-    val fresh2 = in.resolve("g000001.xml")
-    Files.write(fresh2, record)
-    assert(fresh2.toFile.setLastModified(1300000L))
-    assert(src2.getOffset.map(_.json) === Some("2"))
-    assert(src2.loggedFiles(2L).map(_.split('/').last) === Seq("g000001.xml"))
+    val batches = pacedBatches(spark.readStream.format("xmlng")
+      .option("rowTag", "r").option("maxBytesPerTrigger", "150")
+      .schema(schema).load(in.toString), dir.resolve("ckpt").toString)
+    // s0+s1 fit in 150 bytes and s2 would cross; then s2 alone, since the
+    // oversized file would cross; the oversized file is still admitted alone.
+    assert(batches === Seq(Seq(0L, 1L), Seq(2L), Seq(3L)))
   }
 
   test("xmlng stream source infers the schema from files present at start") {
@@ -359,12 +217,13 @@ class XmlStreamingSuite extends AnyFunSuite {
       .schema(schema).load(out.toString)
     val rows = back.orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(rows === Seq((1L, "a&b"), (2L, "two"), (3L, "three")))
-    // Commit markers exist and sink part files carry their batch id.
-    val commits = out.resolve("_xmlng_commits")
-    assert(Files.list(commits).count() >= 2)
+    // Both batches are in the sink's log, and its part files are XML files.
+    val log = Files.list(out.resolve("_spark_metadata")).map[String](_.getFileName.toString)
+      .filter(_.forall(_.isDigit)).sorted().toArray.toSeq
+    assert(log === Seq("0", "1"))
     val names = Files.list(out).map[String](_.getFileName.toString)
       .filter(n => n.startsWith("part-")).toArray
-    assert(names.nonEmpty && names.forall(_.toString.matches("part-\\d+-.*")))
+    assert(names.nonEmpty && names.forall(_.toString.matches("part-\\d+-.*\\.xml")))
   }
 
   test("xmlng stream sink replay of a committed batch is a no-op") {
@@ -372,7 +231,7 @@ class XmlStreamingSuite extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-stream-sink-replay")
     val out = dir.resolve("out")
-    val sink = new XmlStreamSink(spark.sqlContext, out.toString, Map("rowTag" -> "r"))
+    val sink = xmlSink(out, Map("rowTag" -> "r"))
     val df = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     sink.addBatch(0, df)
     val firstFiles = Files.list(out).map[String](_.getFileName.toString)
@@ -386,29 +245,29 @@ class XmlStreamingSuite extends AnyFunSuite {
       .schema(schema).load(out.toString).count() === 2)
   }
 
-  test("xmlng stream sink replay with fewer parts clears the stale tail") {
-    // A crashed attempt may have rendered MORE part files than the replay
-    // (e.g. restart on fewer cores): deterministic names overwrite the
-    // shared prefix, and the fix must delete the rest or rows duplicate.
+  private def xmlSink(out: java.nio.file.Path, options: Map[String, String]): FileStreamSink =
+    new FileStreamSink(SparkTestSession.spark, out.toString, new XmlFileFormat, Nil, options)
+
+  test("graft.xml reads of a sink directory skip an uncommitted part file") {
+    // A part file whose batch never reached the sink log (a crashed attempt
+    // leaves one) holds rows that were never committed: a batch read that
+    // listed the directory would return them twice once the batch replays.
     val spark = SparkTestSession.spark
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-sink-shrink")
+    val dir = Files.createTempDirectory("graft-stream-sink-uncommitted")
     val out = dir.resolve("out")
-    val sink = new XmlStreamSink(spark.sqlContext, out.toString, Map("rowTag" -> "r"))
-    val wide = Seq.tabulate(8)(i => (i.toLong, s"v$i")).toDF("k", "v").repartition(4)
-    sink.addBatch(0, wide)
-    // Simulate the crash-before-marker: remove the commit marker, replay
-    // the same batch rendered into fewer partitions.
-    Files.delete(out.resolve("_xmlng_commits").resolve("0"))
-    val narrow = Seq.tabulate(8)(i => (i.toLong, s"v$i")).toDF("k", "v").coalesce(1)
-    sink.addBatch(0, narrow)
+    xmlSink(out, Map("rowTag" -> "r"))
+      .addBatch(0, Seq.tabulate(8)(i => (i.toLong, s"v$i")).toDF("k", "v").coalesce(1))
+    val part = Files.list(out).filter(_.getFileName.toString.startsWith("part-"))
+      .findFirst().get
+    Files.copy(part, out.resolve("part-99999-planted.c000.xml"))
     val schema = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
-    val back = spark.read.format("xmlng").option("rowTag", "r")
-      .schema(schema).load(out.toString)
-    assert(back.count() === 8, "stale parts from the wider attempt must be gone")
-    val parts = Files.list(out).map[String](_.getFileName.toString)
-      .filter(_.startsWith("part-")).toArray.toSeq
-    assert(parts.size === 1, s"replay rendered one part, dir must hold one: $parts")
+    def count(path: String) = spark.read.format("graft.xml").option("rowTag", "r")
+      .schema(schema).load(path).count()
+    assert(count(out.resolve("part-*").toString) === 16, "the planted copy parses")
+    assert(count(out.toString) === 8, "only the sink log's files are read")
+    assert(spark.read.format("xmlng").option("rowTag", "r").load(out.toString)
+      .schema.fieldNames.toSeq === Seq("k", "v"), "inference over the committed files")
   }
 
   test("xmlng stream sink honors the compression codec; batch read splits it back") {
@@ -416,8 +275,7 @@ class XmlStreamingSuite extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-stream-sink-codec")
     val out = dir.resolve("out")
-    val sink = new XmlStreamSink(spark.sqlContext, out.toString,
-      Map("rowTag" -> "r", "codec" -> "gzip"))
+    val sink = xmlSink(out, Map("rowTag" -> "r", "codec" -> "gzip"))
     sink.addBatch(0, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     val files = Files.list(out).map[String](_.getFileName.toString)
       .filter(_.startsWith("part-")).sorted().toArray.toSeq.map(_.toString)
@@ -428,23 +286,31 @@ class XmlStreamingSuite extends AnyFunSuite {
     assert(back.orderBy("k").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
   }
 
-  test("xmlng stream sink prunes commit markers beyond the retention horizon") {
+  test("xmlng stream sink writes a partitionBy layout") {
     val spark = SparkTestSession.spark
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-sink-retention")
-    val out = dir.resolve("out")
-    val sink = new XmlStreamSink(spark.sqlContext, out.toString,
-      Map("rowTag" -> "r", "commitRetention" -> "3"))
-    val df = Seq((1L, "x")).toDF("k", "v")
-    (0L to 8L).foreach(sink.addBatch(_, df))
-    val markers = Files.list(out.resolve("_xmlng_commits"))
-      .map[String](_.getFileName.toString)
-      .filter(!_.startsWith(".")) // local-FS .crc shadows
-      .sorted().toArray.toSeq
-    assert(markers === Seq("5", "6", "7", "8"), s"markers: $markers")
+    val dir = Files.createTempDirectory("graft-stream-sink-partitioned")
+    val in = dir.resolve("in"); val out = dir.resolve("out")
+    Files.createDirectories(in)
+    Files.writeString(in.resolve("a.xml"),
+      "<rows><r><k>1</k><p>a</p></r><r><k>2</k><p>b</p></r><r><k>3</k><p>a</p></r></rows>")
+    val schema = StructType(Seq(StructField("k", LongType), StructField("p", StringType)))
+    val q = spark.readStream.format("xmlng").option("rowTag", "r").schema(schema)
+      .load(in.toString)
+      .writeStream.format("xmlng").option("rowTag", "r").partitionBy("p")
+      .option("checkpointLocation", dir.resolve("ckpt").toString).start(out.toString)
+    try q.processAllAvailable() finally q.stop()
+    assert(Files.isDirectory(out.resolve("p=a")) && Files.isDirectory(out.resolve("p=b")))
+    val back = XmlPartitioned.read(spark, out.toString, Map("rowTag" -> "r"))
+    assert(back.where(col("p") === "a").select("k").collect().map(_.getLong(0)).sorted
+      .toSeq === Seq(1L, 3L))
+    // The flat batch source would drop `p`: it refuses the layout instead.
+    val ex = intercept[IllegalArgumentException] {
+      spark.read.format("graft.xml").option("rowTag", "r").load(out.toString)
+    }
+    assert(ex.getMessage.contains(classOf[XmlFileFormat].getName), ex.getMessage)
   }
 
-  test("xmlng stream sink rejects non-append modes and partitionBy") {
+  test("xmlng stream sink rejects non-append output modes") {
     val spark = SparkTestSession.spark
     val dir = Files.createTempDirectory("graft-stream-sink-modes")
     val counts = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
