@@ -98,7 +98,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok = try { sink(fn(spark, sfDir)); true } catch {
         case NonFatal(e) =>
-          System.err.println(s"bench: $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          System.err.println(s"bench: $name failed: ${LocalSession.describe(e)}")
           false
       }
       val dt = (System.nanoTime() - t0) / 1e9

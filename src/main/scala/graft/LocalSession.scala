@@ -19,4 +19,13 @@ private[graft] object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A failure's line for the mains' stderr: `e`'s class and message, then
+    * its root cause's when they differ, since a file scan wraps a parse
+    * error in `FAILED_READ_FILE` and a failed task in a stage failure. */
+  def describe(e: Throwable): String = {
+    val root = org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
+    def line(t: Throwable) = s"${t.getClass.getName}: ${t.getMessage}"
+    if (root == null || line(root) == line(e)) line(e) else s"${line(e)}; root cause ${line(root)}"
+  }
 }

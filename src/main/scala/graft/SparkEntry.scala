@@ -616,7 +616,7 @@ object SparkEntry {
     }),
 
     "q39_insert_overwrite" -> ((s, d) => {
-      // INSERT OVERWRITE through InsertableRelation (A7), read back schema'd.
+      // INSERT OVERWRITE into a `USING xmlng` view (A7), read back schema'd.
       val path = Fixtures.scratch("insert_target")
       t(s, d, "nation").limit(1).select(col("n_nationkey"), col("n_name"))
         .write.format("graft.xml").option("rowTag", "n").save(path)

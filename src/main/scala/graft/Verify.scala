@@ -21,7 +21,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${LocalSession.describe(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

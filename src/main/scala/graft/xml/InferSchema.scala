@@ -67,7 +67,7 @@ private[graft] object InferSchema {
   }
 
   /** The schema a read without a user schema resolves, shared by the
-   *  batch relation, the stream source and [[XmlFileFormat]]: the inferred
+   *  stream source and [[XmlFileFormat]]: the inferred
    *  schema, with every leaf a string unless `inferSchema` is on. */
   def forRead(xml: RDD[String], options: XmlOptions): StructType = {
     val inferred = infer(xml, options)

@@ -2,31 +2,23 @@ package graft.xml
 
 import java.nio.charset.Charset
 
-import scala.util.Try
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.{LongWritable, NullWritable, Text}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.io.compress.CompressionCodec
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.RecordReaderIterator
-import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog, SinkFileStatus}
-
 
 /**
- * File-level entry points: records-RDD extraction for the read path and
- * partition-wise XML serialization for the write path (reference:
- * src/main/scala/com/databricks/spark/xml/util/XmlFile.scala:39-161).
- *
- * Write layout: each task writes one part file that is a complete XML
- * document (`declaration`, `<rootTag>`, one `<rowTag>` element per row,
- * `</rootTag>`), so part files are independently parseable — the property
- * that makes a 100 TB corpus embarrassingly parallel to re-read.
+ * File-level helpers of the XML source (reference:
+ * src/main/scala/com/databricks/spark/xml/util/XmlFile.scala:39-161): raw
+ * record strings as an RDD, for schema inference and the parse probes; one
+ * byte range's records, for [[XmlFileFormat]]'s reader; and the document
+ * ends and codec lookup its writer uses.
  */
 private[graft] object XmlFile {
 
@@ -35,12 +27,10 @@ private[graft] object XmlFile {
    * input into at least defaultParallelism splits, bounded by [4 MB
    * open-cost, 128 MB]. FileInputFormat otherwise splits at the filesystem
    * block size (32 MB on local disks), which leaves most cores idle on
-   * inputs in the 100 MB range. `totalBytes` comes from a driver-side
-   * [[totalInputBytes]] listing (XmlRelation lists once and shares it with
-   * its size estimate); None when the listing failed or an explicit user
-   * setting should win.
+   * inputs in the 100 MB range. None when the input size is unknown or a
+   * global `mapreduce.input.fileinputformat.split.maxsize` is set.
    */
-  def splitMaxSizeFor(sc: SparkContext, totalBytes: => Option[Long]): Option[Long] = {
+  private def splitMaxSizeFor(sc: SparkContext, totalBytes: Option[Long]): Option[Long] = {
     if (sc.hadoopConfiguration.get("mapreduce.input.fileinputformat.split.maxsize") != null) {
       return None
     }
@@ -50,51 +40,30 @@ private[graft] object XmlFile {
     }
   }
 
-  /** Raw record strings for `path`, split-parallel; computes split sizing
-   *  here (explicit `splitMaxBytes` option, else the packing policy). */
+  /** Raw record strings for `path` (comma-separated, globs ok), split-parallel. */
   def read(sc: SparkContext, path: String, options: XmlOptions): RDD[String] =
-    read(sc, path, options, options.splitMaxBytes.orElse(
-      splitMaxSizeFor(sc, totalInputBytes(sc.hadoopConfiguration, path))))
-
-  /** Raw record strings for `path`, split-parallel, with sizing precomputed
-   *  by the caller (XmlRelation computes once and reuses across inference +
-   *  every buildScan). */
-  def read(
-      sc: SparkContext,
-      path: String,
-      options: XmlOptions,
-      splitMaxSize: Option[Long]): RDD[String] =
-    readInputs(sc, path, options, splitMaxSize)(FileInputFormat.setInputPaths(_, path))
+    readInputs(sc, path, options, totalInputBytes(sc.hadoopConfiguration, path))(
+      FileInputFormat.setInputPaths(_, path))
 
   /** Raw record strings for an explicit file list. The files go to Hadoop
    *  as `Path`s, not as one comma-joined string, so a comma in a name (a
    *  partition value, say) cannot split a path in two. */
-  def readFiles(
-      sc: SparkContext,
-      files: Seq[Path],
-      options: XmlOptions,
-      splitMaxSize: Option[Long]): RDD[String] =
+  def readFiles(sc: SparkContext, files: Seq[FileStatus], options: XmlOptions): RDD[String] =
     if (files.isEmpty) sc.emptyRDD[String]
-    else readInputs(sc, files.mkString(","), options, splitMaxSize)(
-      FileInputFormat.setInputPaths(_, files: _*))
+    else readInputs(sc, files.map(_.getPath).mkString(","), options, Some(files.map(_.getLen).sum))(
+      FileInputFormat.setInputPaths(_, files.map(_.getPath): _*))
 
   private def readInputs(
       sc: SparkContext,
       name: String,
       options: XmlOptions,
-      splitMaxSize: Option[Long])(setInputs: Job => Unit): RDD[String] = {
+      totalBytes: Option[Long])(setInputs: Job => Unit): RDD[String] = {
     val job = Job.getInstance(sc.hadoopConfiguration) // a private copy
     val conf = job.getConfiguration
     conf.set(XmlInputFormat.ROW_TAG_KEY, options.rowTag)
     conf.set(XmlInputFormat.ENCODING_KEY, options.charset)
-    splitMaxSize.foreach { maxSplit =>
-      // An explicit per-read option wins over the global Hadoop conf (this
-      // conf is a private copy); policy-computed sizing only fills a gap.
-      if (options.splitMaxBytes.isDefined ||
-          conf.get("mapreduce.input.fileinputformat.split.maxsize") == null) {
-        conf.setLong("mapreduce.input.fileinputformat.split.maxsize", maxSplit)
-      }
-    }
+    splitMaxSizeFor(sc, totalBytes).foreach(
+      conf.setLong("mapreduce.input.fileinputformat.split.maxsize", _))
     setInputs(job)
     val charsetName = options.charset
     sc.newAPIHadoopRDD(conf, classOf[XmlInputFormat], classOf[LongWritable], classOf[Text])
@@ -133,36 +102,6 @@ private[graft] object XmlFile {
     texts.map(text => new String(text.getBytes, 0, text.getLength, charset))
   }
 
-  /** The files a streaming file sink committed under `path`, from its
-   *  `_spark_metadata` log; None when `path` is not a sink's output. A part
-   *  file of a batch that never committed is not listed, so a batch read
-   *  skips it, and a replayed batch never shows up twice. A sink written
-   *  with `partitionBy` is refused: its partition values live in directory
-   *  names, which this flat read would drop. */
-  private[xml] def sinkCommittedFiles(
-      spark: SparkSession,
-      path: String): Option[Seq[SinkFileStatus]] = {
-    val sqlConf = spark.sessionState.conf
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    // A glob or a comma list names no directory; asked about one,
-    // `hasMetadata` would log a stack trace before answering no.
-    val isDirectory = Try(fs.getFileStatus(dir).isDirectory).getOrElse(false)
-    if (!isDirectory || !FileStreamSink.hasMetadata(Seq(path), conf, sqlConf)) None
-    else {
-      val files = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark,
-        FileStreamSink.getMetadataLogPath(fs, dir, sqlConf).toString)
-        .allFiles().toSeq.filterNot(_.isDir)
-      val base = fs.makeQualified(dir)
-      require(files.forall(f => new Path(f.sparkPath.toUri).getParent == base),
-        s"$path is the output of a partitioned stream sink; its partition columns live " +
-          "in directory names, which this source does not read: read it with " +
-          s"""spark.read.format("${classOf[XmlFileFormat].getName}")""")
-      Some(files)
-    }
-  }
-
   /** Total byte size of the files `path` names (comma-separated, globs ok);
    *  None if listing fails — callers then fall back to their defaults. */
   private[graft] def totalInputBytes(
@@ -181,78 +120,6 @@ private[graft] object XmlFile {
       }
       Some(total)
     } catch { case _: Exception => None }
-  }
-
-  def save(df: DataFrame, path: String, options: XmlOptions): Unit = {
-    val schema = df.schema
-    val (header, footer) = documentEnds(options)
-    val codecClass: Option[Class[_ <: CompressionCodec]] = options.codec.map { name =>
-      resolveCodec(name)
-    }
-    // Serialize from InternalRow directly: the external `df.rdd` conversion
-    // (boxing every numeric, decoding every string) dominated write cost.
-    // The sink mirrors saveAsTextFile (same old-API TextOutputFormat, same
-    // NullWritable-key value-plus-newline layout, same reused Text) but
-    // fills the Text bytes straight from the builder — all-ASCII rows (the
-    // common case for XML) never materialize a per-row String, rows with
-    // non-ASCII text fall back to the JDK encoder for exact parity.
-    val rendered = df.queryExecution.toRdd.mapPartitions { rows =>
-      // One reusable builder + Text per partition; each next() yields one
-      // text line block (header, row, or row+footer).
-      val sb = new java.lang.StringBuilder(1 << 16)
-      val gen = new StaxXmlGenerator(schema, options)
-      val text = new Text()
-      var buf = new Array[Byte](1 << 16)
-      // Fill `text` with the UTF-8 encoding of sb[from..sb.length).
-      def fillText(from: Int): Unit = {
-        val len = sb.length
-        if (buf.length < len - from) {
-          buf = new Array[Byte](Integer.highestOneBit(len - from) << 1)
-        }
-        var i = from
-        var bi = 0
-        var ascii = true
-        while (ascii && i < len) {
-          val c = sb.charAt(i)
-          if (c < 0x80) { buf(bi) = c.toByte; bi += 1; i += 1 }
-          else ascii = false
-        }
-        if (ascii) text.set(buf, 0, bi)
-        else text.set(sb.substring(from)) // JDK-exact encode for non-ASCII
-      }
-      new Iterator[(NullWritable, Text)] {
-        private var begun = false
-        private var ended = false
-        override def hasNext: Boolean = !ended
-        override def next(): (NullWritable, Text) = {
-          if (!begun) {
-            begun = true
-            text.set(if (rows.hasNext) header else { ended = true; header + "\n" + footer })
-          } else if (rows.hasNext) {
-            sb.setLength(0)
-            val emitter = new XmlEmitter(sb, baseDepth = 1, compact = options.compactOutput)
-            gen.write(emitter, rows.next())
-            if (!rows.hasNext) {
-              ended = true
-              sb.append('\n').append(footer)
-            }
-            // Pretty mode: strip the emitter's leading newline — the sink
-            // writes one per record. Compact rows start at '<'.
-            fillText(if (options.compactOutput) 0 else 1)
-          } else {
-            throw new NoSuchElementException("exhausted")
-          }
-          (NullWritable.get(), text)
-        }
-      }
-    }
-    val outFmt = classOf[org.apache.hadoop.mapred.TextOutputFormat[NullWritable, Text]]
-    codecClass match {
-      case Some(c) =>
-        rendered.saveAsHadoopFile(path, classOf[NullWritable], classOf[Text], outFmt, c)
-      case None =>
-        rendered.saveAsHadoopFile(path, classOf[NullWritable], classOf[Text], outFmt)
-    }
   }
 
   /** The text before the first row and after the last one of every part

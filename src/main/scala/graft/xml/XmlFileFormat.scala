@@ -1,6 +1,6 @@
 package graft.xml
 
-import java.io.Writer
+import java.io.OutputStream
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
@@ -16,22 +16,24 @@ import org.apache.spark.util.SerializableConfiguration
 
 /**
  * The graft XML reader and writer as a Spark `FileFormat`, the interface
- * Spark's own file sources are built on. It is what Spark's file stream
- * source and sink run (`readStream`/`writeStream.format("xmlng")`) and what
- * partitioned layouts read and write through ([[XmlPartitioned]]), so those
- * get Spark's listing, partition discovery and pruning, `FilePartition`
- * packing, commit protocol and stream logs. The plain batch source behind
- * `graft.xml`/`xmlng`/`xmlng2` stays [[XmlRelation]].
+ * Spark's own file sources are built on. Every XML file read and write goes
+ * through it: batch reads and writes through `graft.xml`/`xmlng`/`xmlng2`
+ * ([[DefaultSource]] resolves them to a `HadoopFsRelation` over this
+ * format), Spark's file stream source and sink
+ * (`readStream`/`writeStream.format("xmlng")`) and partitioned layouts
+ * ([[XmlPartitioned]]). So they all get Spark's listing, partition
+ * discovery and pruning, `FilePartition` packing, commit protocol and
+ * stream logs.
  *
- * It has no short name, because Spark's built-in source owns `xml`; use it
- * by class name: `format(classOf[XmlFileFormat].getName)`.
+ * It has no short name, because Spark's built-in source owns `xml`; the
+ * source names above, or its class name, select it.
  *
  * Reader: each `PartitionedFile`'s byte range is one `XmlRecordReader`
  * split, under the same ownership rules as a `FileInputFormat` split
- * (BYBLOCK for bzip2, whole-file for gzip), and its records go through the
- * batch relation's [[RecordScan]]. Writer: one complete XML document per
- * output file — header on open, one row element per row, footer on close.
- * Like the batch source, both take the session time zone when the
+ * (BYBLOCK for bzip2, whole-file for gzip), and its records go through
+ * [[RecordScan]]. Writer: one complete XML document per output file —
+ * header on open, one row element per row, footer on close — so part files
+ * are independently parseable. Both take the session time zone when the
  * `timezone` option is missing.
  */
 class XmlFileFormat extends TextBasedFileFormat {
@@ -57,11 +59,8 @@ class XmlFileFormat extends TextBasedFileFormat {
     if (files.isEmpty) None
     else {
       val xmlOptions = XmlOptions(DefaultSource.withSessionTimeZone(sparkSession, options))
-      val sc = sparkSession.sparkContext
-      val sizing = xmlOptions.splitMaxBytes.orElse(
-        XmlFile.splitMaxSizeFor(sc, Some(files.map(_.getLen).sum)))
       Some(InferSchema.forRead(
-        XmlFile.readFiles(sc, files.map(_.getPath), xmlOptions, sizing), xmlOptions))
+        XmlFile.readFiles(sparkSession.sparkContext, files, xmlOptions), xmlOptions))
     }
   }
 
@@ -106,9 +105,11 @@ class XmlFileFormat extends TextBasedFileFormat {
   }
 }
 
-/** One output file: a complete XML document, byte for byte the layout of an
- *  `XmlFile.save` part file (the header, each row element from a new line,
- *  then the footer on its own line). */
+/** One output file: a complete XML document (the header, each row element
+ *  from a new line, then the footer on its own line). A row goes to the
+ *  stream as bytes filled straight from the builder: all-ASCII rows, the
+ *  common case for XML, never materialize a per-row String; a row with
+ *  non-ASCII text falls back to the JDK's UTF-8 encoder. */
 private[xml] final class XmlOutputWriter(
     val path: String,
     dataSchema: StructType,
@@ -116,22 +117,27 @@ private[xml] final class XmlOutputWriter(
     options: XmlOptions) extends OutputWriter {
 
   private val (header, footer) = XmlFile.documentEnds(options)
-  private val out: Writer =
-    CodecStreams.createOutputStreamWriter(context, new Path(path), StandardCharsets.UTF_8)
+  private val out: OutputStream = CodecStreams.createOutputStream(context, new Path(path))
   private val gen = new StaxXmlGenerator(dataSchema, options)
   private val sb = new java.lang.StringBuilder(1 << 12)
-  out.write(header)
+  private var buf = new Array[Byte](1 << 12)
+  out.write(header.getBytes(StandardCharsets.UTF_8))
 
   override def write(row: InternalRow): Unit = {
     sb.setLength(0)
     // A pretty row starts with its own newline; a compact one does not.
     if (options.compactOutput) sb.append('\n')
     gen.write(new XmlEmitter(sb, baseDepth = 1, compact = options.compactOutput), row)
-    out.append(sb)
+    val len = sb.length
+    if (buf.length < len) buf = new Array[Byte](Integer.highestOneBit(len) << 1)
+    var i = 0
+    while (i < len && sb.charAt(i) < 0x80) { buf(i) = sb.charAt(i).toByte; i += 1 }
+    out.write(buf, 0, i)
+    if (i < len) out.write(sb.substring(i).getBytes(StandardCharsets.UTF_8))
   }
 
   override def close(): Unit = {
-    out.write("\n" + footer + "\n")
+    out.write(("\n" + footer + "\n").getBytes(StandardCharsets.UTF_8))
     out.close()
   }
 }

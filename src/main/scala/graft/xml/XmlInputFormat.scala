@@ -12,7 +12,8 @@ import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
 /**
  * Hadoop input format that extracts `<rowTag …>…</rowTag>` blocks from raw
  * byte splits and emits each as one [[Text]] record (bytes in the file's
- * charset; decoding happens downstream in [[XmlFile.read]]).
+ * charset, or UTF-8 for a charset that is not ASCII-compatible; the
+ * callers of [[XmlFile.records]] and [[XmlFile.read]] decode them).
  *
  * Fulfills the same contract as the reference's record splitter (reference:
  * src/main/scala/com/databricks/spark/xml/XmlInputFormat.scala:32-340) with a
@@ -139,7 +140,7 @@ private[xml] final class XmlRecordReader extends RecordReader[LongWritable, Text
     require(rowTag != null && rowTag.nonEmpty, "row tag must be configured")
     // Non-ASCII-compatible input is decoded to UTF-8 before scanning (below),
     // so the state machine — and the records it emits — are always in an
-    // ASCII-compatible encoding. XmlFile.read decodes accordingly.
+    // ASCII-compatible encoding, and XmlFile decodes them accordingly.
     val transcode = !XmlInputFormat.isAsciiCompatible(charset)
     val tagCharset = if (transcode) java.nio.charset.StandardCharsets.UTF_8 else charset
     startTag = s"<$rowTag".getBytes(tagCharset)

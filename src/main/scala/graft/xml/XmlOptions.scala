@@ -74,17 +74,8 @@ class XmlOptions(@transient private val raw: Map[String, String]) extends Serial
    * stays pretty-printed for byte-compatibility with reference output.
    */
   val compactOutput: Boolean = get("compactOutput").exists(_.toBoolean)
-  /**
-   * Explicit per-read split max size in bytes (extra over the reference
-   * surface). Overrides both the automatic split-packing policy and any
-   * global `mapreduce.input.fileinputformat.split.maxsize` Hadoop setting,
-   * and only for this read — tests and tuning can force a split size
-   * without mutating the shared SparkContext configuration.
-   */
-  val splitMaxBytes: Option[Long] = get("splitMaxBytes").map(_.toLong)
 
   require(rowTag.nonEmpty, "'rowTag' option must not be empty")
-  require(splitMaxBytes.forall(_ > 0), "'splitMaxBytes' must be positive")
   require(rootTag.nonEmpty, "'rootTag' option must not be empty")
   require(!rowTag.startsWith("<") && !rowTag.endsWith(">"),
     "'rowTag' must not include angle brackets")

@@ -1,12 +1,14 @@
 package graft.xml
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.Job
+import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.execution.streaming.runtime.FileStreamSource
-import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, SinkFileStatus}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -14,9 +16,9 @@ import org.apache.spark.sql.types._
  * Compiles pushed-down [[Filter]]s into a conjunction of required-substring
  * groups over the RAW record text: a record that contains no member of some
  * group cannot produce a matching row, so the whole StAX parse is skipped.
- * Strictly a necessary-condition pre-test — every filter is also declared
- * unhandled, so Spark re-evaluates all of them above the scan and a false
- * KEEP costs only the parse it would have cost anyway.
+ * Strictly a necessary-condition pre-test — Spark re-evaluates every
+ * filter above a file scan, so a false KEEP costs only the parse it would
+ * have cost anyway.
  *
  * Only predicates whose match implies a verbatim substring are compiled:
  * equality / contains / prefix / suffix / IN on top-level string fields,
@@ -77,8 +79,8 @@ private[xml] object RawRecordFilter {
 }
 
 /**
- * One scan's work on raw record strings, shared by [[XmlRelation.buildScan]]
- * and [[XmlFileFormat]]'s reader: the raw pre-test of the pushed filters,
+ * One scan's work on raw record strings, shared by [[XmlFileFormat]]'s
+ * reader and [[XmlRelation.buildScan]]: the raw pre-test of the pushed filters,
  * the StAX parse, and the projection to the requested columns.
  *
  * FAILFAST must see every record: a pre-dropped malformed record would let
@@ -129,96 +131,40 @@ private[xml] final class RecordScan(
 }
 
 /**
- * The XML-backed relational table: a directory/glob of XML files plus a
- * `rowTag` (reference: src/main/scala/com/databricks/spark/xml/XmlRelation.scala:29-84).
- *
- * `PrunedFilteredScan` pushes projection and filters into the scan: the
- * parser receives a sub-schema and skips every subtree it doesn't mention,
- * so a 2-column projection over a 100-column document never materializes
- * the other 98; pushed string predicates become a raw-substring pre-test
- * ([[RawRecordFilter]]) that skips the StAX parse of records that cannot
- * match. All other relational work (joins, aggregates, windows, …) is
- * planned by Catalyst above this scan.
+ * The scan of the former DSv1 relation, kept for callers that time it
+ * directly: [[buildScan]] runs [[XmlFile.read]]'s records of `location`
+ * through [[RecordScan]], with the pushed filters as the raw pre-test. It is
+ * not a relation, and no source returns it: every read through `graft.xml`,
+ * `xmlng` or `xmlng2` is a `HadoopFsRelation` over [[XmlFileFormat]].
  */
 case class XmlRelation(
     location: String,
     parameters: Map[String, String],
-    userSchema: Option[StructType])(@transient val sqlContext: SQLContext)
-  extends BaseRelation with PrunedFilteredScan with InsertableRelation {
+    userSchema: Option[StructType])(@transient val sqlContext: SQLContext) {
 
-  private val options = XmlOptions(parameters)
-
-  // The output directory of a streaming file sink reads as the files its
-  // log committed, not as whatever part files the directory holds.
-  @transient private lazy val committedFiles: Option[Seq[SinkFileStatus]] =
-    XmlFile.sinkCommittedFiles(sqlContext.sparkSession, location)
-
-  // One driver-side listing per relation, shared by the size estimate,
-  // inference and every buildScan (each would otherwise re-list the input).
-  @transient private lazy val inputBytes: Option[Long] = committedFiles match {
-    case Some(files) => Some(files.map(_.size).sum)
-    case None => XmlFile.totalInputBytes(sqlContext.sparkContext.hadoopConfiguration, location)
-  }
-
-  @transient private lazy val splitMaxSize: Option[Long] =
-    options.splitMaxBytes.orElse(
-      XmlFile.splitMaxSizeFor(sqlContext.sparkContext, inputBytes))
-
-  private def baseRDD(): RDD[String] = committedFiles match {
-    case Some(files) => XmlFile.readFiles(sqlContext.sparkContext,
-      files.map(f => new Path(f.sparkPath.toUri)), options, splitMaxSize)
-    case None => XmlFile.read(sqlContext.sparkContext, location, options, splitMaxSize)
-  }
-
-  override val schema: StructType =
-    userSchema.getOrElse(InferSchema.forRead(baseRDD(), options))
-
-  // HadoopFsRelation's rule: input bytes scaled by the session's
-  // fileCompressionFactor. Raw XML overstates in-memory row width, so the
-  // estimate errs large; it lets Catalyst auto-broadcast a small XML table,
-  // which the BaseRelation default (spark.sql.defaultSizeInBytes) never does.
-  override def sizeInBytes: Long = inputBytes match {
-    case Some(bytes) =>
-      (bytes * sqlContext.sparkSession.sessionState.conf.fileCompressionFactor).toLong
-    case None => super.sizeInBytes
-  }
-
-  // The parser emits InternalRow directly; telling Spark so skips the
-  // per-row external->internal conversion above the scan.
-  override def needConversion: Boolean = false
-
-  // The raw pre-test is a necessary condition only; Spark must re-evaluate
-  // every filter above the scan.
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
+  def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
+    val options = XmlOptions(parameters)
+    val records = XmlFile.read(sqlContext.sparkContext, location, options)
+    val schema = userSchema.getOrElse(InferSchema.forRead(records, options))
     val requested =
       if (requiredColumns.isEmpty) schema
       else StructType(requiredColumns.flatMap(c => schema.fields.find(_.name == c)))
-    val scan = new RecordScan(schema, requested, filters, options)
-    baseRDD().mapPartitions(scan.rows).asInstanceOf[RDD[Row]]
-  }
-
-  override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    val path = new Path(location)
-    val fs = path.getFileSystem(sqlContext.sparkContext.hadoopConfiguration)
-    if (overwrite) {
-      // A bad codec must fail before the old output is deleted.
-      options.codec.foreach(XmlFile.resolveCodec)
-      if (fs.exists(path)) fs.delete(path, true)
-      XmlFile.save(data, location, options)
-    } else {
-      throw new UnsupportedOperationException(
-        "APPEND is not supported for the graft XML source; use Overwrite")
-    }
+    records.mapPartitions(new RecordScan(schema, requested, filters, options).rows)
+      .asInstanceOf[RDD[Row]]
   }
 }
 
 /**
- * DSv1 registration: `spark.read.format("graft.xml").…` or the short name
- * `xmlng` (distinct from Spark 4's built-in `xml` source)
- * (reference: src/main/scala/com/databricks/spark/xml/DefaultSource.scala:29-111).
- * `xmlng2` names the same source ([[XmlNg2Source]]).
+ * The source names `graft.xml` and `xmlng` (distinct from Spark 4's
+ * built-in `xml` source), and `xmlng2` ([[XmlNg2Source]]): thin front doors
+ * to [[XmlFileFormat]] (reference:
+ * src/main/scala/com/databricks/spark/xml/DefaultSource.scala:29-111). A
+ * batch read is Spark's `HadoopFsRelation` over the format, so listing,
+ * size estimates, split packing, partition discovery, a stream sink's
+ * `_spark_metadata` log and `INSERT` come from Spark's file layer. The
+ * relation providers stay because Spark consults them before a `FileFormat`
+ * and before any write: they check the options there, so a bad codec or
+ * charset fails before an Overwrite deletes the old output.
  */
 class DefaultSource
   extends RelationProvider
@@ -326,42 +272,39 @@ class DefaultSource
   override def createRelation(
       sqlContext: SQLContext,
       parameters: Map[String, String],
-      schema: StructType): BaseRelation = {
-    XmlRelation(pathFor(parameters),
-      DefaultSource.withSessionTimeZone(sqlContext.sparkSession, parameters),
-      Option(schema))(sqlContext)
-  }
+      schema: StructType): BaseRelation =
+    fileSource(sqlContext, parameters, Option(schema)).resolveRelation()
 
   override def createRelation(
       sqlContext: SQLContext,
       mode: SaveMode,
       parameters: Map[String, String],
       data: DataFrame): BaseRelation = {
-    val location = pathFor(parameters)
-    val options = XmlOptions(parameters)
-    val path = new Path(location)
-    val fs = path.getFileSystem(sqlContext.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(path)
-    val doSave = mode match {
-      case SaveMode.Overwrite =>
-        // A bad codec must fail before the old output is deleted.
-        options.codec.foreach(XmlFile.resolveCodec)
-        if (exists) fs.delete(path, true)
-        true
-      case SaveMode.ErrorIfExists if exists =>
-        throw new IllegalStateException(s"path $location already exists")
-      case SaveMode.Ignore if exists => false
-      case SaveMode.Append =>
-        throw new UnsupportedOperationException(
-          "Append mode is not supported by the graft XML source")
-      case _ => true
-    }
-    if (doSave) XmlFile.save(data, location, options)
-    createRelation(sqlContext, parameters, data.schema)
+    val source = fileSource(sqlContext, parameters, Some(data.schema))
+    data.write.format(source.className).mode(mode).options(source.options)
+      .save(pathFor(parameters))
+    source.resolveRelation(checkFilesExist = false)
+  }
+
+  /** [[XmlFileFormat]] over the paths `parameters` names, once the options
+   *  pass the checks that must run before any write. The path splits as
+   *  `FileInputFormat` splits it: on commas, but not inside `{a,b}` globs. */
+  private def fileSource(
+      sqlContext: SQLContext,
+      parameters: Map[String, String],
+      schema: Option[StructType]): DataSource = {
+    val spark = sqlContext.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    XmlOptions(DefaultSource.withSessionTimeZone(spark, parameters)).codec
+      .foreach(XmlFile.resolveCodec)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    FileInputFormat.setInputPaths(job, pathFor(parameters))
+    DataSource(spark, classOf[XmlFileFormat].getName,
+      FileInputFormat.getInputPaths(job).map(_.toString).toSeq, schema,
+      options = parameters - "path")
   }
 }
 
-/** The short name `xmlng2` for [[DefaultSource]]: same relation, same scan. */
+/** The short name `xmlng2` for [[DefaultSource]]: same format, same scan. */
 class XmlNg2Source extends DefaultSource { override def shortName(): String = "xmlng2" }
 
 object DefaultSource {

@@ -322,7 +322,6 @@ class XmlConformanceSuite extends AnyFunSuite {
     bad("rootTag" -> "<rows>")
     bad("valueTag" -> "_attr", "attributePrefix" -> "_attr")
     bad("samplingRatio" -> "0")
-    bad("splitMaxBytes" -> "-1")
   }
 
   test("missing input path fails with a clear error, with or without schema") {

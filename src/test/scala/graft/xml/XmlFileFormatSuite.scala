@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * The XML `FileFormat` against the batch relation it shares a scanner and a
- * parser with: Spark's split planning hands it `(start, length)` byte
+ * The XML `FileFormat`, used by class name, against the source names that
+ * resolve to it: Spark's split planning hands it `(start, length)` byte
  * ranges and packs several files into one task, and the rows must not
- * depend on either.
+ * depend on either; a write through either name gives the same bytes.
  */
 class XmlFileFormatSuite extends AnyFunSuite {
 

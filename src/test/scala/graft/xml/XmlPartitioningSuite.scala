@@ -46,54 +46,38 @@ class XmlPartitioningSuite extends AnyFunSuite {
   }
 
   test("size-aware split packing spreads a large file across the cluster") {
-    // ~8 MB single file on local[4]: the packing policy (total/parallelism,
-    // clamped to >= 4 MB) must yield 2 MB->4 MB splits, i.e. 2 partitions —
-    // not the 1 split a 32 MB block size would give.
+    // ~8 MB single file on local[4]: Spark's packing policy
+    // (FilePartition.maxSplitBytes: total/parallelism clamped to >= 4 MB,
+    // the open cost) splits it at 4 MB — 3 splits, the last a short tail —
+    // not into the 1 split a 32 MB block size would give.
     val dir = Files.createTempDirectory("graft-split-packing")
     val row = s"""<house id="1"><num>1</num><addr>${"x" * 100}</addr></house>\n"""
     val sb = new StringBuilder(9 << 20)
     sb.append("<houses>\n")
-    while (sb.length < (8 << 20)) sb.append(row)
+    var rows = 0L
+    while (sb.length < (8 << 20)) { sb.append(row); rows += 1 }
     sb.append("</houses>\n")
     val big = dir.resolve("big.xml")
     Files.write(big, sb.toString.getBytes("UTF-8"))
-    // This test intentionally exercises the global-conf precedence contract,
-    // so it must touch the shared key: snapshot + restore (no assume-skip),
-    // and it is the only suite left that mutates it — the sweep tests use
-    // the per-read splitMaxBytes option.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val key = "mapreduce.input.fileinputformat.split.maxsize"
-    val old = conf.get(key)
-    try {
-      conf.unset(key)
-      val df = spark.read.format("graft.xml").option("rowTag", "house")
+    def read(session: org.apache.spark.sql.SparkSession) =
+      session.read.format("graft.xml").option("rowTag", "house")
         .schema("_id LONG, num LONG, addr STRING").load(big.toString)
-      assert(df.rdd.getNumPartitions === 2)
-      // An explicit global Hadoop setting wins over the packing policy.
-      conf.set(key, "1048576")
-      val df2 = spark.read.format("graft.xml").option("rowTag", "house")
-        .schema("_id LONG, num LONG, addr STRING").load(big.toString)
-      assert(df2.rdd.getNumPartitions >= 8)
-      // And the per-read option wins over the global setting.
-      conf.set(key, String.valueOf(32L << 20))
-      val df3 = spark.read.format("graft.xml").option("rowTag", "house")
-        .option("splitMaxBytes", "1048576")
-        .schema("_id LONG, num LONG, addr STRING").load(big.toString)
-      assert(df3.rdd.getNumPartitions >= 8)
-    } finally {
-      if (old == null) conf.unset(key) else conf.set(key, old)
-    }
+    val df = read(spark)
+    assert(df.rdd.getNumPartitions === 3)
+    assert(df.count() === rows)
+    // spark.sql.files.maxPartitionBytes caps the split size.
+    assert(read(SparkTestSession.splitAt(1L << 20)).rdd.getNumPartitions >= 8)
   }
 
   test("split-size sweep x codec matrix returns identical record sets") {
     val dir = Files.createTempDirectory("graft-partitioning")
     val (plain, gz, bz) = write(dir)
-    // Per-read splitMaxBytes option: no shared-SparkContext conf mutation,
-    // so this suite cannot race with concurrently-running suites.
-    for (splitSize <- Seq("1024", "4096", "65536", "1048576")) {
+    // The split size is set in a session of its own: no shared conf
+    // changes, so this suite cannot race with concurrently-running suites.
+    for (splitSize <- Seq(1024L, 4096L, 65536L, 1048576L)) {
       for (path <- Seq(plain, gz, bz)) {
-        val df = spark.read.format("graft.xml").option("rowTag", "house")
-          .option("splitMaxBytes", splitSize)
+        val df = SparkTestSession.splitAt(splitSize).read.format("graft.xml")
+          .option("rowTag", "house")
           .schema("_id LONG, num LONG, addr STRING").load(path)
         val ids = df.select("num").collect().map(_.getLong(0)).sorted
         assert(ids.length === n, s"split=$splitSize path=$path lost/duplicated records")

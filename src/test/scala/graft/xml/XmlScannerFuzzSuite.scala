@@ -53,11 +53,10 @@ class XmlScannerFuzzSuite extends AnyFunSuite {
     sb.toString
   }
 
-  // Per-read splitMaxBytes option: forces the split size for this read only,
-  // no shared-SparkContext conf mutation to race with parallel suites.
+  // The split size is set in a session of its own, so no shared conf
+  // changes under parallel suites.
   private def readIds(path: String, splitSize: String): Seq[Long] =
-    spark.read.format("graft.xml").option("rowTag", "row")
-      .option("splitMaxBytes", splitSize)
+    SparkTestSession.splitAt(splitSize.toLong).read.format("graft.xml").option("rowTag", "row")
       .schema("num LONG").load(path)
       .collect().map(_.getLong(0)).sorted.toSeq
 

@@ -33,16 +33,36 @@ class XmlSqlSuite extends AnyFunSuite {
     val rows = spark.sql("SELECT k, v FROM xml_target2 ORDER BY k").collect()
     assert(rows.toSeq === Seq(Row(1L, "one"), Row(2L, "two")))
 
-    // A bad codec fails the overwrite before the old files are deleted.
-    spark.sql(
-      s"""CREATE OR REPLACE TEMPORARY VIEW xml_target_bad
-         |USING graft.xml
-         |OPTIONS (path "$target", rowTag "r", codec "no.such.Codec")""".stripMargin)
+    // A bad codec fails the overwrite before the old files are deleted:
+    // the view's relation resolves, and its options are checked, when the
+    // view is created, before any INSERT can plan.
     val e = intercept[Exception] {
+      spark.sql(
+        s"""CREATE OR REPLACE TEMPORARY VIEW xml_target_bad
+           |USING graft.xml
+           |OPTIONS (path "$target", rowTag "r", codec "no.such.Codec")""".stripMargin)
       spark.sql("INSERT OVERWRITE TABLE xml_target_bad SELECT * FROM src")
     }
     assert(e.toString.contains("no.such.Codec"), e.toString)
     assert(spark.sql("SELECT k, v FROM xml_target2 ORDER BY k").collect().toSeq === rows.toSeq)
+  }
+
+  test("Append writes and INSERT INTO add part files beside the old ones") {
+    import spark.implicits._
+    val target = Files.createTempDirectory("graft-append").resolve("t").toString
+    Seq((1L, "one")).toDF("k", "v")
+      .write.format("graft.xml").mode("append").option("rowTag", "r").save(target)
+    Seq((2L, "two")).toDF("k", "v")
+      .write.format("xmlng").mode("append").option("rowTag", "r").save(target)
+    spark.sql(
+      s"""CREATE OR REPLACE TEMPORARY VIEW xml_append
+         |(k BIGINT, v STRING)
+         |USING xmlng2
+         |OPTIONS (path "$target", rowTag "r")""".stripMargin)
+    spark.sql("INSERT INTO xml_append VALUES (3, 'three')")
+    val back = spark.read.format("graft.xml").option("rowTag", "r").schema("k BIGINT, v STRING")
+      .load(target).orderBy("k").collect().toSeq
+    assert(back === Seq(Row(1L, "one"), Row(2L, "two"), Row(3L, "three")))
   }
 
   test("SaveMode.ErrorIfExists and Ignore") {

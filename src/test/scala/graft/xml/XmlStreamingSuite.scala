@@ -303,11 +303,21 @@ class XmlStreamingSuite extends AnyFunSuite {
     val back = XmlPartitioned.read(spark, out.toString, Map("rowTag" -> "r"))
     assert(back.where(col("p") === "a").select("k").collect().map(_.getLong(0)).sorted
       .toSeq === Seq(1L, 3L))
-    // The flat batch source would drop `p`: it refuses the layout instead.
-    val ex = intercept[IllegalArgumentException] {
-      spark.read.format("graft.xml").option("rowTag", "r").load(out.toString)
-    }
-    assert(ex.getMessage.contains(classOf[XmlFileFormat].getName), ex.getMessage)
+    // A batch read through a source name reads the sink's log: `p` comes
+    // back from the directory names, and a part file the log never
+    // committed is not read.
+    def partFiles() = Files.walk(out).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq.sorted
+    val committed = partFiles()
+    val dirA = out.resolve("p=a")
+    Files.copy(Files.list(dirA).filter(_.getFileName.toString.startsWith("part-")).findFirst().get,
+      dirA.resolve("part-99999-planted.c000.xml"))
+    val flat = spark.read.format("graft.xml").option("rowTag", "r").load(out.toString)
+    assert(flat.select("k", "p").orderBy("k").collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq === Seq((1L, "a"), (2L, "b"), (3L, "a")))
+    assert(flat.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).sorted.toSeq ===
+      committed)
+    assert(partFiles().contains("part-99999-planted.c000.xml"))
   }
 
   test("xmlng stream sink rejects non-append output modes") {

@@ -19,6 +19,14 @@ object SparkTestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
+
+  /** A session of [[spark]] whose file scans split at `bytes`
+   *  (`spark.sql.files.maxPartitionBytes`), leaving the shared one as it is. */
+  def splitAt(bytes: Long): SparkSession = {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", bytes)
+    session
+  }
 }
 
 class XmlSuite extends AnyFunSuite with BeforeAndAfterAll {
@@ -216,10 +224,9 @@ class XmlSuite extends AnyFunSuite with BeforeAndAfterAll {
     }
     big ++= "</ROWS>\n"
     val path = writeFixture("big.xml", big.result())
-    // Force many partitions via the per-read split-size option.
-    val df = spark.read.format("graft.xml").option("rowTag", "ROW")
+    // Force many partitions with a 2 KB split size.
+    val df = SparkTestSession.splitAt(2048).read.format("graft.xml").option("rowTag", "ROW")
       .option("mode", "FAILFAST")
-      .option("splitMaxBytes", "2048")
       .load(path)
     val cnt = df.count()
     assert(cnt === n)
@@ -269,8 +276,7 @@ class XmlSuite extends AnyFunSuite with BeforeAndAfterAll {
     val os = codec.createOutputStream(Files.newOutputStream(f))
     os.write(sb.toString.getBytes("UTF-8")); os.close()
 
-    val df = spark.read.format("graft.xml").option("rowTag", "row")
-      .option("splitMaxBytes", "65536")
+    val df = SparkTestSession.splitAt(65536).read.format("graft.xml").option("rowTag", "row")
       .schema("id LONG, v STRING").load(f.toString)
     val perPart = df.select("id").rdd
       .mapPartitionsWithIndex((i, it) => Iterator((i, it.size))).collect()
@@ -348,7 +354,12 @@ class XmlSuite extends AnyFunSuite with BeforeAndAfterAll {
         spark.read.format("graft.xml").schema(StructType(schema.dropRight(1)))
           .option("rowTag", "ROW").option("mode", "FAILFAST").load(one).collect()
       }
-      assert(e.getMessage.contains("Malformed record"), e.getMessage)
+      // The scan names the file it failed on; the parser's reason is in the
+      // cause chain.
+      assert(e.getMessage.contains(s"far_future_$i.xml"), e.getMessage)
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("Malformed record")),
+        causes.map(_.toString).mkString("\n"))
     }
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{RowDataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions.{col, sum}
@@ -13,10 +13,11 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The three names of the XML source — `graft.xml`, `xmlng` and `xmlng2` —
- *  plan the same DSv1 [[XmlRelation]] scan: identical rows and schemas,
- *  pruning and pushdown into that scan, and a reported input size that lets
- *  a small XML table auto-broadcast. The `v2` in the spec names is the
- *  `xmlng2` name, which once selected a separate DataSource V2 source. */
+ *  plan the same `FileSourceScanExec` over [[XmlFileFormat]]: identical rows
+ *  and schemas, pruning and pushdown into that scan, and a reported input
+ *  size that lets a small XML table auto-broadcast. The `v2` in the spec
+ *  names is the `xmlng2` name, which once selected a separate DataSource V2
+ *  source. */
 class XmlV2Suite extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -51,13 +52,15 @@ class XmlV2Suite extends AnyFunSuite {
   private def sorted(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).sortBy(_.toString).toSeq
 
-  /** The plan's XML scan: always the DSv1 row scan over [[XmlRelation]]. */
-  private def xmlScan(plan: SparkPlan): RowDataSourceScanExec = {
+  /** The plan's XML scan: always one file scan over [[XmlFileFormat]]. */
+  private def xmlScan(plan: SparkPlan): FileSourceScanExec = {
     assert(plan.collectFirst { case b: BatchScanExec => b }.isEmpty,
       s"XML read planned a BatchScanExec:\n$plan")
-    plan.collectFirst {
-      case s: RowDataSourceScanExec if s.relation.isInstanceOf[XmlRelation] => s
-    }.getOrElse(fail(s"no XmlRelation scan in:\n$plan"))
+    val scans = plan.collect {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[XmlFileFormat] => s
+    }
+    assert(scans.size === 1, s"expected one XmlFileFormat scan in:\n$plan")
+    scans.head
   }
 
   test("v2 rows are identical to v1") {
@@ -89,8 +92,8 @@ class XmlV2Suite extends AnyFunSuite {
     formats.foreach { f =>
       val q = read(f).filter(col("name") === "alice").select("n")
       val scan = xmlScan(q.queryExecution.executedPlan)
-      assert(scan.filters.contains(EqualTo("name", "alice")),
-        s"$f: expected pushed filter in ${scan.filters}")
+      val pushed = scan.metadata("PushedFilters")
+      assert(pushed.contains(EqualTo("name", "alice").toString), s"$f: pushed $pushed")
       assert(q.collect().map(_.getLong(0)).sorted.toSeq ===
         (0 until 1000 by 100).map(_.toLong), f)
       // Escapable value: not compiled into the pre-test, still exact.
@@ -109,7 +112,7 @@ class XmlV2Suite extends AnyFunSuite {
       val bhj = plan.collectFirst { case j: BroadcastHashJoinExec => j }
         .getOrElse(fail(s"$f: expected a broadcast hash join:\n$plan"))
       val build = if (bhj.buildSide == BuildRight) bhj.right else bhj.left
-      assert(build.exists(_.isInstanceOf[RowDataSourceScanExec]),
+      assert(build.exists(_.isInstanceOf[FileSourceScanExec]),
         s"$f: XML side is not the broadcast side:\n$plan")
       assert(joined.count() === 10000, f)
     }
@@ -137,12 +140,43 @@ class XmlV2Suite extends AnyFunSuite {
 
   test("multi-split v2 read returns every record exactly once") {
     formats.foreach { f =>
-      val q = spark.read.format(f)
-        .option("rowTag", "r").option("splitMaxBytes", "2048")
+      val q = SparkTestSession.splitAt(2048).read.format(f)
+        .option("rowTag", "r")
         .schema(schema).load(dataDir)
       assert(q.rdd.getNumPartitions > 4, s"$f: expected many splits, got ${q.rdd.getNumPartitions}")
       val ids = q.select("_id").collect().map(_.getLong(0)).sorted
       assert(ids.toSeq === (0L until 1000L), f)
+    }
+  }
+
+  test("comma lists and brace globs read the files they name under every name") {
+    val dir = Files.createTempDirectory("graft_v2_paths")
+    Seq("a" -> 1, "b" -> 2, "c" -> 3).foreach { case (file, id) =>
+      Files.writeString(dir.resolve(s"$file.xml"),
+        s"""<rows><r id="$id"><name>$file</name><n>$id</n><note>-</note></r></rows>""")
+    }
+    for (f <- formats; path <- Seq(s"$dir/a.xml,$dir/b.xml", s"$dir/{a,b}.xml")) {
+      val names = spark.read.format(f).option("rowTag", "r").schema(schema).load(path)
+        .select("name").collect().map(_.getString(0)).sorted.toSeq
+      assert(names === Seq("a", "b"), s"$f: $path")
+    }
+  }
+
+  test("the scan's file and row metrics are exact on a fixed corpus") {
+    val dir = Files.createTempDirectory("graft_v2_metrics")
+    val sizes = Seq(3, 5).zipWithIndex.map { case (rows, i) =>
+      val xml = (0 until rows).map(k => s"<r id=\"$k\"><name>n$k</name><n>$k</n></r>")
+        .mkString("<rows>\n", "\n", "\n</rows>\n")
+      Files.writeString(dir.resolve(s"part$i.xml"), xml)
+      xml.length.toLong
+    }
+    formats.foreach { f =>
+      val df = spark.read.format(f).option("rowTag", "r").schema(schema).load(dir.toString)
+      assert(df.collect().length === 8, f)
+      val metrics = xmlScan(df.queryExecution.executedPlan).metrics
+      assert(metrics("numFiles").value === 2, f)
+      assert(metrics("filesSize").value === sizes.sum, f)
+      assert(metrics("numOutputRows").value === 8, f)
     }
   }
 
@@ -191,8 +225,9 @@ class XmlV2Suite extends AnyFunSuite {
       write(f, v1.repartition(64), out)
       val parts = partFiles(out)
       assert(parts.length === 64, s"$f: ${parts.length} parts")
-      // names carry the zero-padded partition id: stable, collision-free
-      assert(parts.head === "part-00000" && parts.last === "part-00063", s"$f: $parts")
+      // names carry the zero-padded partition id, then the write's id
+      assert(parts.head.startsWith("part-00000-") && parts.last.startsWith("part-00063-") &&
+        parts.forall(_.endsWith(".xml")), s"$f: $parts")
       val ids = readBack(out).select("_id").collect().map(_.getLong(0)).sorted
       assert(ids.toSeq === (0L until 1000L), f)
     }
