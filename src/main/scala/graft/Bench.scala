@@ -5,6 +5,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
+import graft.catalog.Catalog
+
 object Bench {
 
   /** Opt-in per-stage profile (SPARK_GRAFT_STAGE_LOG=1): prints one stderr
@@ -51,19 +53,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Optional comma-separated query-name filter (exact keys) and timed-pass
-    // count — for isolated A/B timing of one or two queries without the
-    // full 60-query sweep. Defaults preserve the driver's contract.
-    val onlyQueries = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // Optional query-name filter (Catalog.select) and timed-pass count —
+    // for isolated A/B timing of one or two queries without the full
+    // sweep. Defaults preserve the driver's contract.
+    val onlyQueries = sys.env.get(Catalog.QueriesEnv)
+    val benched: Seq[(String, (SparkSession, String) => DataFrame)] =
+      Catalog.select(SparkEntry.queries, onlyQueries).toSeq
     val timedPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
     require(timedPasses >= 1, // fail fast, BEFORE the minutes-long warmup sweep
       s"SPARK_GRAFT_PASSES must be >= 1, got $timedPasses")
-    val benched: Seq[(String, (SparkSession, String) => DataFrame)] =
-      onlyQueries match {
-        case Some(sel) => SparkEntry.queries.filter { case (n, _) => sel(n) }.toSeq
-        case None => SparkEntry.queries.toSeq
-      }
     val spark = LocalSession(cpus.toInt)
     if (sys.env.get("SPARK_GRAFT_STAGE_LOG").exists(_ == "1")) {
       spark.sparkContext.addSparkListener(new StageLogListener)

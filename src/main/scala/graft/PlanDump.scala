@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
+import graft.catalog.Catalog
+
 /** Dumps `explain("formatted")` for selected SparkEntry queries to
   * `<outDir>/<query>_<tag>.txt` — the plan evidence the optimization rounds
   * commit under plans/rNN/. Never executes the query (streaming queries,
@@ -17,11 +19,10 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, tag) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val sel = sys.env("SPARK_GRAFT_QUERIES")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val selected = Catalog.select(SparkEntry.queries, Some(sys.env(Catalog.QueriesEnv)))
     val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.filter { case (n, _) => sel(n) }.foreach {
+    selected.foreach {
       case (name, fn) =>
         val text = try {
           val df = fn(spark, sfDir)

@@ -1,22 +1,21 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
+
+import graft.catalog.Catalog
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional query-name filter (Catalog.select, as in Bench) — re-dump
+    // one or two queries without the full sweep. The driver passes
+    // nothing, so its contract is unchanged.
+    val only = sys.env.get(Catalog.QueriesEnv)
+    val selected = Catalog.select(SparkEntry.queries, only)
     val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated query-name filter (same convention as Bench's
-    // SPARK_GRAFT_QUERIES) — re-dump one or two queries without the full
-    // sweep. The driver passes nothing, so its contract is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(sel) => SparkEntry.queries.filter { case (n, _) => sel(n) }
-      case None => SparkEntry.queries
-    }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -39,10 +38,7 @@ object Verify {
     // Under a filter, restrict oracle_sql.json to the selected queries —
     // otherwise a DuckDB compare over an outDir holding an earlier full
     // dump would silently mix stale parquet with fresh oracle SQL.
-    val oracles = only match {
-      case Some(sel) => SparkEntry.oracleSql.filter { case (n, _) => sel(n) }
-      case None => SparkEntry.oracleSql
-    }
+    val oracles = Catalog.select(SparkEntry.oracleSql, only)
     val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
